@@ -1,5 +1,6 @@
 package graft.wri
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,10 +60,7 @@ object Cog {
           if (!WriFs.exists(src, conf))
             CogStatus(cogName, "missing_input", None, None, None, None)
           else {
-            val (h, px) = TiffIO.readPixels(src, conf)
-            TiffWriter.writeCog(dst, h.width, h.height, px,
-              TiffIO.GeoInfo(h.epsg.getOrElse(0), h.resX, h.resY,
-                h.xmin, h.ymax), opts, conf)
+            val px = encode(src, dst, opts, conf)
             var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
             var i = 0
             while (i < px.length) {
@@ -82,6 +80,15 @@ object Cog {
       }
     }
     done.union(skipped).toDF()
+  }
+
+  /** One source re-encoded as a COG at its own georeferencing; returns
+    * the decoded source pixels. */
+  private def encode(src: String, dst: String, opts: TiffWriter.CogOptions,
+      conf: Configuration): Array[Float] = {
+    val (h, px) = TiffIO.readPixels(src, conf)
+    TiffWriter.writeCog(dst, h.width, h.height, px, h.geo, opts, conf)
+    px
   }
 
   /** Status summary (reference's written/skipped/missing/failed tallies,
@@ -125,12 +132,8 @@ object Cog {
           val out = s"$outDir/cog_${comp}_${pred}_${block}_${bigtiff}_$resamp.tif"
           val t0 = System.nanoTime()
           val status = try {
-            val (h, px) = TiffIO.readPixels(srcPath, conf)
-            TiffWriter.writeCog(out, h.width, h.height, px,
-              TiffIO.GeoInfo(h.epsg.getOrElse(0), h.resX, h.resY, h.xmin,
-                h.ymax),
-              TiffWriter.CogOptions(block, c, pred, r,
-                bigTiff = bigtiff == "YES"), conf)
+            encode(srcPath, out, TiffWriter.CogOptions(block, c, pred, r,
+              bigTiff = bigtiff == "YES"), conf)
             "ok"
           } catch { case e: Exception => s"failed: ${e.getMessage}" }
           val secs = (System.nanoTime() - t0) / 1e9

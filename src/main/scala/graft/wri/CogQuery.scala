@@ -1,5 +1,6 @@
 package graft.wri
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Windowed raster stats over written COGs, answered through the
@@ -51,7 +52,7 @@ object CogQuery {
     * aggregate scaled-integer stats. `prefixLen` counts toward
     * bytes_read (the one header range request already paid). */
   private def statsOverWindow(name: String, raf: RangeReader,
-      fileLen: Long, prefixLen: Int, layouts: Seq[TiffIO.LevelLayout],
+      prefixLen: Int, layouts: Seq[TiffIO.LevelLayout],
       level: Int, x0: Int, y0: Int, xEnd: Int, yEnd: Int,
       scale: Long): CogWindowStat = {
     require(level < layouts.length,
@@ -112,7 +113,7 @@ object CogQuery {
       }
     }
     CogWindowStat(name, tilesAcross.toLong * tilesDown, tilesRead,
-      bytesRead, fileLen, nValid, nNan, vsSum,
+      bytesRead, raf.length, nValid, nNan, vsSum,
       if (nValid == 0) None else Some(vsMin),
       if (nValid == 0) None else Some(vsMax))
   }
@@ -168,7 +169,7 @@ object CogQuery {
     // the window cap above
     val winBc = spark.sparkContext.broadcast(windows)
     withReaderAt(spark, layers.map(n => (n, s"$cogDir/$n")), prefixBytes) {
-      (name, raf, _, prefix) =>
+      (name, raf, prefix) =>
         zonalOverWindows(name, raf, prefix, winBc.value, scale, level)
     }.flatMap(identity).toDF()
   }
@@ -178,13 +179,13 @@ object CogQuery {
     * size scaled to `level`'s grid (exact powers of two for the
     * writer's own pyramids). ONE implementation for every geographic
     * verb — the mapping rule is oracle-load-bearing. */
-  private def geoGrid(name: String, prefix: Array[Byte], level: Int)
-      : (Seq[TiffIO.LevelLayout], TiffIO.LevelLayout,
+  private def geoGrid(name: String, prefix: TiffIO.HeaderPrefix,
+      level: Int): (Seq[TiffIO.LevelLayout], TiffIO.LevelLayout,
         Double, Double, Double, Double) = {
-    val layouts = TiffIO.levelLayoutsFromPrefix(prefix)
+    val layouts = prefix.layouts
     require(level < layouts.length,
       s"$name has ${layouts.length} levels, requested $level")
-    val (resX0, resY0, gx, gy) = TiffIO.geoTransformFromPrefix(prefix)
+    val (resX0, resY0, gx, gy) = prefix.geoTransform
     val l0 = layouts.head
     val lv = layouts(level)
     (layouts, lv, resX0 * l0.width.toDouble / lv.width,
@@ -203,7 +204,7 @@ object CogQuery {
       math.ceil((gy - miny) / resY).toInt)
 
   private def zonalOverWindows(name: String, raf: RangeReader,
-      prefix: Array[Byte],
+      prefix: TiffIO.HeaderPrefix,
       windows: Seq[(Long, Double, Double, Double, Double)],
       scale: Long, level: Int): Seq[CogZonalStat] = {
     val (_, full, resX, resY, gx, gy) = geoGrid(name, prefix, level)
@@ -331,7 +332,7 @@ object CogQuery {
     // carries ITS OWN path, so duplicate layer labels (two targets with
     // one name) stay correct-by-construction — no name->path lookup.
     val perChunk = withReaderAt(spark, targets, prefixBytes) {
-      (name, _, _, prefix) =>
+      (name, _, prefix) =>
         val (_, full, resX, resY, gx, gy) = geoGrid(name, prefix, level)
         val tw = full.tileWidth; val th = full.tileHeight
         require(tw > 0 && th > 0, s"$name is not tiled — not a COG")
@@ -361,21 +362,14 @@ object CogQuery {
     // job 2 (one task per chunk): ONE reader open + ONE prefix read
     // amortize over the chunk's tiles; decode one tile at a time and
     // emit its in-window pixels
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.SerializableWritable(
-        new org.apache.hadoop.conf.Configuration(
-          spark.sparkContext.hadoopConfiguration)))
+    val confBc = WriFs.confBroadcast(spark)
     spark.createDataset(chunkPlans)
       .repartition(math.min(chunkPlans.size,
         spark.sparkContext.defaultParallelism))
       .mapPartitions { it =>
         it.flatMap { case (name, path, xLo, xHi, yLo, yHi, ts) =>
-          val raf = RangeReader.open(path, confBc.value.value)
-          try {
-            val pl = math.min(raf.length, prefixBytes.toLong).toInt
-            val prefix = new Array[Byte](pl)
-            raf.readFully(0L, prefix)
-            val full = TiffIO.levelLayoutsFromPrefix(prefix)(level)
+          withPrefix(path, confBc.value.value, prefixBytes) { (raf, prefix) =>
+            val full = prefix.layouts(level)
             val tw = full.tileWidth; val th = full.tileHeight
             val tilesAcross = (full.width + tw - 1) / tw
             ts.flatMap { t =>
@@ -395,7 +389,7 @@ object CogQuery {
                   else Some(Math.round(v.toDouble * scale)))
               }
             }
-          } finally raf.close()
+          }
         }
       }.toDF("layer", "x", "y", "vs")
   }
@@ -460,12 +454,8 @@ object CogQuery {
     val wmean = combine == "wmean"
     // job 1: grid signatures, one small task per input
     val grids = withReaderAt(spark,
-      inputs.map(t => (t._1, t._2)), prefixBytes) { (name, _, _, prefix) =>
-      val full = TiffIO.levelLayoutsFromPrefix(prefix).head
-      val (resX, resY, gx, gy) = TiffIO.geoTransformFromPrefix(prefix)
-      (name, full.width, full.height, full.tileWidth, full.tileHeight,
-        resX, resY, gx, gy, TiffIO.epsgFromPrefix(prefix))
-    }.collect().toSeq
+      inputs.map(t => (t._1, t._2)), prefixBytes)(gridSignature)
+      .collect().toSeq
     val ref = grids.head
     grids.foreach { g =>
       require((g._2, g._3, g._4, g._5, g._6, g._7, g._8, g._9) ==
@@ -513,10 +503,7 @@ object CogQuery {
       .grouped(ReadChunkTiles).map(_.toList).toList
     val paths = inputs.map(_._2)
     val wts = inputs.map(_._3).toArray
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.SerializableWritable(
-        new org.apache.hadoop.conf.Configuration(
-          spark.sparkContext.hadoopConfiguration)))
+    val confBc = WriFs.confBroadcast(spark)
     // job 2: one task per tile chunk — k range reads per tile, combine
     val combined = spark.createDataset(chunks)
       .repartition(math.min(chunks.size,
@@ -526,12 +513,7 @@ object CogQuery {
         it.flatMap { ts =>
           val readers = paths.map(p => RangeReader.open(p, conf))
           try {
-            val layouts = readers.map { r =>
-              val pl = math.min(r.length, prefixBytes.toLong).toInt
-              val prefix = new Array[Byte](pl)
-              r.readFully(0L, prefix)
-              TiffIO.levelLayoutsFromPrefix(prefix).head
-            }
+            val layouts = readers.map(readPrefix(_, prefixBytes).layouts.head)
             ts.map { t =>
               val pxs = readers.lazyZip(layouts).map { (r, full) =>
                 val buf = new Array[Byte](full.tileByteCounts(t).toInt)
@@ -677,13 +659,8 @@ object CogQuery {
         "(categorical/masked data) or 'bilinear' (continuous fields)")
     // job 1: grid signatures — source and reference, one task each
     val sigs = withReaderAt(spark,
-      Seq(("src", srcPath), ("ref", refPath)), prefixBytes) {
-      (name, _, _, prefix) =>
-        val full = TiffIO.levelLayoutsFromPrefix(prefix).head
-        val (resX, resY, gx, gy) = TiffIO.geoTransformFromPrefix(prefix)
-        (name, full.width, full.height, full.tileWidth, full.tileHeight,
-          resX, resY, gx, gy, TiffIO.epsgFromPrefix(prefix))
-    }.collect()
+      Seq(("src", srcPath), ("ref", refPath)), prefixBytes)(gridSignature)
+      .collect()
     val src = sigs.find(_._1 == "src").get
     val ref = sigs.find(_._1 == "ref").get
     require(src._10 == ref._10,
@@ -722,10 +699,7 @@ object CogQuery {
     // which the Dataset encoder rejects
     val chunks = (0 until tilesAcross * tilesDown)
       .grouped(ReadChunkTiles).map(_.toList).toList
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.SerializableWritable(
-        new org.apache.hadoop.conf.Configuration(
-          spark.sparkContext.hadoopConfiguration)))
+    val confBc = WriFs.confBroadcast(spark)
     val sp = srcPath
     val pfx = prefixBytes
     val bilinear = method == "bilinear"
@@ -737,12 +711,8 @@ object CogQuery {
       .mapPartitions { it =>
         val conf = confBc.value.value
         it.flatMap { ts =>
-          val reader = RangeReader.open(sp, conf)
-          try {
-            val pl = math.min(reader.length, pfx.toLong).toInt
-            val prefix = new Array[Byte](pl)
-            reader.readFully(0L, prefix)
-            val sl = TiffIO.levelLayoutsFromPrefix(prefix).head
+          withPrefix(sp, conf, pfx) { (reader, prefix) =>
+            val sl = prefix.layouts.head
             val sAcross = (sl.width + sl.tileWidth - 1) / sl.tileWidth
             // LRU decoded-source-tile cache, bounded
             val cache = new java.util.LinkedHashMap[Int, Array[Float]](
@@ -883,7 +853,7 @@ object CogQuery {
               }
               (t, out)
             }
-          } finally reader.close()
+          }
         }
       }
     // job 3: one assembler/writer task
@@ -891,37 +861,49 @@ object CogQuery {
       TiffIO.GeoInfo(outEpsg, resX, resY, gx, gy), opts, confBc)
   }
 
+  /** Range request #1: the bounded header prefix of an open reader,
+    * decoded once. */
+  private[wri] def readPrefix(raf: RangeReader,
+      prefixBytes: Int): TiffIO.HeaderPrefix = {
+    val prefix =
+      new Array[Byte](math.min(raf.length, prefixBytes.toLong).toInt)
+    raf.readFully(0L, prefix)
+    new TiffIO.HeaderPrefix(prefix)
+  }
+
+  /** Opens `path`, reads its header prefix and runs `f` on the open
+    * reader and the decoded prefix; the reader closes when `f` returns. */
+  private[wri] def withPrefix[T](path: String, conf: Configuration,
+      prefixBytes: Int)(f: (RangeReader, TiffIO.HeaderPrefix) => T): T = {
+    val raf = RangeReader.open(path, conf)
+    try f(raf, readPrefix(raf, prefixBytes)) finally raf.close()
+  }
+
   /** One task per (label, path) target; `f` sees the label (reported as
     * the output's `layer`), the open reader, and the header prefix. */
   private def withReaderAt[T](spark: SparkSession,
       targets: Seq[(String, String)], prefixBytes: Int)(
-      f: (String, RangeReader, Long, Array[Byte]) => T)(
+      f: (String, RangeReader, TiffIO.HeaderPrefix) => T)(
       implicit enc: org.apache.spark.sql.Encoder[T]): org.apache.spark.sql.Dataset[T] = {
     import spark.implicits._
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.SerializableWritable(
-        new org.apache.hadoop.conf.Configuration(
-          spark.sparkContext.hadoopConfiguration)))
+    val confBc = WriFs.confBroadcast(spark)
     spark.createDataset(targets).mapPartitions { it =>
       it.map { case (name, path) =>
-        val raf = RangeReader.open(path, confBc.value.value)
-        try {
-          val fileLen = raf.length
-          // range request #1: the bounded header prefix
-          val pl = math.min(fileLen, prefixBytes.toLong).toInt
-          val prefix = new Array[Byte](pl)
-          raf.readFully(0L, prefix)
-          f(name, raf, fileLen, prefix)
-        } finally raf.close()
+        withPrefix(path, confBc.value.value, prefixBytes)(f(name, _, _))
       }
     }
   }
 
-  private def withLayerReader[T](spark: SparkSession, cogDir: String,
-      layers: Seq[String], prefixBytes: Int)(
-      f: (String, RangeReader, Long, Array[Byte]) => T)(
-      implicit enc: org.apache.spark.sql.Encoder[T]): org.apache.spark.sql.Dataset[T] =
-    withReaderAt(spark, layers.map(n => (n, s"$cogDir/$n")), prefixBytes)(f)
+  /** (label, width, height, tileWidth, tileHeight, resX, resY, originX,
+    * originY, EPSG) of a raster's full-resolution grid — the signature
+    * [[mapAlgebra]] and [[resampleToGrid]] compare before combining. */
+  private def gridSignature(name: String, raf: RangeReader,
+      prefix: TiffIO.HeaderPrefix) = {
+    val full = prefix.layouts.head
+    val (resX, resY, gx, gy) = prefix.geoTransform
+    (name, full.width, full.height, full.tileWidth, full.tileHeight,
+      resX, resY, gx, gy, prefix.epsg)
+  }
 
   /** Stats of the pixel window [x0, x0+winW) x [y0, y0+winH) for each
     * named COG under `cogDir`, values scaled by `scale` before integer
@@ -951,10 +933,9 @@ object CogQuery {
     require(scale >= 1, s"scale must be >= 1: $scale")
     require(level >= 0, s"level must be >= 0: $level")
     require(layers.nonEmpty, "no layers to query")
-    withLayerReader(spark, cogDir, layers, prefixBytes) {
-      (name, raf, fileLen, prefix) =>
-        statsOverWindow(name, raf, fileLen, prefix.length,
-          TiffIO.levelLayoutsFromPrefix(prefix), level,
+    withReaderAt(spark, layers.map(n => (n, s"$cogDir/$n")), prefixBytes) {
+      (name, raf, prefix) =>
+        statsOverWindow(name, raf, prefix.length, prefix.layouts, level,
           x0, y0, x0 + winW, y0 + winH, scale)
     }.toDF()
   }
@@ -1003,11 +984,11 @@ object CogQuery {
     require(level >= 0, s"level must be >= 0: $level")
     require(targets.nonEmpty, "no layers to query")
     withReaderAt(spark, targets, prefixBytes) {
-      (name, raf, fileLen, prefix) =>
+      (name, raf, prefix) =>
         val (layouts, _, resX, resY, gx, gy) = geoGrid(name, prefix, level)
         val (x0, xEnd, y0, yEnd) =
           boxToPixels(resX, resY, gx, gy, minx, miny, maxx, maxy)
-        statsOverWindow(name, raf, fileLen, prefix.length, layouts, level,
+        statsOverWindow(name, raf, prefix.length, layouts, level,
           x0, y0, xEnd, yEnd, scale)
     }.toDF()
   }

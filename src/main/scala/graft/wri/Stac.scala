@@ -665,22 +665,18 @@ object Stac {
         it.map { case (id, href) =>
           val resolved = resolveHref(href, base)
           try {
-            val r = RangeReader.open(resolved, conf)
-            try {
-              val len = r.length
-              val pl = math.min(len, prefixBytes.toLong).toInt
-              val prefix = new Array[Byte](pl)
-              r.readFully(0L, prefix)
-              val layouts = TiffIO.levelLayoutsFromPrefix(prefix)
+            CogQuery.withPrefix(resolved, conf, prefixBytes) { (r, prefix) =>
+              val layouts = prefix.layouts
               val l0 = layouts.head
               val err =
                 if (l0.tileWidth <= 0) Some("not tiled — not a COG")
                 else if (layouts.length < 2) Some("no overview pyramid")
-                else scala.util.Try(TiffIO.geoTransformFromPrefix(prefix))
+                else scala.util.Try(prefix.geoTransform)
                   .failed.toOption.map(e => s"geotransform: ${e.getMessage}")
               AssetStatus(id, href, err.isEmpty, layouts.length,
-                l0.tileWidth, l0.tileHeight, l0.width, l0.height, len, err)
-            } finally r.close()
+                l0.tileWidth, l0.tileHeight, l0.width, l0.height, r.length,
+                err)
+            }
           } catch {
             case e: Exception =>
               AssetStatus(id, href, ok = false, 0, 0, 0, 0, 0, 0L,
@@ -1128,7 +1124,6 @@ object Stac {
     try {
     val itemsDir = s"$stacRoot/collections/$collectionId/items"
     val conf = spark.sparkContext.hadoopConfiguration
-    WriFs.mkdirs(itemsDir, conf)
     val confBc = WriFs.confBroadcast(spark)
     val dir = itemsDir
     // the pre-refresh directory stats: the incremental sidecar rebuild
@@ -1201,6 +1196,8 @@ object Stac {
         "upstream outage reads as zero layers, and refreshing a " +
         "published catalog to zero items (pruning everything) is never " +
         "a delta; fix the upstream read first")
+    // created only past the gate: a refused refresh leaves no new path
+    WriFs.mkdirs(itemsDir, conf)
     // phase 2: apply the delta, atomic replace per document (idempotent
     // and torn-read-free under retries/speculation)
     plan.filter(col("action") =!= "unchanged")

@@ -2,6 +2,7 @@ package graft.wri
 
 import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
+import scala.collection.immutable.ArraySeq
 import java.util.zip.{Deflater, Inflater}
 
 /** Pure-JVM GeoTIFF I/O (SURVEY §2.1 S2/S7, §2.7 F11).
@@ -70,14 +71,30 @@ object TiffIO {
       if (bitsPerSample == 32 && sampleFormat == 3) "FLT4S"
       else s"B${bitsPerSample}F$sampleFormat"
     def isCogLayout: Boolean = ifdChainEnd <= firstDataOffset
+    def geo: GeoInfo = GeoInfo(epsg.getOrElse(0), resX, resY, xmin, ymax)
   }
 
   // ---------------------------------------------------------------------
-  // Reader
+  // Directory decoder
   // ---------------------------------------------------------------------
 
-  private case class Entry(tag: Int, typ: Int, count: Long, valueOffset: Long,
-      raw: Array[Byte])
+  /** Where directory bytes come from: `(offset, length) => bytes`. A
+    * [[RangeReader]] backs [[readHeader]], the whole in-memory object
+    * backs [[readPixels]], and a bounded header prefix backs the
+    * range-read API ([[HeaderPrefix]]). */
+  private type ByteSource = (Long, Int) => Array[Byte]
+
+  private def arraySource(bytes: Array[Byte], pastEnd: => String): ByteSource =
+    (off, len) => {
+      if (off < 0 || len < 0 || off + len > bytes.length)
+        throw new IllegalArgumentException(pastEnd)
+      java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + len)
+    }
+
+  /** One IFD entry: type, count, the raw value field (inline values) and
+    * that field read as a pointer (the offset of an external array). */
+  private case class Entry(typ: Int, count: Long, field: Array[Byte],
+      valueOffset: Long)
 
   private def typeSize(t: Int): Int = t match {
     case 1 | 2 | 6 | 7 => 1
@@ -86,6 +103,184 @@ object TiffIO {
     case 5 | 10 | 12 | 16 | 17 => 8 // incl. BigTIFF LONG8/SLONG8
     case _ => 1
   }
+
+  /** One IFD with typed tag access. Values resolve on demand through the
+    * byte source, so a header read fetches only the arrays it asks for. */
+  private final class Ifd(src: ByteSource, order: ByteOrder,
+      entries: Map[Int, Entry], val next: Long, val end: Long) {
+    def has(tag: Int): Boolean = entries.contains(tag)
+
+    private def values(e: Entry): ByteBuffer = {
+      val size = typeSize(e.typ) * e.count
+      ByteBuffer.wrap(
+        if (size <= e.field.length) e.field
+        else src(e.valueOffset, size.toInt)).order(order)
+    }
+
+    /** Integer values of `tag`; empty when the tag is absent. */
+    def longs(tag: Int): IndexedSeq[Long] =
+      entries.get(tag).fold(IndexedSeq.empty[Long]) { e =>
+        val b = values(e)
+        val n = e.count.toInt
+        ArraySeq.unsafeWrapArray(e.typ match {
+          case 1 | 2 | 6 | 7 => Array.tabulate(n)(i => b.get(i) & 0xffL)
+          case 3 | 8 => Array.tabulate(n)(i => b.getShort(i * 2) & 0xffffL)
+          case 4 | 9 => Array.tabulate(n)(i => b.getInt(i * 4) & 0xffffffffL)
+          case 16 | 17 => Array.tabulate(n)(i => b.getLong(i * 8))
+          case t => throw new IllegalArgumentException(
+            s"tag $tag: type $t is not an integer type")
+        })
+      }
+
+    def int(tag: Int, default: Int): Int =
+      longs(tag).headOption.fold(default)(_.toInt)
+
+    /** DOUBLE values of `tag`; None when the tag is absent. */
+    def doubles(tag: Int): Option[IndexedSeq[Double]] =
+      entries.get(tag).map { e =>
+        require(e.typ == 12, s"tag $tag: expected DOUBLE, got type ${e.typ}")
+        val b = values(e)
+        ArraySeq.unsafeWrapArray(
+          Array.tabulate(e.count.toInt)(i => b.getDouble(i * 8)))
+      }
+
+    def tiled: Boolean = has(TTileOffsets)
+    /** Tile offsets and byte counts, or strip ones for a strip image. */
+    def blockOffsets: IndexedSeq[Long] =
+      longs(if (tiled) TTileOffsets else TStripOffsets)
+    def blockByteCounts: IndexedSeq[Long] =
+      longs(if (tiled) TTileByteCounts else TStripByteCounts)
+  }
+
+  /** The header's byte order and the IFD chain (head = full image, then
+    * overviews), read only as far as a caller walks it. */
+  private final class Directory(val order: ByteOrder, val ifds: LazyList[Ifd]) {
+    def ifd0: Ifd = ifds.head
+  }
+
+  /** Longest IFD chain followed (a bound on cyclic next pointers). */
+  private val MaxIfds = 64
+
+  /** The one TIFF/BigTIFF directory parser, in the header's byte order. */
+  private def decodeDirectory(src: ByteSource): Directory = {
+    val head = src(0L, 16)
+    val order = (head(0).toChar, head(1).toChar) match {
+      case ('I', 'I') => ByteOrder.LITTLE_ENDIAN
+      case ('M', 'M') => ByteOrder.BIG_ENDIAN
+      case _ => throw new IllegalArgumentException("not a TIFF (byte order)")
+    }
+    val hb = ByteBuffer.wrap(head).order(order)
+    val magic = hb.getShort(2).toInt
+    if (magic != 42 && magic != 43)
+      throw new IllegalArgumentException(s"not a TIFF (magic $magic)")
+    // BigTIFF (magic 43): 8-byte counts and pointers, 20-byte entries
+    val big = magic == 43
+    val ptr = if (big) 8 else 4
+    val countSize = if (big) 8 else 2
+    val entrySize = if (big) 20 else 12
+    def pointer(b: ByteBuffer, at: Int): Long =
+      if (big) b.getLong(at) else b.getInt(at) & 0xffffffffL
+    def readIfd(off: Long): Ifd = {
+      val cb = ByteBuffer.wrap(src(off, countSize)).order(order)
+      val n = if (big) cb.getLong(0).toInt else cb.getShort(0) & 0xffff
+      val b = ByteBuffer.wrap(src(off + countSize, n * entrySize + ptr))
+        .order(order)
+      val entries = (0 until n).map { i =>
+        val at = i * entrySize
+        val fieldAt = at + entrySize - ptr
+        (b.getShort(at) & 0xffff) -> Entry(b.getShort(at + 2) & 0xffff,
+          if (big) b.getLong(at + 4) else b.getInt(at + 4) & 0xffffffffL,
+          java.util.Arrays.copyOfRange(b.array, fieldAt, fieldAt + ptr),
+          pointer(b, fieldAt))
+      }.toMap
+      new Ifd(src, order, entries, pointer(b, n * entrySize),
+        off + countSize + n * entrySize + ptr)
+    }
+    val first = pointer(hb, if (big) 8 else 4)
+    if (first == 0) throw new IllegalArgumentException("no IFD")
+    new Directory(order, LazyList.unfold(first) { off =>
+      if (off == 0) None
+      else { val ifd = readIfd(off); Some((ifd, ifd.next)) }
+    }.take(MaxIfds))
+  }
+
+  // ---------------------------------------------------------------------
+  // Facts derived from a decoded directory, each in one place
+  // ---------------------------------------------------------------------
+
+  private def header(d: Directory): Header = {
+    val ifd0 = d.ifd0
+    val offsets = ifd0.blockOffsets
+    val (resX, resY, xmin, ymax) =
+      geoTransform(ifd0).getOrElse((0.0, 0.0, 0.0, 0.0))
+    Header(
+      width = ifd0.int(TImageWidth, 0), height = ifd0.int(TImageLength, 0),
+      bands = ifd0.int(TSamplesPerPixel, 1),
+      bitsPerSample = ifd0.int(TBitsPerSample, 1),
+      sampleFormat = ifd0.int(TSampleFormat, 1),
+      compression = ifd0.int(TCompression, 1),
+      tiled = ifd0.tiled,
+      tileWidth = ifd0.int(TTileWidth, 0),
+      tileHeight = ifd0.int(TTileLength, 0),
+      resX = resX, resY = resY, xmin = xmin, ymax = ymax,
+      epsg = epsg(ifd0),
+      overviewCount = d.ifds.length - 1,
+      ifdChainEnd = d.ifds.map(_.end).max,
+      firstDataOffset = if (offsets.isEmpty) Long.MaxValue else offsets.min)
+  }
+
+  private def levelLayout(ifd: Ifd): LevelLayout =
+    LevelLayout(ifd.int(TImageWidth, 0), ifd.int(TImageLength, 0),
+      ifd.int(TTileWidth, 0), ifd.int(TTileLength, 0),
+      ifd.int(TCompression, 1), ifd.int(TPredictor, 1),
+      ifd.blockOffsets, ifd.blockByteCounts)
+
+  /** (resX, resY, xmin, ymax) from ModelPixelScale and ModelTiepoint;
+    * None unless both are present. A ModelTiepoint anchors raster cell
+    * (i, j) at model (x, y), and the anchored pixel is not necessarily
+    * (0, 0): GDAL writes (0, 0), other producers may not. The tiepoint is
+    * backed out to the raster's top-left corner through the pixel scale:
+    * xmin = x - i*resX, ymax = y + j*resY (y grows downward in pixels). */
+  private def geoTransform(
+      ifd0: Ifd): Option[(Double, Double, Double, Double)] =
+    for {
+      scale <- ifd0.doubles(TModelPixelScale)
+      tie <- ifd0.doubles(TModelTiepoint)
+    } yield {
+      require(scale.length >= 2 && tie.length >= 5,
+        s"malformed geo tags: scale=${scale.length}, tiepoint=${tie.length}")
+      val (i, j, x, y) = (tie(0), tie(1), tie(3), tie(4))
+      (scale(0), scale(1), x - i * scale(0), y + j * scale(1))
+    }
+
+  /** The ProjectedCRS EPSG code: GeoKey 3072 of the GeoKeyDirectory
+    * (groups of 4 shorts after a 4-short header). None when the file
+    * carries no directory or no projected-CRS key. */
+  private def epsg(ifd0: Ifd): Option[Int] =
+    ifd0.longs(TGeoKeyDirectory).drop(4).grouped(4).collectFirst {
+      case Seq(3072L, _, _, v) => v.toInt
+    }
+
+  /** Pixel decoding reads little-endian samples only. */
+  private def requireLittleEndian(d: Directory): Unit =
+    require(d.order == ByteOrder.LITTLE_ENDIAN,
+      "big-endian (MM) byte order: pixel decoding reads little-endian " +
+        "(II) TIFFs only")
+
+  /** One strip or tile: decompress, undo the predictor, read w*h floats. */
+  private def decodeBlock(bytes: Array[Byte], compression: Int,
+      predictor: Int, w: Int, h: Int): Array[Float] = {
+    val raw = undoPredictor(decompress(bytes, compression, w * h * 4),
+      predictor, w, h)
+    val out = new Array[Float](w * h)
+    ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN).asFloatBuffer()
+      .get(out)
+    out
+  }
+
+  // ---------------------------------------------------------------------
+  // Reader
+  // ---------------------------------------------------------------------
 
   /** Reads only the header bytes of a GeoTIFF (never pixel payloads),
     * resolving bare/local paths against the default filesystem. */
@@ -100,131 +295,11 @@ object TiffIO {
   def readHeader(path: String,
       conf: org.apache.hadoop.conf.Configuration): Header = {
     val r = RangeReader.open(path, conf)
-    try readHeader(r) finally r.close()
-  }
-
-  private def readHeader(reader: RangeReader): Header = {
-    def readAt(off: Long, len: Int): ByteBuffer = {
+    try header(decodeDirectory { (off, len) =>
       val b = new Array[Byte](len)
-      reader.readFully(off, b)
-      ByteBuffer.wrap(b)
-    }
-    val head = readAt(0, 16)
-    val le = (head.get(0) & 0xff, head.get(1) & 0xff) match {
-      case (0x49, 0x49) => true
-      case (0x4d, 0x4d) => false
-      case _ => throw new IllegalArgumentException("not a TIFF (byte order)")
-    }
-    val order = if (le) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
-    head.order(order)
-    val magic = head.getShort(2).toInt
-    val big = magic == 43 // BigTIFF: 8-byte offsets, 20-byte IFD entries
-    if (magic != 42 && magic != 43)
-      throw new IllegalArgumentException(s"not a TIFF (magic $magic)")
-    val inlineMax = if (big) 8 else 4
-    val ifdOff =
-      if (big) head.getLong(8)
-      else head.getInt(4).toLong & 0xffffffffL
-    if (ifdOff == 0) throw new IllegalArgumentException("no IFD")
-
-    def parseIfd(off: Long): (Map[Int, Entry], Long, Long) = {
-      val (n, entryBase, entrySize) =
-        if (big) {
-          val nb = readAt(off, 8); nb.order(order)
-          (nb.getLong(0).toInt, off + 8, 20)
-        } else {
-          val nb = readAt(off, 2); nb.order(order)
-          (nb.getShort(0).toInt & 0xffff, off + 2, 12)
-        }
-      val nextSize = if (big) 8 else 4
-      val buf = readAt(entryBase, n * entrySize + nextSize); buf.order(order)
-      val entries = (0 until n).map { i =>
-        val base = i * entrySize
-        val tag = buf.getShort(base).toInt & 0xffff
-        val typ = buf.getShort(base + 2).toInt & 0xffff
-        val count =
-          if (big) buf.getLong(base + 4)
-          else buf.getInt(base + 4).toLong & 0xffffffffL
-        val raw = new Array[Byte](inlineMax)
-        buf.position(base + (if (big) 12 else 8)); buf.get(raw); buf.position(0)
-        val vb = ByteBuffer.wrap(raw).order(order)
-        val vo = if (big) vb.getLong(0) else vb.getInt(0).toLong & 0xffffffffL
-        Entry(tag, typ, count, vo, raw)
-      }.map(e => e.tag -> e).toMap
-      val next =
-        if (big) buf.getLong(n * entrySize)
-        else buf.getInt(n * entrySize).toLong & 0xffffffffL
-      (entries, next, entryBase + n * entrySize + nextSize)
-    }
-
-    def values(e: Entry): IndexedSeq[Long] = {
-      val total = typeSize(e.typ) * e.count.toInt
-      val buf =
-        if (total <= inlineMax) ByteBuffer.wrap(e.raw).order(order)
-        else { val b = readAt(e.valueOffset, total); b.order(order); b }
-      (0 until e.count.toInt).map { i =>
-        e.typ match {
-          case 3 | 8 => buf.getShort(i * 2).toLong & 0xffffL
-          case 4 | 9 => buf.getInt(i * 4).toLong & 0xffffffffL
-          case 16 | 17 => buf.getLong(i * 8) // BigTIFF LONG8/SLONG8
-          case 1 | 2 | 6 | 7 => buf.get(i).toLong & 0xffL
-          case _ => throw new IllegalArgumentException(s"type ${e.typ} as long")
-        }
-      }
-    }
-    def doubles(e: Entry): IndexedSeq[Double] = {
-      require(e.typ == 12, "expected DOUBLE tag")
-      val buf =
-        if (8 * e.count.toInt <= inlineMax)
-          ByteBuffer.wrap(e.raw).order(order)
-        else { val b = readAt(e.valueOffset, 8 * e.count.toInt); b.order(order); b }
-      (0 until e.count.toInt).map(i => buf.getDouble(i * 8))
-    }
-
-    val (ifd0, next0, chainEnd0) = parseIfd(ifdOff)
-    // walk the IFD chain (overviews) to count them + find chain end
-    var overviews = 0
-    var next = next0
-    var chainEnd = chainEnd0
-    while (next != 0 && overviews < 32) {
-      val (_, n2, ce) = parseIfd(next)
-      overviews += 1; next = n2; chainEnd = math.max(chainEnd, ce)
-    }
-
-    def lv(tag: Int, default: Long = 0): Long =
-      ifd0.get(tag).map(values(_).head).getOrElse(default)
-
-    val width = lv(TImageWidth).toInt
-    val height = lv(TImageLength).toInt
-    val tiled = ifd0.contains(TTileOffsets)
-    val dataOffsets =
-      ifd0.get(if (tiled) TTileOffsets else TStripOffsets)
-        .map(values).getOrElse(IndexedSeq.empty)
-    val scale = ifd0.get(TModelPixelScale).map(doubles)
-    val tie = ifd0.get(TModelTiepoint).map(doubles)
-    val epsg = ifd0.get(TGeoKeyDirectory).map(values).flatMap { keys =>
-      // GeoKeyDirectory: groups of 4 shorts; key 3072 = ProjectedCRS
-      keys.drop(4).grouped(4).collectFirst {
-        case IndexedSeq(3072L, _, _, v) => v.toInt
-      }
-    }
-    Header(
-      width = width, height = height,
-      bands = lv(TSamplesPerPixel, 1).toInt,
-      bitsPerSample = lv(TBitsPerSample, 1).toInt,
-      sampleFormat = lv(TSampleFormat, 1).toInt,
-      compression = lv(TCompression, 1).toInt,
-      tiled = tiled,
-      tileWidth = lv(TTileWidth).toInt, tileHeight = lv(TTileLength).toInt,
-      resX = scale.map(_(0)).getOrElse(0.0),
-      resY = scale.map(_(1)).getOrElse(0.0),
-      xmin = tie.map(_(3)).getOrElse(0.0),
-      ymax = tie.map(_(4)).getOrElse(0.0),
-      epsg = epsg,
-      overviewCount = overviews,
-      ifdChainEnd = chainEnd,
-      firstDataOffset = if (dataOffsets.isEmpty) Long.MaxValue
-        else dataOffsets.min)
+      r.readFully(off, b)
+      b
+    }) finally r.close()
   }
 
   /** Reads the full single-band Float32 pixel payload (small files /
@@ -238,9 +313,6 @@ object TiffIO {
     * input — windowed production reads go through [[CogQuery]]). */
   def readPixels(path: String,
       conf: org.apache.hadoop.conf.Configuration): (Header, Array[Float]) = {
-    val h = readHeader(path, conf)
-    require(h.bands == 1 && h.bitsPerSample == 32 && h.sampleFormat == 3,
-      s"only single-band Float32 supported, got $h")
     val bytes = {
       val r = RangeReader.open(path, conf)
       try {
@@ -251,92 +323,38 @@ object TiffIO {
         b
       } finally r.close()
     }
-    {
-      val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-      // re-parse offsets/counts from IFD0 via a minimal second pass
-      val (offs, counts, tw, th) = stripOrTileInfo(bb)
-      val out = new Array[Float](h.width * h.height)
-      if (!h.tiled) {
-        // strips: rows concatenated
-        var row = 0
-        val rowsPerStrip = math.max(1, math.ceil(h.height.toDouble / offs.length).toInt)
-        offs.indices.foreach { i =>
-          val comp = bytes.slice(offs(i).toInt, (offs(i) + counts(i)).toInt)
-          val nRows = math.min(rowsPerStrip, h.height - row)
-          val raw = decompress(comp, h.compression, nRows * h.width * 4)
-          val undone = undoPredictor(raw, predictorOf(bb), h.width, nRows)
-          val fb = ByteBuffer.wrap(undone).order(ByteOrder.LITTLE_ENDIAN)
-          (0 until nRows * h.width).foreach { j =>
-            out(row * h.width + j) = fb.getFloat(j * 4)
-          }
-          row += nRows
-        }
-      } else {
-        val tilesAcross = (h.width + tw - 1) / tw
-        offs.indices.foreach { i =>
-          val comp = bytes.slice(offs(i).toInt, (offs(i) + counts(i)).toInt)
-          val raw = decompress(comp, h.compression, tw * th * 4)
-          val undone = undoPredictor(raw, predictorOf(bb), tw, th)
-          val fb = ByteBuffer.wrap(undone).order(ByteOrder.LITTLE_ENDIAN)
-          val tx = (i % tilesAcross) * tw; val ty = (i / tilesAcross) * th
-          var y = 0
-          while (y < th) {
-            var x = 0
-            while (x < tw) {
-              val gx = tx + x; val gy = ty + y
-              if (gx < h.width && gy < h.height)
-                out(gy * h.width + gx) = fb.getFloat((y * tw + x) * 4)
-              x += 1
-            }
-            y += 1
-          }
-        }
+    val d = decodeDirectory(arraySource(bytes,
+      s"$path: the directory points past the end of the file"))
+    val h = header(d)
+    requireLittleEndian(d)
+    require(h.bands == 1 && h.bitsPerSample == 32 && h.sampleFormat == 3,
+      s"only single-band Float32 supported, got $h")
+    val l = levelLayout(d.ifd0)
+    // a strip is a full-width block of RowsPerStrip rows
+    val (bw, bh) =
+      if (h.tiled) (l.tileWidth, l.tileHeight)
+      else (h.width, math.max(1L, math.min(h.height.toLong,
+        d.ifd0.longs(TRowsPerStrip).headOption.getOrElse(Long.MaxValue)))
+        .toInt)
+    val across = (h.width + bw - 1) / bw
+    val out = new Array[Float](h.width * h.height)
+    l.tileOffsets.indices.foreach { i =>
+      val x0 = (i % across) * bw
+      val y0 = (i / across) * bh
+      // tiles are padded to full blocks; the last strip may be short
+      val rows = if (h.tiled) bh else math.min(bh, h.height - y0)
+      val off = l.tileOffsets(i).toInt
+      val px = decodeBlock(
+        bytes.slice(off, off + l.tileByteCounts(i).toInt),
+        l.compression, l.predictor, bw, rows)
+      val cols = math.min(bw, h.width - x0)
+      var y = 0
+      while (y < math.min(rows, h.height - y0)) {
+        System.arraycopy(px, y * bw, out, (y0 + y) * h.width + x0, cols)
+        y += 1
       }
-      (h, out)
     }
-  }
-
-  /** IFD0 as tag -> values, handling classic and BigTIFF layouts. */
-  private def parseIfd0(bb: ByteBuffer): Map[Int, IndexedSeq[Long]] =
-    parseIfdAt(bb,
-      if (bb.getShort(2).toInt == 43) bb.getLong(8)
-      else bb.getInt(4).toLong & 0xffffffffL)._1
-
-  /** One IFD (tag -> long values) plus the next-IFD offset. */
-  private def parseIfdAt(bb: ByteBuffer, ifdOff: Long): (Map[Int, IndexedSeq[Long]], Long) = {
-    val big = bb.getShort(2).toInt == 43
-    val n =
-      if (big) bb.getLong(ifdOff.toInt).toInt
-      else bb.getShort(ifdOff.toInt).toInt & 0xffff
-    val entrySize = if (big) 20 else 12
-    val entryBase = ifdOff.toInt + (if (big) 8 else 2)
-    val inlineMax = if (big) 8 else 4
-    val entries = (0 until n).map { i =>
-      val base = entryBase + i * entrySize
-      val tag = bb.getShort(base).toInt & 0xffff
-      val typ = bb.getShort(base + 2).toInt & 0xffff
-      val count =
-        if (big) bb.getLong(base + 4).toInt else bb.getInt(base + 4)
-      val valOff = base + (if (big) 12 else 8)
-      val sz = typeSize(typ) * count
-      val start =
-        if (sz <= inlineMax) valOff
-        else if (big) bb.getLong(valOff).toInt else bb.getInt(valOff)
-      val vals = (0 until count).map { j =>
-        typ match {
-          case 3 => bb.getShort(start + j * 2).toLong & 0xffffL
-          case 4 => bb.getInt(start + j * 4).toLong & 0xffffffffL
-          case 16 | 17 => bb.getLong(start + j * 8)
-          case _ => 0L
-        }
-      }
-      tag -> vals
-    }.toMap
-    val nextAt = entryBase + n * entrySize
-    val next =
-      if (big) bb.getLong(nextAt)
-      else bb.getInt(nextAt).toLong & 0xffffffffL
-    (entries, next)
+    (h, out)
   }
 
   // ---------------------------------------------------------------------
@@ -349,141 +367,61 @@ object TiffIO {
       compression: Int, predictor: Int,
       tileOffsets: IndexedSeq[Long], tileByteCounts: IndexedSeq[Long])
 
-  /** The COG streaming contract: ONE bounded range request (the first
-    * `prefix.length` bytes) must contain the complete IFD chain and every
-    * referenced tag array, so a reader can locate any level's tiles —
-    * notably the smallest overview — and fetch exactly those byte ranges.
-    * Returns one layout per IFD in chain order (head = full image, last =
-    * smallest overview). Throws if the prefix is too short, i.e. the file
-    * violates header-first layout for this prefix size. */
-  /** (resX, resY, xmin, ymax) of the full-resolution image, parsed from
-    * the same single bounded header prefix as
-    * [[levelLayoutsFromPrefix]] — the geotransform that places a CRS
-    * window onto the pixel grid, so a geographic query costs no extra
-    * range request. Reads ModelPixelScale (33550) and ModelTiepoint
-    * (33922) from IFD0; throws if either is absent or the prefix does
-    * not cover their value arrays. */
-  def geoTransformFromPrefix(
-      prefix: Array[Byte]): (Double, Double, Double, Double) = {
-    val bb = ByteBuffer.wrap(prefix).order(ByteOrder.LITTLE_ENDIAN)
-    require((bb.get(0) & 0xff) == 0x49 && (bb.get(1) & 0xff) == 0x49,
-      "not a little-endian TIFF")
-    val big = bb.getShort(2).toInt == 43
-    val ifdOff =
-      if (big) bb.getLong(8) else bb.getInt(4).toLong & 0xffffffffL
-    val inlineMax = if (big) 8 else 4
-    val n =
-      if (big) bb.getLong(ifdOff.toInt).toInt
-      else bb.getShort(ifdOff.toInt).toInt & 0xffff
-    val entrySize = if (big) 20 else 12
-    val entryBase = ifdOff.toInt + (if (big) 8 else 2)
-    def doublesOf(tag: Int): Option[IndexedSeq[Double]] =
-      (0 until n).iterator.map { i =>
-        val base = entryBase + i * entrySize
-        (base,
-          bb.getShort(base).toInt & 0xffff,
-          bb.getShort(base + 2).toInt & 0xffff,
-          if (big) bb.getLong(base + 4).toInt else bb.getInt(base + 4))
-      }.collectFirst {
-        case (base, t, typ, count) if t == tag && typ == 12 =>
-          val valOff = base + (if (big) 12 else 8)
-          val start =
-            if (8 * count <= inlineMax) valOff
-            else if (big) bb.getLong(valOff).toInt else bb.getInt(valOff)
-          (0 until count).map(j => bb.getDouble(start + j * 8))
-      }
-    val scale = doublesOf(TModelPixelScale).getOrElse(
-      throw new IllegalArgumentException(
-        "no ModelPixelScale in header prefix — not a georeferenced TIFF"))
-    val tie = doublesOf(TModelTiepoint).getOrElse(
-      throw new IllegalArgumentException(
-        "no ModelTiepoint in header prefix — not a georeferenced TIFF"))
-    require(scale.length >= 2 && tie.length >= 5,
-      s"malformed geo tags: scale=${scale.length}, tiepoint=${tie.length}")
-    // A ModelTiepoint anchors raster cell (i, j) at model (x, y) — the
-    // anchored PIXEL is not necessarily (0, 0) (legal GeoTIFF; GDAL
-    // writes (0,0) but external producers may not). Back the tiepoint
-    // out to the raster's top-left corner through the pixel scale:
-    // xmin = x - i*resX, ymax = y + j*resY (y grows downward in pixels).
-    val (i, j, x, y) = (tie(0), tie(1), tie(3), tie(4))
-    (scale(0), scale(1), x - i * scale(0), y + j * scale(1))
+  /** One bounded header prefix (range request #1), decoded once. The COG
+    * streaming contract: the prefix must contain the complete IFD chain
+    * and every referenced tag array, so a reader can locate any level's
+    * tiles and fetch exactly those byte ranges. A read past the prefix's
+    * end throws `IllegalArgumentException` — the file violates
+    * header-first layout for this prefix size. */
+  private[wri] final class HeaderPrefix(bytes: Array[Byte]) {
+    private val dir = decodeDirectory(arraySource(bytes,
+      s"prefix of ${bytes.length} bytes does not cover the IFD chain " +
+        "— file is not header-first range-readable at this size"))
+
+    val length: Int = bytes.length
+
+    /** One layout per IFD in chain order (head = full image, last =
+      * smallest overview). */
+    lazy val layouts: Seq[LevelLayout] = {
+      requireLittleEndian(dir)
+      dir.ifds.map(levelLayout).toList
+    }
+
+    /** (resX, resY, xmin, ymax) of the full-resolution image — the
+      * geotransform that places a CRS window onto the pixel grid. */
+    lazy val geoTransform: (Double, Double, Double, Double) =
+      TiffIO.geoTransform(dir.ifd0).getOrElse(throw new IllegalArgumentException(
+        "no ModelPixelScale/ModelTiepoint in header prefix — not a " +
+          "georeferenced TIFF"))
+
+    lazy val epsg: Option[Int] = TiffIO.epsg(dir.ifd0)
   }
+
+  /** Every level's tile layout from one header prefix (see
+    * [[HeaderPrefix]]); throws if the prefix does not cover the chain. */
+  def levelLayoutsFromPrefix(prefix: Array[Byte]): Seq[LevelLayout] =
+    new HeaderPrefix(prefix).layouts
+
+  /** (resX, resY, xmin, ymax) of the full-resolution image from the same
+    * bounded header prefix as [[levelLayoutsFromPrefix]], so a geographic
+    * query costs no extra range request. Throws if ModelPixelScale or
+    * ModelTiepoint is absent. */
+  def geoTransformFromPrefix(
+      prefix: Array[Byte]): (Double, Double, Double, Double) =
+    new HeaderPrefix(prefix).geoTransform
 
   /** The ProjectedCRS EPSG code (GeoKey 3072) from the same bounded
     * header prefix as [[levelLayoutsFromPrefix]] — None when the file
     * carries no GeoKeyDirectory (or no projected-CRS key), so callers
     * can distinguish "unlabelled" from any real code. */
-  def epsgFromPrefix(prefix: Array[Byte]): Option[Int] = {
-    val bb = ByteBuffer.wrap(prefix).order(ByteOrder.LITTLE_ENDIAN)
-    require((bb.get(0) & 0xff) == 0x49 && (bb.get(1) & 0xff) == 0x49,
-      "not a little-endian TIFF")
-    parseIfd0(bb).get(TGeoKeyDirectory).flatMap { keys =>
-      keys.drop(4).grouped(4).collectFirst {
-        case IndexedSeq(3072L, _, _, v) => v.toInt
-      }
-    }
-  }
-
-  def levelLayoutsFromPrefix(prefix: Array[Byte]): Seq[LevelLayout] = {
-    val bb = ByteBuffer.wrap(prefix).order(ByteOrder.LITTLE_ENDIAN)
-    require((bb.get(0) & 0xff) == 0x49 && (bb.get(1) & 0xff) == 0x49,
-      "not a little-endian TIFF")
-    val big = bb.getShort(2).toInt == 43
-    var off = if (big) bb.getLong(8) else bb.getInt(4).toLong & 0xffffffffL
-    val out = Seq.newBuilder[LevelLayout]
-    try {
-      var levels = 0
-      while (off != 0 && levels < 64) {
-        val (ifd, next) = parseIfdAt(bb, off)
-        def gv(t: Int) = ifd.getOrElse(t, IndexedSeq.empty[Long])
-        out += LevelLayout(
-          gv(TImageWidth).head.toInt, gv(TImageLength).head.toInt,
-          gv(TTileWidth).headOption.map(_.toInt).getOrElse(0),
-          gv(TTileLength).headOption.map(_.toInt).getOrElse(0),
-          gv(TCompression).headOption.map(_.toInt).getOrElse(1),
-          gv(TPredictor).headOption.map(_.toInt).getOrElse(1),
-          if (ifd.contains(TTileOffsets)) gv(TTileOffsets)
-          else gv(TStripOffsets),
-          if (ifd.contains(TTileByteCounts)) gv(TTileByteCounts)
-          else gv(TStripByteCounts))
-        off = next
-        levels += 1
-      }
-    } catch {
-      case e: IndexOutOfBoundsException =>
-        throw new IllegalArgumentException(
-          s"prefix of ${prefix.length} bytes does not cover the IFD chain " +
-            "— file is not header-first range-readable at this size", e)
-    }
-    out.result()
-  }
+  def epsgFromPrefix(prefix: Array[Byte]): Option[Int] =
+    new HeaderPrefix(prefix).epsg
 
   /** Decode one fetched tile of a level (decompress + undo predictor);
     * returns tileWidth*tileHeight floats (edge tiles include padding). */
-  def decodeLevelTile(l: LevelLayout, tileBytes: Array[Byte]): Array[Float] = {
-    val raw = decompress(tileBytes, l.compression,
-      l.tileWidth * l.tileHeight * 4)
-    val undone = undoPredictor(raw, l.predictor, l.tileWidth, l.tileHeight)
-    val fb = ByteBuffer.wrap(undone).order(ByteOrder.LITTLE_ENDIAN)
-    Array.tabulate(l.tileWidth * l.tileHeight)(i => fb.getFloat(i * 4))
-  }
-
-  /** (offsets, byteCounts, tileWidth, tileHeight) of IFD0. */
-  private def stripOrTileInfo(bb: ByteBuffer): (IndexedSeq[Long], IndexedSeq[Long], Int, Int) = {
-    val ifd = parseIfd0(bb)
-    def get(t: Int) = ifd.getOrElse(t, IndexedSeq.empty[Long])
-    val offs = if (ifd.contains(TTileOffsets)) get(TTileOffsets)
-      else get(TStripOffsets)
-    val counts = if (ifd.contains(TTileByteCounts)) get(TTileByteCounts)
-      else get(TStripByteCounts)
-    (offs, counts,
-      get(TTileWidth).headOption.map(_.toInt).getOrElse(0),
-      get(TTileLength).headOption.map(_.toInt).getOrElse(0))
-  }
-
-  private def predictorOf(bb: ByteBuffer): Int =
-    parseIfd0(bb).get(TPredictor).flatMap(_.headOption.map(_.toInt))
-      .getOrElse(1)
+  def decodeLevelTile(l: LevelLayout, tileBytes: Array[Byte]): Array[Float] =
+    decodeBlock(tileBytes, l.compression, l.predictor, l.tileWidth,
+      l.tileHeight)
 
   // ---------------------------------------------------------------------
   // Compression codecs

@@ -44,6 +44,44 @@ class CogQuerySpec extends SparkSpec {
       s"re-anchored tiepoint drifted: ($xmin2, $ymax2) vs ($xmin, $ymax)")
   }
 
+  test("a re-anchored source tiepoint: readHeader agrees with the prefix " +
+      "geotransform, and Cog.run writes the COG at the same origin") {
+    val dir = java.nio.file.Files.createTempDirectory("reanchor")
+    val src = dir.resolve("src.tif")
+    val (resX, resY) = (90.0, 90.0)
+    val (xmin, ymax) = (Model.Expected.xmin, Model.Expected.ymax)
+    TiffWriter.writeGeoTiff(src.toString, 48, 40,
+      Array.tabulate(48 * 40)(_.toFloat),
+      TiffIO.GeoInfo(Model.Expected.epsg, resX, resY, xmin, ymax))
+    // move the tiepoint to pixel (i=2, j=3) with the model point that
+    // keeps the raster where it was
+    val bytes = java.nio.file.Files.readAllBytes(src)
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val xOff = (0 until bytes.length - 8).find(o =>
+      bb.getDouble(o) == xmin).get
+    val tieStart = xOff - 24 // (i, j, k) precede (x, y, z)
+    bb.putDouble(tieStart, 2.0)
+    bb.putDouble(tieStart + 8, 3.0)
+    bb.putDouble(xOff, xmin + 2.0 * resX)
+    bb.putDouble(xOff + 8, ymax - 3.0 * resY)
+    java.nio.file.Files.write(src, bytes)
+    val h = TiffIO.readHeader(src.toString)
+    val (_, _, gx, gy) = TiffIO.geoTransformFromPrefix(bytes.take(16 * 1024))
+    assert((h.xmin, h.ymax) == ((gx, gy)),
+      s"readHeader origin (${h.xmin}, ${h.ymax}) vs prefix ($gx, $gy)")
+    assert(math.abs(h.xmin - xmin) < 1e-6 && math.abs(h.ymax - ymax) < 1e-6,
+      s"re-anchored tiepoint shifted the extent: (${h.xmin}, ${h.ymax})")
+    val out = dir.resolve("cogs").toString
+    val status = Cog.run(spark,
+      Seq((src.toString, "src.tif")).toDF("filepath", "cog_filename"), out,
+      TiffWriter.CogOptions(blockSize = 32)).collect()
+    assert(status.map(_.getAs[String]("status")).toSeq == Seq("written"))
+    val c = TiffIO.readHeader(s"$out/src.tif")
+    assert((c.xmin, c.ymax) == ((h.xmin, h.ymax)),
+      s"COG origin (${c.xmin}, ${c.ymax}) vs source (${h.xmin}, ${h.ymax})")
+  }
+
   test("window stats equal a full-raster decode of the same window") {
     val out = CogQuery.windowStats(spark, cogDir, inputs.map(_._2),
         x0 = 70, y0 = 30, winW = 48, winH = 48)

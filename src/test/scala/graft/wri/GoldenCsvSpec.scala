@@ -13,7 +13,7 @@ class GoldenCsvSpec extends SparkSpec {
     "/root/reference/metadata/all_layers_consistent.csv"
 
   test("classification reproduces all 82 golden rows from filepath alone") {
-    val golden = spark.read.option("header", "true").csv(goldenCsv)
+    val golden = spark.read.option("header", "true").csv(ReferenceGolden(goldenCsv))
       .select("filepath", "filename", "data_type", "wri_domain",
         "wri_dimension", "cog_filename")
     assert(golden.count() == 82)
@@ -41,7 +41,7 @@ class GoldenCsvSpec extends SparkSpec {
 
   test("validation passes for the golden header values") {
     // the CSV's own extent/res/epsg values must pass the assumption check
-    val golden = spark.read.option("header", "true").csv(goldenCsv)
+    val golden = spark.read.option("header", "true").csv(ReferenceGolden(goldenCsv))
       .select(
         col("crs_epsg").cast("int").as("crs_epsg"),
         col("resolution_x").cast("double").as("rx"),

@@ -81,7 +81,7 @@ class PipelineSpec extends SparkSpec {
     val mapper = new ObjectMapper()
     val mine = mapper.readTree(Files.readString(
       Paths.get(s"$root/stac/collections/wri_ignitR/items/WRI_score.json")))
-    val golden = mapper.readTree(Files.readString(Paths.get(
+    val golden = mapper.readTree(ReferenceGolden.read(Paths.get(
       "/root/reference/stac/collections/wri_ignitR/items/WRI_score.json")))
     assert(mine == golden,
       s"item JSON mismatch:\nmine:  $mine\ngolden:$golden")
@@ -91,7 +91,7 @@ class PipelineSpec extends SparkSpec {
     val mapper = new ObjectMapper()
     val mine = mapper.readTree(Files.readString(Paths.get(
       s"$root/stac/collections/wri_ignitR/collection.json")))
-    val golden = mapper.readTree(Files.readString(Paths.get(
+    val golden = mapper.readTree(ReferenceGolden.read(Paths.get(
       "/root/reference/stac/collections/wri_ignitR/collection.json")))
     for (f <- Seq("stac_version", "type", "id", "title", "description",
         "license", "extent"))

@@ -613,5 +613,16 @@ class StacRefreshSpec extends SparkSpec {
     assert(e.getMessage.contains("EMPTY"), e.getMessage)
     assert(new java.io.File(s"$itemsDir/keep.json").exists(),
       "an empty refresh destroyed catalog items before refusing")
+    // nor does it create anything: refused against a root that holds no
+    // catalog yet, the root stays empty
+    val fresh = java.nio.file.Files.createTempDirectory("stac_refresh_none")
+    intercept[IllegalArgumentException] {
+      Stac.refreshCatalog(spark,
+        consistentOf(Seq("keep.tif" -> 0.0)).limit(0), fresh.toString)
+    }
+    val created = java.nio.file.Files.walk(fresh).toArray.toSeq
+      .filter(_ != fresh)
+    assert(created.isEmpty,
+      s"a refused refresh created paths: ${created.mkString(", ")}")
   }
 }

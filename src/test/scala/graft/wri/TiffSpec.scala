@@ -1,7 +1,8 @@
 package graft.wri
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.file.{Files, Paths}
 
 class TiffSpec extends AnyFunSuite {
   import TiffIO._
@@ -153,5 +154,77 @@ class TiffSpec extends AnyFunSuite {
     assert(h.overviewCount == 1)
     val (_, back) = readPixels(p)
     assert(back(0) == 8f && back.count(!_.isNaN) == 2)
+  }
+
+  test("readHeader and the prefix views agree on strip, tiled, BigTIFF " +
+      "and header-fixture files") {
+    val strip = tmp("agree_strip.tif")
+    TiffWriter.writeGeoTiff(strip, 40, 30, testPixels(40, 30), geo)
+    val cog = tmp("agree_cog.tif")
+    TiffWriter.writeCog(cog, 70, 50, testPixels(70, 50), geo,
+      TiffWriter.CogOptions(blockSize = 32))
+    val big = tmp("agree_big.tif")
+    TiffWriter.writeCog(big, 70, 50, testPixels(70, 50), geo,
+      TiffWriter.CogOptions(blockSize = 32, bigTiff = true))
+    val fixture = tmp("agree_fixture.tif")
+    TiffWriter.writeHeaderFixture(fixture, 52355, 57865, geo)
+    for (p <- Seq(strip, cog, big, fixture)) {
+      val h = readHeader(p)
+      val prefix = Files.readAllBytes(Paths.get(p)).take(16 * 1024)
+      val l0 = levelLayoutsFromPrefix(prefix).head
+      assert((l0.width, l0.height) == (h.width, h.height), p)
+      assert((l0.tileWidth, l0.tileHeight) == (h.tileWidth, h.tileHeight), p)
+      assert(levelLayoutsFromPrefix(prefix).length == h.overviewCount + 1, p)
+      assert(geoTransformFromPrefix(prefix) ==
+        ((h.resX, h.resY, h.xmin, h.ymax)), p)
+      assert(epsgFromPrefix(prefix) == h.epsg && h.epsg.contains(5070), p)
+    }
+  }
+
+  /** The same classic TIFF in big-endian (MM) byte order: the header,
+    * every IFD entry and every external value array are rewritten; the
+    * pixel bytes are kept. Handles the SHORT, LONG and DOUBLE tags the
+    * writer emits. */
+  private def toBigEndian(le: Array[Byte]): Array[Byte] = {
+    val in = ByteBuffer.wrap(le).order(ByteOrder.LITTLE_ENDIAN)
+    val out = ByteBuffer.wrap(le.clone()).order(ByteOrder.BIG_ENDIAN)
+    out.put(0, 'M'.toByte).put(1, 'M'.toByte).putShort(2, in.getShort(2))
+    var ifd = in.getInt(4)
+    out.putInt(4, ifd)
+    while (ifd != 0) {
+      val n = in.getShort(ifd).toInt
+      out.putShort(ifd, n.toShort)
+      for (i <- 0 until n) {
+        val e = ifd + 2 + 12 * i
+        val typ = in.getShort(e + 2).toInt
+        val count = in.getInt(e + 4)
+        out.putShort(e, in.getShort(e)).putShort(e + 2, typ.toShort)
+          .putInt(e + 4, count)
+        val size = typ match { case 3 => 2; case 4 => 4; case 12 => 8 }
+        val at =
+          if (size * count <= 4) e + 8
+          else { out.putInt(e + 8, in.getInt(e + 8)); in.getInt(e + 8) }
+        for (k <- 0 until count) size match {
+          case 2 => out.putShort(at + 2 * k, in.getShort(at + 2 * k))
+          case 4 => out.putInt(at + 4 * k, in.getInt(at + 4 * k))
+          case 8 => out.putDouble(at + 8 * k, in.getDouble(at + 8 * k))
+        }
+      }
+      val nextAt = ifd + 2 + 12 * n
+      ifd = in.getInt(nextAt)
+      out.putInt(nextAt, ifd)
+    }
+    out.array()
+  }
+
+  test("a big-endian (MM) header reads through readHeader; readPixels " +
+      "refuses it, naming the byte order") {
+    val le = tmp("le_fixture.tif")
+    TiffWriter.writeHeaderFixture(le, 52355, 57865, geo)
+    val mm = tmp("mm_fixture.tif")
+    Files.write(Paths.get(mm), toBigEndian(Files.readAllBytes(Paths.get(le))))
+    assert(readHeader(mm) == readHeader(le))
+    val e = intercept[IllegalArgumentException](readPixels(mm))
+    assert(e.getMessage.contains("byte order"), e.getMessage)
   }
 }
