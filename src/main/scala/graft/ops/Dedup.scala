@@ -585,13 +585,15 @@ object Dedup {
     * digest — the cheap pass that must run BEFORE any near-dup analysis.
     * (The groupBy+join-back formulation this replaces computed the md5
     * of every text twice — once per join side — and paid two digest
-    * exchanges where the window pays one.) */
+    * exchanges where the window pays one.) A null text equals no other
+    * text, so a null-text doc is its own singleton (rep_id = doc_id). */
   def exactDupMembership(docs: DataFrame, textCol: String = "text")
       : DataFrame =
     docs.select(col("doc_id"), md5(col(textCol).cast("binary")).as("__h"))
       .withColumn("rep_id",
-        min(col("doc_id")).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__h"))))
+        when(col("__h").isNull, col("doc_id")).otherwise(
+          min(col("doc_id")).over(org.apache.spark.sql.expressions.Window
+            .partitionBy(col("__h")))))
       .select(col("doc_id"), col("rep_id"))
 
   /** Near-dup pairs with exact duplicates collapsed first: AllPairs runs

@@ -1,7 +1,7 @@
 package graft.wri
 
 import java.io.{BufferedOutputStream, DataOutputStream}
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.{ByteBuffer, ByteOrder, FloatBuffer}
 import org.apache.hadoop.conf.Configuration
 
 /** Single-band Float32 GeoTIFF writers: a plain strip-based writer (test
@@ -53,8 +53,7 @@ object TiffWriter {
       conf: Configuration = WriFs.defaultConf): Unit = {
     require(pixels.length == width * height)
     val data = new Array[Byte](pixels.length * 4)
-    val bb = ByteBuffer.wrap(data).order(ByteOrder.LITTLE_ENDIAN)
-    pixels.foreach(bb.putFloat)
+    floatView(data).put(pixels)
     val levels = Seq(Level(width, height, width, height, Seq(data)))
     writeTiff(path, levels, geo, Uncompressed, 1, tiled = false, conf = conf)
   }
@@ -79,17 +78,15 @@ object TiffWriter {
     val levels = lvls.map { case (w, h, px) =>
       val tilesX = (w + bs - 1) / bs; val tilesY = (h + bs - 1) / bs
       val tiles = for (ty <- 0 until tilesY; tx <- 0 until tilesX) yield {
+        // edge tiles copy only their in-image part; the padding stays the
+        // allocation's zeros
         val raw = new Array[Byte](bs * bs * 4)
-        val tb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
+        val tile = floatView(raw)
+        val x0 = tx * bs; val y0 = ty * bs
+        val cols = math.min(bs, w - x0); val rows = math.min(bs, h - y0)
         var y = 0
-        while (y < bs) {
-          var x = 0
-          while (x < bs) {
-            val gx = tx * bs + x; val gy = ty * bs + y
-            val v = if (gx < w && gy < h) px(gy * w + gx) else 0.0f
-            tb.putFloat((y * bs + x) * 4, v)
-            x += 1
-          }
+        while (y < rows) {
+          tile.put(y * bs, px, (y0 + y) * w + x0, cols)
           y += 1
         }
         compress(applyPredictor(raw, opts.predictor, bs, bs), opts.compression)
@@ -100,39 +97,71 @@ object TiffWriter {
       tiled = true, big = opts.bigTiff, conf = conf)
   }
 
-  /** NaN-aware 2x downsample. */
+  /** Little-endian Float32 view of a pixel byte buffer. */
+  private def floatView(bytes: Array[Byte]): FloatBuffer =
+    ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).asFloatBuffer()
+
+  /** NaN-aware 2x downsample, one output row per [[downsampleRow]] call. */
   private def downsample(w: Int, h: Int, px: Array[Float],
       r: Resampling): (Int, Int, Array[Float]) = {
     val nw = math.max(1, (w + 1) / 2); val nh = math.max(1, (h + 1) / 2)
     val out = new Array[Float](nw * nh)
     var y = 0
     while (y < nh) {
-      var x = 0
-      while (x < nw) {
-        out(y * nw + x) = r match {
-          case Nearest => px((y * 2) * w + (x * 2))
-          case Average =>
-            var sum = 0.0; var n = 0
-            var dy = 0
-            while (dy < 2) {
-              var dx = 0
-              while (dx < 2) {
-                val sx = x * 2 + dx; val sy = y * 2 + dy
-                if (sx < w && sy < h) {
-                  val v = px(sy * w + sx)
-                  if (!v.isNaN) { sum += v; n += 1 }
-                }
-                dx += 1
-              }
-              dy += 1
-            }
-            if (n == 0) Float.NaN else (sum / n).toFloat
-        }
-        x += 1
-      }
+      val lower = if (2 * y + 1 < h) px else null
+      downsampleRow(r, w, px, 2 * y * w, lower, (2 * y + 1) * w, out, y * nw)
       y += 1
     }
     (nw, nh, out)
+  }
+
+  /** One overview row of `(w + 1) / 2` pixels into `out` at `outAt`
+    * from two parent rows of width `w`, `upper` at `upperAt` and `lower`
+    * at `lowerAt`; `lower` is null for an odd parent's last row.
+    * NEAREST takes each 2x2 cell's top-left pixel. AVERAGE is the mean
+    * of the cell's in-image non-NaN pixels (NaN if none), summed in
+    * double in row-major order: upper left, upper right, lower left,
+    * lower right.
+    * Each value goes to a local before the store: HotSpot cannot compile
+    * a loop on-stack while an array store is pending on the operand
+    * stack, and would leave it interpreted until its method had been
+    * called many times. */
+  private def downsampleRow(r: Resampling, w: Int,
+      upper: Array[Float], upperAt: Int, lower: Array[Float], lowerAt: Int,
+      out: Array[Float], outAt: Int): Unit = {
+    val nw = (w + 1) / 2
+    var x = 0
+    r match {
+      case Nearest =>
+        while (x < nw) {
+          val v = upper(upperAt + 2 * x)
+          out(outAt + x) = v
+          x += 1
+        }
+      case Average =>
+        while (x < nw) {
+          val sx = 2 * x
+          val right = sx + 1 < w
+          var sum = 0.0; var n = 0
+          var v = upper(upperAt + sx)
+          if (!v.isNaN) { sum += v; n += 1 }
+          if (right) {
+            v = upper(upperAt + sx + 1)
+            if (!v.isNaN) { sum += v; n += 1 }
+          }
+          if (lower != null) {
+            v = lower(lowerAt + sx)
+            if (!v.isNaN) { sum += v; n += 1 }
+            if (right) {
+              v = lower(lowerAt + sx + 1)
+              if (!v.isNaN) { sum += v; n += 1 }
+            }
+          }
+          val mean = if (n == 0) Float.NaN else (sum / n).toFloat
+          out(outAt + x) = mean
+          x += 1
+        }
+    }
   }
 
   private case class Level(w: Int, h: Int, tw: Int, th: Int,

@@ -234,6 +234,16 @@ class DedupSpec extends SparkSpec {
     assert(m == Map(0L -> 0L, 1L -> 0L, 2L -> 2L, 3L -> 3L, 4L -> 3L))
   }
 
+  test("exactDupMembership keeps every null-text doc a singleton") {
+    val withNulls = docs.select($"doc_id", $"text").union(
+      Seq((5L, null: String), (6L, null: String), (7L, base))
+        .toDF("doc_id", "text"))
+    val m = Dedup.exactDupMembership(withNulls).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(m == Map(0L -> 0L, 1L -> 0L, 2L -> 2L, 3L -> 3L, 4L -> 3L,
+      5L -> 5L, 6L -> 6L, 7L -> 0L))
+  }
+
   test("incrementalNearDups equals the cross slice of the full AllPairs join") {
     val corpus = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text")).limit(120)

@@ -3,6 +3,7 @@ package graft.wri
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
+import java.lang.Float.{floatToIntBits, floatToRawIntBits}
 
 class TiffSpec extends AnyFunSuite {
   import TiffIO._
@@ -154,6 +155,118 @@ class TiffSpec extends AnyFunSuite {
     assert(h.overviewCount == 1)
     val (_, back) = readPixels(p)
     assert(back(0) == 8f && back.count(!_.isNaN) == 2)
+  }
+
+  /** Brute-force 2x overview of one level: every output pixel from its
+    * 2x2 parent cell, clipped to the parent. NEAREST is the top-left
+    * pixel; AVERAGE the double-summed mean of the non-NaN pixels in
+    * row-major order, NaN when there are none. */
+  private def oracleOverview(w: Int, h: Int, px: Array[Float],
+      r: Resampling): (Int, Int, Array[Float]) = {
+    val nw = (w + 1) / 2; val nh = (h + 1) / 2
+    val out = Array.tabulate(nw * nh) { i =>
+      val x = i % nw; val y = i / nw
+      val cell = for (dy <- 0 to 1; dx <- 0 to 1
+        if 2 * x + dx < w && 2 * y + dy < h)
+        yield px((2 * y + dy) * w + 2 * x + dx)
+      r match {
+        case Nearest => cell.head
+        case Average =>
+          val valid = cell.filterNot(_.isNaN)
+          if (valid.isEmpty) Float.NaN
+          else (valid.foldLeft(0.0)(_ + _) / valid.length).toFloat
+      }
+    }
+    (nw, nh, out)
+  }
+
+  /** Seeded pixels with NaN holes: an all-NaN 2x2 cell at the origin,
+    * NaN in every other pixel of the last column and of the last row
+    * (so the cells that hang over an odd edge mix NaN and values), NaN
+    * and -0.0 sprinkled, and magnitudes from 1e-2 to 1e5 so the double
+    * sum matters. */
+  private def holedPixels(w: Int, h: Int, seed: Int): Array[Float] = {
+    val rnd = new scala.util.Random(seed)
+    val px = Array.fill(w * h) {
+      rnd.nextInt(10) match {
+        case 0 => Float.NaN
+        case 1 => -0.0f
+        case k => (rnd.nextGaussian() * math.pow(10, k - 4)).toFloat
+      }
+    }
+    for (y <- 0 until math.min(2, h); x <- 0 until math.min(2, w))
+      px(y * w + x) = Float.NaN
+    for (y <- 0 until h by 2) px(y * w + w - 1) = Float.NaN
+    for (x <- 0 until w by 2) px((h - 1) * w + x) = Float.NaN
+    px
+  }
+
+  /** Every level of a COG decoded through the prefix layouts and
+    * per-tile decode, cropped to the level's size. Tile padding must be
+    * zero bits. */
+  private def decodeLevels(bytes: Array[Byte]): Seq[(Int, Int, Array[Float])] =
+    levelLayoutsFromPrefix(bytes).map { l =>
+      val across = (l.width + l.tileWidth - 1) / l.tileWidth
+      val px = new Array[Float](l.width * l.height)
+      l.tileOffsets.zip(l.tileByteCounts).zipWithIndex.foreach {
+        case ((off, n), t) =>
+          val tile = decodeLevelTile(l, bytes.slice(off.toInt, (off + n).toInt))
+          val x0 = (t % across) * l.tileWidth
+          val y0 = (t / across) * l.tileHeight
+          for (y <- 0 until l.tileHeight; x <- 0 until l.tileWidth) {
+            val v = tile(y * l.tileWidth + x)
+            if (x0 + x < l.width && y0 + y < l.height)
+              px((y0 + y) * l.width + x0 + x) = v
+            else assert(floatToRawIntBits(v) == 0,
+              s"padding at tile $t ($x,$y)")
+          }
+      }
+      (l.width, l.height, px)
+    }
+
+  for (r <- Seq(Average, Nearest)) {
+    test(s"every overview level is bit-exact against a scalar oracle ($r)") {
+      val sizes = Seq((1, 1, 1), (3, 5, 1), (33, 17, 16), (70, 50, 16))
+      for ((w, h, bs) <- sizes) {
+        val px = holedPixels(w, h, w * 31 + h)
+        val p = tmp(s"pyramid_${r}_${w}x$h.tif")
+        TiffWriter.writeCog(p, w, h, px, geo,
+          TiffWriter.CogOptions(blockSize = bs, predictor = 3, resampling = r))
+        var want = List((w, h, px))
+        while (math.max(want.head._1, want.head._2) > bs) {
+          val (lw, lh, lpx) = want.head
+          want = oracleOverview(lw, lh, lpx, r) :: want
+        }
+        val got = decodeLevels(Files.readAllBytes(Paths.get(p)))
+        assert(got.length == want.length, s"${w}x$h levels")
+        got.zip(want.reverse).zipWithIndex.foreach {
+          case (((gw, gh, gpx), (ww, wh, wpx)), li) =>
+            assert((gw, gh) == ((ww, wh)), s"${w}x$h level $li size")
+            val bad = gpx.indices.find(i =>
+              floatToIntBits(gpx(i)) != floatToIntBits(wpx(i)))
+            assert(bad.isEmpty, s"${w}x$h level $li pixel ${bad.map(i =>
+              s"$i: ${gpx(i)} != ${wpx(i)}")}")
+        }
+      }
+    }
+  }
+
+  test("writer output bytes are pinned (SHA-256)") {
+    // uncompressed, so the hashes pin the layout, pyramid values and tile
+    // padding without depending on the zlib build
+    def sha256(p: String): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(Files.readAllBytes(Paths.get(p))).map("%02x".format(_)).mkString
+    val px = holedPixels(70, 50, 7)
+    val cog = tmp("pinned_cog.tif")
+    TiffWriter.writeCog(cog, 70, 50, px, geo, TiffWriter.CogOptions(
+      blockSize = 16, compression = Uncompressed, predictor = 3))
+    assert(sha256(cog) ==
+      "e4914e8364196d880ef66161240a42be6f7e7a0ece25b28a74b71539f17a1831")
+    val plain = tmp("pinned_plain.tif")
+    TiffWriter.writeGeoTiff(plain, 70, 50, px, geo)
+    assert(sha256(plain) ==
+      "1661ee498be53a04323c10b27a2f4b5998d531c8842780da8128abf9072e828b")
   }
 
   test("readHeader and the prefix views agree on strip, tiled, BigTIFF " +
