@@ -72,13 +72,11 @@ object Bench {
         case (a, b) => Left(a.left.toOption.orElse(b.left.toOption).get)
       })
     }
-    def ms(v: Double): String = BigDecimal(v)
-      .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val qs = results.map {
       case (k, Right(v)) => "\"" + k + "\":" + ms(v)
       case (k, Left(_))  => "\"" + k + "\":null"
     }.mkString("{", ",", "}")
-    val errors = results.collect { case (k, Left(e)) => "\"" + k + ":" + e + "\"" }
+    val errors = results.collect { case (k, Left(e)) => jsonString(s"$k:$e") }
     val total = results.collect { case (_, Right(v)) => v }.sum
     val errField =
       if (errors.isEmpty) "" else s""","errors":${errors.mkString("[", ",", "]")}"""
@@ -94,12 +92,7 @@ object Bench {
     // independently parseable JSON line per query AHEAD of the total
     // line, so a line-oriented reader recovers the per-query table even
     // when the single big "queries" map line is clipped.
-    results.foreach {
-      case (k, Right(v)) =>
-        println(s"""{"metric":"query","name":"$k","sec":${ms(v)}}""")
-      case (k, Left(e)) =>
-        println(s"""{"metric":"query","name":"$k","sec":null,"err":"$e"}""")
-    }
+    results.foreach { case (k, r) => println(queryLine(k, r)) }
     println(fullLine)
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_FULL.json"),
@@ -108,5 +101,22 @@ object Bench {
     println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"sf":"$sfDir"$errField}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
+  }
+
+  private def ms(v: Double): String = BigDecimal(v)
+    .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+
+  /** `s` as a JSON string literal, quotes, backslashes and control
+    * characters escaped. */
+  private[graft] def jsonString(s: String): String = "\"" +
+    new String(com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance
+      .quoteAsString(s)) + "\""
+
+  /** One query's line: its seconds, or null and the error. */
+  private[graft] def queryLine(name: String,
+      r: Either[String, Double]): String = r match {
+    case Right(v) => s"""{"metric":"query","name":"$name","sec":${ms(v)}}"""
+    case Left(e) =>
+      s"""{"metric":"query","name":"$name","sec":null,"err":${jsonString(e)}}"""
   }
 }

@@ -3,12 +3,43 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scratch driver for timing individual operators during development.
-  * Not part of the driver contract. Usage: runMain graft.Dev <what> [sfDir]
+/** Development tools for timing and explaining queries and operators;
+  * Verify and Bench do not use them. Usage:
+  * `runMain graft.Dev <tool> [sfDir] [args...]` (sfDir defaults to
+  * sf0.1; a query is named by its registered name or a unique prefix).
+  *
+  *  - `plans` — formatted physical plans of the headline queries at
+  *    sf0.001, written to PLANS.md.
+  *  - `scalemd [sfDir]` — the would-it-survive probes over scaled
+  *    corpora (two interleaved passes, per-probe minimum) plus the
+  *    streaming-refresh slope, written to SCALE.md.
+  *  - `qiso <sfDir> <query>` — three isolated passes with cache hygiene
+  *    between them; passes 2-3 are the steady state.
+  *  - `qjobs <sfDir> <query>` — the steady-state pass's Spark jobs,
+  *    sorted by wall time.
+  *  - `iplan <sfDir> <op> <outfile>` — an operator's internal
+  *    (eager=false) formatted plan; `op` is one of `minhash`, `simhash`,
+  *    `ngramjaccard`, `sharedspans`.
+  *  - `planfile <sfDir> <query> <outfile>` — a registered query's
+  *    formatted physical plan.
+  *  - `benchdiff [sfDir] [baseline] [current]` — per-query bench times
+  *    against the baseline (defaults BENCH_BASELINE.json and
+  *    BENCH_FULL.json), flagging queries over budget.
+  *  - `qrun <sfDir> <query>` — run one query and show its first rows.
+  *
+  * Any other tool name prints the usage line and exits non-zero.
   */
 object Dev {
+  private val tools = Seq("plans", "scalemd", "qiso", "qjobs", "iplan",
+    "planfile", "benchdiff", "qrun")
+
   def main(args: Array[String]): Unit = {
-    val what = args.headOption.getOrElse("minhash")
+    val what = args.headOption.getOrElse("")
+    if (!tools.contains(what)) {
+      System.err.println(
+        s"usage: runMain graft.Dev <${tools.mkString("|")}> [sfDir] [args...]")
+      sys.exit(2)
+    }
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -758,572 +789,9 @@ object Dev {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get("/root/repo/SCALE.md"), sb.toString)
         println(s"[dev] wrote SCALE.md (${results.size} probes + slope)")
-      case "scale" =>
-        // would-it-survive-8x probe: union the corpus 8 times with
-        // offset ids (every doc becomes an 8-strong exact-dup cluster —
-        // the worst case for candidate generation) and time the heavy
-        // dedup ops end-to-end
-        val base = Tables.documents(spark, sfDir)
-        val n = base.count()
-        val big = (0 until 8).map { k =>
-          base.select((col("doc_id") + lit(k * n)).as("doc_id"),
-            col("text"), col("source"), col("lang"), col("n_chars"))
-        }.reduce(_ unionByName _)
-        println(s"[dev] scaled corpus: ${big.count()} docs (8 x $n)")
-        println("[dev] minhash pairs = " + time("minhash 8x")(
-          ops.Dedup.minHashCandidatePairs(big).count()))
-        println("[dev] jaccard pairs = " + time("jaccard 8x")(
-          ops.Dedup.ngramJaccardPairs(big, threshold = 0.5).count()))
-        // same result, but exact dups collapse BEFORE AllPairs: the
-        // posting lists stay unique-corpus-sized (the 100 TB ordering)
-        println("[dev] collapsed jaccard pairs = " +
-          time("collapsed jaccard 8x")(
-            ops.Dedup.collapsedNgramJaccardPairs(big, threshold = 0.5)
-              .count()))
-        println("[dev] simhash pairs = " + time("simhash 8x")(
-          ops.Dedup.simHashCandidatePairs(big).count()))
-        // every 8-strong dup cluster must collapse to one component
-        val clusters = time("cc clusters 8x")(
-          ops.Dedup.duplicateClusters(big).count())
-        println(s"[dev] clustered docs = $clusters")
-        println("[dev] packed docs = " + time("packing 8x")(
-          ops.Packing.packBySource(big).count()))
-      case "scale5" =>
-        // round-5 would-it-survive probes. Bench-style hygiene between
-        // probes: a probe must not pay the previous probe's cached
-        // blocks / GC debt (measured: spans-1x read 29 s after the 16x
-        // kNN probe vs 8.6 s cold in an isolated session).
-        def release(): Unit = {
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          System.gc()
-        }
-        // (a) batch kNN: 16x the embedding corpus (offset ids), ALL
-        // original vectors as queries — candidate shuffle stays ids-only
-        val emb = Tables.embeddings(spark, sfDir)
-        val ne = emb.count()
-        val bigE = (0 until 16).map { k =>
-          emb.select((col("vec_id") + lit(k * ne)).as("vec_id"),
-            col("embedding"), col("label"))
-        }.reduce(_ unionByName _)
-        println(s"[dev] scaled corpus: ${bigE.count()} vecs (16 x $ne)")
-        println("[dev] knn rows = " + time("knn 16x corpus, all-queries")(
-          ops.Similarity.annKnnJoin(emb, bigE, k = 5).count()))
-        release()
-        // (b) shared spans: 8x duplicated docs — every span repeats in
-        // 8x8 pair combinations; the df cap must absorb the blowup
-        val baseD = Tables.documents(spark, sfDir)
-        val nd = baseD.count()
-        val bigD = (0 until 8).map { k =>
-          baseD.select((col("doc_id") + lit(k * nd)).as("doc_id"),
-            col("text"), col("source"), col("lang"), col("n_chars"))
-        }.reduce(_ unionByName _)
-        println("[dev] span pairs 1x = " + time("spans 1x")(
-          ops.Dedup.sharedSpanPairs(baseD).count()))
-        release()
-        // naive 8x: every gram's df multiplies by the dup factor, so the
-        // stop-gram cap suppresses EVERYTHING (count -> 0). The
-        // production ordering — collapse exact dups, then span-detect on
-        // representatives (q84's composition) — reconstitutes the true
-        // span structure at unique-corpus cost.
-        println("[dev] span pairs 8x naive (df cap saturates) = " +
-          time("spans 8x naive")(ops.Dedup.sharedSpanPairs(bigD).count()))
-        release()
-        val membersD = ops.Dedup.exactDupMembership(bigD)
-        val repsD = bigD.join(
-          membersD.filter(col("doc_id") === col("rep_id"))
-            .select(col("doc_id")), Seq("doc_id"), "left_semi")
-        // (1x minus the pairs among exact-identical docs, which collapse
-        // to one rep and reconstitute through the membership table)
-        println("[dev] span pairs 8x collapsed-first = " +
-          time("spans 8x collapsed")(
-            ops.Dedup.sharedSpanPairs(repsD).count()))
-        release()
-        // (c) global ids at 8x rows: the count-and-offset path
-        val bigL = (0 until 8).map { k =>
-          Tables.lineitem(spark, sfDir)
-            .select((col("l_orderkey") + lit(k * 100000000L)).as("l_orderkey"),
-              col("l_linenumber"), col("l_extendedprice"))
-        }.reduce(_ unionByName _)
-        println("[dev] ids rows = " + time("assignIds 8x")(
-          ops.Ids.assignIds(bigL,
-            Seq("l_extendedprice", "l_orderkey", "l_linenumber")).count()))
-        release()
-        // (d) pagerank on a 16x denser edge list
-        val bigEdges = (0 until 16).map { k =>
-          Tables.orders(spark, sfDir)
-            .join(Tables.lineitem(spark, sfDir),
-              col("o_orderkey") === col("l_orderkey"))
-            .select((col("o_custkey") + lit(k * 10000000L)).as("src"),
-              (col("l_suppkey") + lit(1000000L)).as("dst"))
-        }.reduce(_ unionByName _)
-        println("[dev] pagerank nodes = " + time("pagerank 16x edges")(
-          ops.Graph.pageRank(bigEdges, iters = 3).count()))
-      case "ckptpart" =>
-        // does repartition+sort survive localCheckpoint / persist into
-        // the join?
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val base = Tables.lineitem(spark, sfDir)
-          .select(col("l_orderkey").as("src"), col("l_partkey").as("dst"))
-          .repartition(col("src")).sortWithinPartitions("src")
-        val other = Tables.orders(spark, sfDir)
-          .select(col("o_orderkey").as("src"), col("o_totalprice"))
-        spark.conf.set(
-          "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-          "false")
-        Seq("ckpt" -> base.localCheckpoint(true),
-            "persist" -> { val d = base.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              d.count(); d }).foreach { case (lbl, df) =>
-          val p = df.join(other, Seq("src"))
-            .queryExecution.executedPlan.toString
-          println(s"[dev] $lbl exchanges in join plan: " +
-            "Exchange".r.findAllIn(p).length)
-          println(p.linesIterator.take(14).mkString("\n"))
-        }
-      case "pr16" =>
-        // isolated pagerank probe: fresh JVM, nothing before it
-        val bigEdges16 = (0 until 16).map { k =>
-          Tables.orders(spark, sfDir)
-            .join(Tables.lineitem(spark, sfDir),
-              col("o_orderkey") === col("l_orderkey"))
-            .select((col("o_custkey") + lit(k * 10000000L)).as("src"),
-              (col("l_suppkey") + lit(1000000L)).as("dst"))
-        }.reduce(_ unionByName _)
-        println("[dev] pagerank nodes = " + time("pagerank 16x isolated")(
-          ops.Graph.pageRank(bigEdges16, iters = 3).count()))
-      case "spans" =>
-        // isolated sharedSpanPairs cost: 1x twice (warmup vs steady), then
-        // the collapsed-first 8x composition, with cache release between
-        val base = Tables.documents(spark, sfDir)
-        time("spans 1x run A")(ops.Dedup.sharedSpanPairs(base).count())
-        spark.catalog.clearCache()
-        time("spans 1x run B")(ops.Dedup.sharedSpanPairs(base).count())
-        spark.catalog.clearCache()
-        val n = base.count()
-        val big = (0 until 8).map { k =>
-          base.select((col("doc_id") + lit(k * n)).as("doc_id"),
-            col("text"), col("source"), col("lang"), col("n_chars"))
-        }.reduce(_ unionByName _)
-        val members = ops.Dedup.exactDupMembership(big)
-        val reps = big.join(
-          members.filter(col("doc_id") === col("rep_id"))
-            .select(col("doc_id")), Seq("doc_id"), "left_semi")
-        time("spans 8x collapsed-first")(
-          ops.Dedup.sharedSpanPairs(reps).count())
-      case "collapse" =>
-        // stage-by-stage cost of the collapsed near-dup composition on
-        // the 8x worst-case corpus
-        val base = Tables.documents(spark, sfDir)
-        val n = base.count()
-        val big = (0 until 8).map { k =>
-          base.select((col("doc_id") + lit(k * n)).as("doc_id"),
-            col("text"), col("source"), col("lang"), col("n_chars"))
-        }.reduce(_ unionByName _)
-        val members = ops.Dedup.exactDupMembership(big)
-        time("membership")(members.count())
-        val reps = big.join(
-          members.filter(col("doc_id") === col("rep_id"))
-            .select(col("doc_id")), Seq("doc_id"), "left_semi")
-        time("reps")(reps.count())
-        val repPairs = ops.Dedup.ngramJaccardPairs(reps, threshold = 0.5)
-        time("repPairs")(repPairs.count())
-        time("full collapsed")(
-          ops.Dedup.collapsedNgramJaccardPairs(big, threshold = 0.5).count())
-      case "jaccard" =>
-        // stage-by-stage cost of the prefix-filtered similarity join
-        val docs = Tables.documents(spark, sfDir)
-        val grams = docs.select(col("doc_id"),
-            ops.TextAnalysis.hashedNgrams(col("text"), 3).as("grams"))
-          .withColumn("gsz", size(col("grams")))
-          .filter(col("gsz") > 0)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        time("grams cache build")(grams.count())
-        val posting = grams.select(col("doc_id"), col("gsz"),
-          explode(col("grams")).as("gram"))
-        time("posting explode")(posting.count())
-        val dfreq = posting.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-        time("df groupBy")(dfreq.count())
-        val prefixes = posting.join(dfreq, "gram")
-          .groupBy(col("doc_id"), col("gsz"))
-          .agg(array_sort(collect_list(struct(col("df"), col("gram"))))
-            .as("sorted"))
-          .select(col("doc_id"),
-            explode(slice(transform(col("sorted"), s => s("gram")), lit(1),
-              (col("gsz") - ceil(col("gsz") * lit(0.5)) + lit(1)).cast("int")))
-              .as("gram"))
-        time("prefix build")(prefixes.count())
-        val full = ops.Dedup.ngramJaccardPairs(docs, threshold = 0.5)
-        println("[dev] pairs = " + time("full pipeline")(full.count()))
-        time("full pipeline again")(
-          ops.Dedup.ngramJaccardPairs(docs, threshold = 0.5).count())
-      case "minhash" =>
-        val docs = Tables.documents(spark, sfDir)
-        val grams = docs.select(col("doc_id"),
-          ops.TextAnalysis.hashedNgrams(col("text"), 3).as("grams"))
-        time("grams only")(grams.count())
-        val sigs = grams.select(col("doc_id"),
-          ops.Dedup.minHashSignature(col("grams"), 64).as("sig"))
-        time("signatures")(sigs.count())
-        val pairs = ops.Dedup.minHashCandidatePairs(docs)
-        println("[dev] pairs = " + time("candidate pairs")(pairs.count()))
-      case "sweep" =>
-        val root = java.nio.file.Files.createTempDirectory("sweep_dev").toString
-        val in = wri.Fixtures.writeCogInputs(root).head._1
-        val sweep = wri.Cog.settingsSweep(spark, in, s"$root/out")
-        sweep.groupBy("status", "BIGTIFF").count().orderBy("BIGTIFF").show(false)
-        // BigTIFF outputs must carry magic 43
-        val bigOut = sweep.filter(col("BIGTIFF") === "YES")
-          .select("out_cog").head().getString(0)
-        val magic = java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(bigOut))(2)
-        println(s"[dev] sample BIGTIFF=YES output magic byte: $magic")
-      case "winsor" =>
-        // where does q124's cost go? Compare the current fallback-guarded
-        // winsorize against an r6-style forced-broadcast twin (no
-        // checkpoint, no count job) — run interleaved twice each
-        import org.apache.spark.sql.expressions.Window
-        def release(): Unit = {
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-        }
-        def forcedTwin(): Long = {
-          val df = Tables.lineitem(spark, sfDir)
-          val (lo, hi, binLo, binHi, bins) = (0.01, 0.99, 900.0, 105000.0, 4096)
-          val width = (binHi - binLo) / bins
-          val hist = df.select(col("l_returnflag"),
-              least(lit(bins - 1L), greatest(lit(0L),
-                floor((col("l_extendedprice").cast("double") - lit(binLo)) / lit(width))
-                  .cast("long"))).as("__bin"))
-            .groupBy(col("l_returnflag"), col("__bin"))
-            .agg(count(lit(1)).as("__cnt"))
-          val wCum = Window.partitionBy(col("l_returnflag")).orderBy(col("__bin"))
-            .rowsBetween(Window.unboundedPreceding, 0)
-          val wAll = Window.partitionBy(col("l_returnflag"))
-            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-          val bounds = hist
-            .withColumn("__cum", sum(col("__cnt")).over(wCum))
-            .withColumn("__n", sum(col("__cnt")).over(wAll))
-            .groupBy(col("l_returnflag"))
-            .agg(
-              (lit(binLo) + min(when(col("__cum") >= lit(lo) * col("__n"), col("__bin"))) * lit(width)).as("__plo"),
-              (lit(binLo) + (min(when(col("__cum") >= lit(hi) * col("__n"), col("__bin"))) + lit(1L)) * lit(width)).as("__phi"))
-          df.join(broadcast(bounds), Seq("l_returnflag"))
-            .withColumn("l_extendedprice",
-              least(greatest(col("l_extendedprice"), col("__plo")), col("__phi")))
-            .count()
-        }
-        def boundsPlan() = {
-          val df = Tables.lineitem(spark, sfDir)
-          val (lo, hi, binLo, binHi, bins) = (0.01, 0.99, 900.0, 105000.0, 4096)
-          val width = (binHi - binLo) / bins
-          val hist = df.select(col("l_returnflag"),
-              least(lit(bins - 1L), greatest(lit(0L),
-                floor((col("l_extendedprice").cast("double") - lit(binLo)) / lit(width))
-                  .cast("long"))).as("__bin"))
-            .groupBy(col("l_returnflag"), col("__bin"))
-            .agg(count(lit(1)).as("__cnt"))
-          val wCum = Window.partitionBy(col("l_returnflag")).orderBy(col("__bin"))
-            .rowsBetween(Window.unboundedPreceding, 0)
-          val wAll = Window.partitionBy(col("l_returnflag"))
-            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-          hist
-            .withColumn("__cum", sum(col("__cnt")).over(wCum))
-            .withColumn("__n", sum(col("__cnt")).over(wAll))
-            .groupBy(col("l_returnflag"))
-            .agg(
-              (lit(binLo) + min(when(col("__cum") >= lit(lo) * col("__n"), col("__bin"))) * lit(width)).as("__plo"),
-              (lit(binLo) + (min(when(col("__cum") >= lit(hi) * col("__n"), col("__bin"))) + lit(1L)) * lit(width)).as("__phi"))
-        }
-        (1 to 2).foreach { pass =>
-          release()
-          time(s"q124 current (pass $pass)")(
-            SparkEntry.queries("q124_winsorize")(spark, sfDir).count())
-          release()
-          time(s"winsorize current clamp-only (pass $pass)")(
-            ops.Robust.winsorize(Tables.lineitem(spark, sfDir),
-              "l_returnflag", "l_extendedprice", 0.01, 0.99,
-              900.0, 105000.0, 4096).count())
-          release()
-          time(s"winsorize forced-broadcast twin (pass $pass)")(forcedTwin())
-          release()
-          val probed = time(s"probe only (pass $pass)")(
-            boundsPlan().coalesce(1).take(1000001))
-          val localRel = spark.createDataFrame(
-            java.util.Arrays.asList(probed: _*), boundsPlan().schema)
-          time(s"clamp only vs local relation (pass $pass)")(
-            Tables.lineitem(spark, sfDir)
-              .join(broadcast(localRel), Seq("l_returnflag"))
-              .withColumn("l_extendedprice",
-                least(greatest(col("l_extendedprice"), col("__plo")), col("__phi")))
-              .count())
-          release()
-          time(s"clamp unhinted single action, AQE decides (pass $pass)")(
-            Tables.lineitem(spark, sfDir)
-              .join(boundsPlan(), Seq("l_returnflag"))
-              .withColumn("l_extendedprice",
-                least(greatest(col("l_extendedprice"), col("__plo")), col("__phi")))
-              .count())
-        }
-      case "batchiso" =>
-        // isolated batch-ANN regimes on the hot-cell store
-        val embI = Tables.embeddings(spark, sfDir)
-        val neI = embI.count()
-        val emb16 = (0 until 16).map { kk =>
-          embI.select((col("vec_id") + lit(kk * neI)).as("vec_id"),
-            col("embedding"), col("label"))
-        }.reduce(_ unionByName _)
-        val drifted = emb16.select(
-          (col("vec_id") + lit(100000000L)).as("vec_id"),
-          transform(col("embedding"), x => (x + lit(4.0f)).cast("float"))
-            .as("embedding"), col("label"))
-        val store = java.nio.file.Files.createTempDirectory("batchiso")
-          .toString
-        ops.VectorStore.write(spark, emb16, store)
-        ops.VectorStore.append(spark, store, drifted)
-        val qs = drifted.filter(col("vec_id") % 16 === 0)
-        (1 to 2).foreach { pass =>
-          spark.catalog.clearCache()
-          val b = ops.VectorStore.queryTopKBatch(spark, store, qs, k = 10,
-            nprobe = 2)
-          time(s"bcast (pass $pass)")(b.count())
-          val sh = ops.VectorStore.queryTopKBatch(spark, store, qs, k = 10,
-            nprobe = 2, broadcastProbes = Some(false))
-          time(s"shuffle (pass $pass)")(sh.count())
-          if (pass == 2) {
-            println("=== bcast executed plan ===")
-            println(b.queryExecution.executedPlan.toString
-              .split("== Initial Plan ==").head.take(4000))
-            println("=== shuffle executed plan ===")
-            println(sh.queryExecution.executedPlan.toString
-              .split("== Initial Plan ==").head.take(4000))
-          }
-        }
-      case "q97iso" =>
-        // the suite's heaviest query and its ambient-swing poster child.
-        // Steady state = passes 2-3. Round-12 quiet-box reading at
-        // sf0.1: 4.51 s / 2.83 s — round-11's 8.23 s in-sequence
-        // reading was ambient load on untouched code (SparseSim absent
-        // from that round's diff), not a regression; the round-12
-        // in-sequence bench read 4.68 s, back inside the documented
-        // 4-7 s band.
-        (1 to 3).foreach { pass =>
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          time(s"q97 isolated (pass $pass)")(
-            SparkEntry.queries("q97_sparse_cosine_pairs")(spark, sfDir)
-              .count())
-        }
-      case "q128iso" =>
-        (1 to 3).foreach { pass =>
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          time(s"q128 isolated (pass $pass)")(
-            SparkEntry.queries("q128_tpch_potential_promotion")(spark, sfDir)
-              .count())
-        }
-      case "q40iso" =>
-        // the multimodal decode path's isolated number (round-10 bench
-        // showed a 1.47x drift on untouched code — the ambient class).
-        // Steady state = passes 2-3. Historical isolated steady state on
-        // this box: ~0.58-0.62 s at sf0.1 (measured round 11; the
-        // round-10 bench reading of 0.685 s sits inside the ambient
-        // band of that baseline — no regression).
-        (1 to 3).foreach { pass =>
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          time(s"q40 isolated (pass $pass)")(
-            SparkEntry.queries("q40_multimodal_features")(spark, sfDir)
-              .count())
-        }
-      case "q23" =>
-        val df = SparkEntry.queries("q23_scalar_subquery")(spark, sfDir)
-        time("q23 run1")(df.count())
-        time("q23 run2")(
-          SparkEntry.queries("q23_scalar_subquery")(spark, sfDir).count())
-        df.explain("formatted")
-      case "bucket" =>
-        val li = Tables.lineitem(spark, sfDir)
-          .select(col("l_orderkey"), col("l_quantity"))
-        val o = Tables.orders(spark, sfDir)
-          .select(col("o_orderkey").as("l_orderkey"), col("o_totalprice"))
-        ops.Bucketing.writeBucketed(li, "li_b", "l_orderkey", 8)
-        ops.Bucketing.writeBucketed(o, "o_b", "l_orderkey", 8)
-        val j = ops.Bucketing.bucketedJoin(spark, "li_b", "o_b", "l_orderkey")
-        println(s"[dev] shuffle-free=${ops.Bucketing.isShuffleFree(j)} " +
-          s"rows=${j.count()} (plain=${li.join(o, "l_orderkey").count()})")
-        j.explain("formatted")
-      case "skewiso" =>
-        // isolated steady-state for the two batch-query regimes on the
-        // SCALE hot-cell shape (the two heaviest, most ambient-swung
-        // probes): 3 passes each, cache-cleared between — read passes
-        // 2-3 as steady state before believing a scalemd outlier.
-        val emb0 = Tables.embeddings(spark, sfDir)
-        val ne0 = emb0.count()
-        val emb16 = (0 until 16).map { k =>
-          emb0.select((col("vec_id") + lit(k * ne0)).as("vec_id"),
-            col("embedding"), col("label"))
-        }.reduce(_ unionByName _)
-        val drifted = emb16.select(
-          (col("vec_id") + lit(100000000L)).as("vec_id"),
-          transform(col("embedding"), x => (x + lit(4.0f)).cast("float"))
-            .as("embedding"), col("label"))
-        val store = java.nio.file.Files.createTempDirectory("skewiso")
-          .toString
-        ops.VectorStore.write(spark, emb16, store)
-        ops.VectorStore.append(spark, store, drifted)
-        val qs = drifted.filter(col("vec_id") % 16 === 0)
-        def release(): Unit = {
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          System.gc()
-        }
-        (1 to 3).foreach { pass =>
-          release()
-          time(s"batch_topk bcast   (pass $pass)")(
-            ops.VectorStore.queryTopKBatch(spark, store, qs, k = 10,
-              nprobe = 2).count())
-          release()
-          time(s"batch_topk shuffle (pass $pass)")(
-            ops.VectorStore.queryTopKBatch(spark, store, qs, k = 10,
-              nprobe = 2, broadcastProbes = Some(false)).count())
-        }
-      case "shardsoak" =>
-        // Randomized-interaction soak of the exactly-once shard append:
-        // 50 micro-batches where every 7th is a RE-DELIVERY of an
-        // earlier committed batch (must no-op) and every 11th first
-        // lands its data as a crashed half-append (shard dirs above the
-        // committed max, no manifest, no marker) that the real append
-        // must heal and replay. The pairwise specs pin each transition;
-        // this drives the interleavings. Ends by asserting the
-        // committed manifest equals the definitional recompute from
-        // the files (validateShards all-ok + exact doc/token totals).
-        import spark.implicits._
-        val toks = Tables.documents(spark, sfDir)
-          .withColumn("tok", size(split(col("text"), " ")).cast("long"))
-          .select(col("doc_id"), col("tok"))
-        val out = java.nio.file.Files.createTempDirectory("shardsoak")
-          .toString
-        val budget = 8000L
-        def mkBatch(i: Int) = toks
-          .filter(col("doc_id") % 17 === (i % 17).toLong)
-          .select((col("doc_id") + lit(i * 10000000L)).as("doc_id"),
-            col("tok"))
-        ops.Assembly.writeShards(toks.filter(col("doc_id") % 10 === 0),
-          "doc_id", "tok", budget, seed = 42L, out)
-        var expDocs = toks.filter(col("doc_id") % 10 === 0).count()
-        var expToks = toks.filter(col("doc_id") % 10 === 0)
-          .agg(sum(col("tok"))).head.getLong(0)
-        var replays = 0; var crashes = 0
-        val committed = scala.collection.mutable.Buffer.empty[Int]
-        (1 to 50).foreach { i =>
-          if (i % 7 == 0 && committed.nonEmpty) {
-            // re-delivery of a previously committed batch: must no-op
-            val j = committed((i * 31) % committed.size)
-            val before = ops.Assembly.readManifest(spark, out)
-              .agg(sum(col("n_docs"))).head.getLong(0)
-            ops.Assembly.appendShardsExactlyOnce(mkBatch(j),
-              "doc_id", "tok", out)
-            val after = ops.Assembly.readManifest(spark, out)
-              .agg(sum(col("n_docs"))).head.getLong(0)
-            require(after == before,
-              s"re-delivered batch $j was double-counted")
-            replays += 1
-          } else {
-            val b = mkBatch(i)
-            if (i % 11 == 0) {
-              // fabricate a crashed half-append: the batch's shard data
-              // on disk above the committed max, nothing committed
-              val nextShard = ops.Assembly.readManifest(spark, out)
-                .agg(max(col("shard_id"))).head.getLong(0) + 1L
-              ops.Assembly.tokenBudgetShards(b, "doc_id", "tok",
-                  budget, seed = 42L)
-                .withColumn("shard_id", col("shard_id") + lit(nextShard))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("shard_id").parquet(s"$out/shards")
-              crashes += 1
-            }
-            ops.Assembly.appendShardsExactlyOnce(b, "doc_id", "tok", out)
-            expDocs += b.count()
-            expToks += b.agg(sum(col("tok"))).head.getLong(0)
-            committed += i
-          }
-        }
-        val qa = ops.Assembly.validateShards(spark, out, "doc_id", "tok")
-        val badRows = qa.filter(!col("ok")).count()
-        val m = ops.Assembly.readManifest(spark, out)
-          .agg(sum(col("n_docs")), sum(col("n_tokens"))).head
-        val files = spark.read.parquet(s"$out/shards")
-          .filter(col("shard_id") <=
-            ops.Assembly.readManifest(spark, out)
-              .agg(max(col("shard_id"))).head.getLong(0))
-          .agg(count(lit(1)), sum(col("tok"))).head
-        println(s"[soak] 50 micro-batches ($replays replayed, $crashes " +
-          s"crash-healed): manifest docs=${m.getLong(0)} " +
-          s"toks=${m.getLong(1)} vs expected docs=$expDocs toks=$expToks" +
-          s"; files docs=${files.getLong(0)} toks=${files.getLong(1)}" +
-          s"; validateShards !ok rows=$badRows")
-        require(badRows == 0, "validateShards flagged shards after soak")
-        require(m.getLong(0) == expDocs && m.getLong(1) == expToks,
-          "manifest diverged from the definitional recompute")
-        require(files.getLong(0) == expDocs && files.getLong(1) == expToks,
-          "committed shard files diverged from the expected corpus")
-        println("[soak] PASS")
-      case "wripipe" =>
-        // full stage 00 -> 01 -> 02 over self-generated fixtures
-        val root = java.nio.file.Files.createTempDirectory("wripipe_dev").toString
-        val dataDir = wri.Fixtures.writeInventoryTree(root)
-        val inv = wri.Inventory.run(spark, dataDir)
-        wri.Inventory.assertUniqueCogFilenames(inv.consistent)
-        wri.Inventory.writeOutputs(inv, s"$root/metadata")
-        println(s"[dev] stage00: consistent=${inv.consistent.count()} " +
-          s"inconsistent=${inv.inconsistent.count()} " +
-          s"failed=${inv.raw.filter(!col("success")).count()}")
-        val cogInputs = wri.Fixtures.writeCogInputs(root)
-        import spark.implicits._
-        val log = wri.Cog.run(spark,
-          cogInputs.toDF("filepath", "cog_filename"), s"$root/cogs")
-        wri.Cog.summary(log).show(false)
-        val items = wri.Stac.run(spark, inv.consistent, s"$root/stac")
-        println(s"[dev] stage02: items=${items.count()} " +
-          s"ids=${wri.Stac.listItemIds(s"$root/stac/collections/wri_ignitR/items").mkString(",")}")
-        println(s"[dev] outputs under $root")
-      case "albers" =>
-        functions.GraftFunctions.register(spark)
-        spark.sql("SELECT albers_lon(-5216639.67D, 991231.688D) lon, " +
-          "albers_lat(-5216639.67D, 991231.688D) lat").show(false)
-        try spark.sql("SELECT albers_lon('oops', 1.0D)").show()
-        catch { case e: Exception =>
-          println("[dev] type-check error: " + e.getMessage.take(200)) }
-      case "semprobe" =>
-        // distance-scale probe for semanticDedupBatch threshold calibration
-        val emb = Tables.embeddings(spark, sfDir)
-        val dir = java.nio.file.Files.createTempDirectory("semprobe").toString
-        ops.VectorStore.write(spark, emb, dir)
-        val copies = emb.filter(col("vec_id") % 25 === 0)
-          .select((col("vec_id") + 200000L).as("vec_id"), col("embedding"))
-        val shifted = emb.filter(col("vec_id") % 25 === 7)
-          .select((col("vec_id") + 300000L).as("vec_id"),
-            transform(col("embedding"), x => (x + lit(4.0f)).cast("float"))
-              .as("embedding"))
-        val out = ops.VectorStore.semanticDedupBatch(spark, dir,
-          copies.unionByName(shifted), maxApproxD2 = 100.0)
-        out.groupBy((col("vec_id") >= 300000L).as("shifted"))
-          .agg(min("approx_d2"), expr("percentile(approx_d2, 0.5)"),
-            max("approx_d2"), count(lit(1)))
-          .show(false)
       case "qiso" =>
-        // the generalized isolation protocol (q115iso/q105iso's shape):
-        // Dev qiso <sfDir> <query-name-prefix> — 3 passes with cache
-        // hygiene; steady state = passes 2-3. Classify a benchdiff flag
-        // as regression vs ambient BEFORE treating it as real.
+        // classify a benchdiff flag as regression vs ambient BEFORE
+        // treating it as real
         val q = resolveQuery(args(2))
         (1 to 3).foreach { pass =>
           spark.catalog.clearCache()
@@ -1332,41 +800,13 @@ object Dev {
           time(s"${q.name} isolated (pass $pass)")(
             q.fn(spark, sfDir).count())
         }
-      case "q105iso" =>
-        // round-13 bench read 1.135 s vs round-12's 0.843 s (1.35x) —
-        // the only >1.3x common-tail drift that round (passed the gate
-        // on the 0.15 s floor). Same protocol as q115iso: 3 isolated
-        // passes, steady state = passes 2-3, classify regression vs
-        // ambient before round 14 believes it.
-        (1 to 3).foreach { pass =>
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          time(s"q105 isolated (pass $pass)")(
-            SparkEntry.queries("q105_tpch_market_share")(spark, sfDir)
-              .count())
-        }
-      case "q115iso" =>
-        // round-12 bench read 1.11 s vs round-11's 0.79 s (1.41x) — the
-        // only tail drift above the noise band that round; probe
-        // isolated to classify regression vs ambient (the q40/q97
-        // precedent). Steady state = passes 2-3.
-        (1 to 3).foreach { pass =>
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          time(s"q115 isolated (pass $pass)")(
-            SparkEntry.queries("q115_binned_quantiles")(spark, sfDir)
-              .count())
-        }
       case "benchdiff" =>
         // the mechanical per-query budget gate: current BENCH_FULL vs
         // the committed min-of-rounds BENCH_BASELINE; a query over
         // tolerance x its budget AND over an absolute floor (sub-0.3 s
         // queries swing multiples on ambient noise alone) flags loudly
         // — regressions like round-12's q115 surface here instead of
-        // via judge tail-diffs. Usage:
-        //   Dev benchdiff [sfDir] [baselinePath] [currentPath]
+        // via judge tail-diffs.
         val basePath = if (args.length > 2) args(2) else "BENCH_BASELINE.json"
         val currPath = if (args.length > 3) args(3) else "BENCH_FULL.json"
         val tol = 1.5
@@ -1401,18 +841,11 @@ object Dev {
           println(s"[benchdiff] ${missing.size} baseline queries " +
             s"MISSING from current: ${missing.toSeq.sorted.mkString(", ")}")
       case "qrun" =>
-        // run one registered query by name prefix: Dev qrun <sfDir> <name>
         val q = resolveQuery(args(2))
         val df = time(q.name)(q.fn(spark, sfDir))
         df.show(30, truncate = 60)
         println(s"[dev] ${q.name} rows=${df.count()}")
-      case "explain" =>
-        ops.Dedup.minHashCandidatePairs(Tables.documents(spark, sfDir))
-          .explain("formatted")
       case "planfile" =>
-        // Dev planfile <sfDir> <query-name-prefix> <outfile> — dump the
-        // registered query's formatted physical plan to a file (the
-        // round-15 plans/r15 before/after evidence).
         val q = resolveQuery(args(2))
         val df = q.fn(spark, sfDir)
         java.nio.file.Files.writeString(java.nio.file.Paths.get(args(3)),
@@ -1420,11 +853,9 @@ object Dev {
             org.apache.spark.sql.execution.FormattedMode))
         println(s"[dev] wrote ${args(3)} (${q.name})")
       case "qjobs" =>
-        // Dev qjobs <sfDir> <query-name-prefix> — run the query twice
-        // (pass 2 = steady state) with a listener recording every job's
-        // wall time; prints the pass-2 job profile sorted by cost. The
-        // tool that answers "WHERE do a pipeline query's seconds go"
-        // when the final plan alone can't show the verb-internal jobs.
+        // a listener records every pass-2 job's wall time: it answers
+        // "WHERE do a pipeline query's seconds go" when the final plan
+        // alone can't show the verb-internal jobs
         val q = resolveQuery(args(2))
         val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
         val done = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
@@ -1465,10 +896,9 @@ object Dev {
           println(s"[qjobs] ${incomplete.size} job(s) without an end " +
             s"event (incomplete): ${incomplete.toSeq.sorted.mkString(", ")}")
       case "iplan" =>
-        // Dev iplan <sfDir> <op> <outfile> — dump an operator's INTERNAL
-        // (eager=false) formatted plan: the registered queries checkpoint
-        // their bounded results, so their own plans collapse to a Scan
-        // ExistingRDD and hide the pipeline this shows.
+        // the registered queries checkpoint their bounded results, so
+        // their own plans collapse to a Scan ExistingRDD and hide the
+        // pipeline this shows
         val df = args(2) match {
           case "minhash" => ops.Dedup.minHashCandidatePairs(
             Tables.documents(spark, sfDir), eager = false)
@@ -1485,18 +915,6 @@ object Dev {
           df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode))
         println(s"[dev] wrote ${args(3)} (${args(2)} internal, eager=false)")
-      case "q97plan" =>
-        // the q97 INTERNAL shape (eager = false, the PlanSpec view) —
-        // the registered query checkpoints its result, which hides the
-        // posting-list pipeline behind a Scan ExistingRDD
-        val df = ops.SparseSim.ngramCosinePairs(
-          Tables.documents(spark, sfDir), n = 3, threshold = 0.5,
-          maxDf = 100, eager = false)
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(args(2)),
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-        println(s"[dev] wrote ${args(2)} (q97 internal, eager=false)")
-      case _ => println(s"unknown: $what")
     }
     spark.stop()
   }

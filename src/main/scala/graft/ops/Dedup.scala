@@ -22,8 +22,8 @@ import org.apache.spark.storage.StorageLevel
   * operator here is reproducible bit-for-bit in any engine with 64-bit
   * integer arithmetic (the DuckDB oracles replay them exactly).
   *
-  * Production composition (measured on an 8x dup-cluster blow-up, `Dev
-  * scale`): run [[exactDuplicates]] FIRST and near-dup only the cluster
+  * Production composition (measured on an 8x dup-cluster blow-up,
+  * SCALE.md): run [[exactDuplicates]] FIRST and near-dup only the cluster
   * canonicals — exact-dup clusters make every candidate join quadratic
   * in the cluster size (8 copies/doc turned 256 near-dup pairs into
   * 156k, with candidate fan-out to match), and the md5 groupBy removes
@@ -607,8 +607,8 @@ object Dedup {
     * join degrades ~quadratically in k (every posting list and every
     * candidate bucket is k-fold, and no prefix/size prune can separate
     * identical documents), while this composition pays one md5 shuffle
-    * and keeps AllPairs at unique-corpus size — measured 30x on the 8x
-    * worst-case probe (`Dev scale`). This ordering — exact collapse,
+    * and keeps AllPairs at unique-corpus size — measured 30x on an 8x
+    * duplicated worst-case corpus. This ordering — exact collapse,
     * THEN near-dup — is how a 100 TB dedup pass must be run. */
   def collapsedNgramJaccardPairs(
       docs: DataFrame,
@@ -667,7 +667,7 @@ object Dedup {
     * Output: (doc_a, doc_b, max_span_tokens, n_spans) for pairs sharing
     * a span of at least `minSpanTokens` tokens.
     *
-    * Duplication caveat (measured, `Dev scale5`): on a corpus with heavy
+    * Duplication caveat (measured): on a corpus with heavy
     * exact duplication every shared gram's df multiplies by the dup
     * factor and the stop-gram cap suppresses everything (8x-duplicated
     * probe: 247 pairs -> 0). Compose with [[exactDupMembership]] first —

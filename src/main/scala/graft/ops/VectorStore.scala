@@ -99,9 +99,6 @@ object VectorStore {
     if (fs.exists(p)) fs.delete(p, true)
   }
 
-  private def readSmallFile(fs: FileSystem, p: Path): String =
-    Commit.readSmall(fs, p)
-
   /** Replace `path` with `content` ATOMICALLY — scheme-aware: object
     * stores get the direct single-PUT (their rename is copy+delete, the
     * one thing `pointerSwap = true` exists to avoid), everything else a
@@ -135,38 +132,6 @@ object VectorStore {
     * fresh flip ([[healPointer]], called by compact/retrain, is the
     * sanctioned repair). Unrecoverable = refuse loudly: guessing a
     * generation would serve the wrong incarnation silently. */
-  /** A pre-seal-era pointer: bare digits, no sentinel. Accepted (with a
-    * WARN) so an in-place upgrade does not wedge an intact store — but
-    * only after [[currentGen]] checks the parse against on-disk
-    * evidence: a torn SEALED pointer whose surviving prefix is all
-    * digits reads as a (smaller) legacy generation, and on object
-    * stores — where pointer mode actually runs — the direct-PUT path
-    * leaves no sibling tmp to rebut it, so the disk itself is the
-    * witness (any `codes@N` with N above the parse = torn, refuse).
-    * The window closes permanently the first time an offline verb runs,
-    * because [[healPointer]] re-seals legacy content. */
-  private def parseLegacyGen(text: String): Option[Long] = {
-    val t = text.trim
-    if (t.nonEmpty && t.length <= 18 && t.forall(_.isDigit)) Some(t.toLong)
-    else None
-  }
-
-  /** Highest `codes@<gen>` generation present on disk, if any — the
-    * independent witness a Lost-branch legacy parse is checked against:
-    * a SEALED pointer torn to an all-digit prefix ('123 #' → '12')
-    * parses as a legacy pointer, and on object stores the direct-PUT
-    * path leaves no sibling tmp to rebut it — but the store it would
-    * silently mis-serve has the REAL generation's directory sitting
-    * right there. */
-  private def maxGenOnDisk(fs: FileSystem, dir: String): Option[Long] = {
-    val rootP = new Path(dir)
-    if (!fs.exists(rootP)) return None
-    val CodesGen = "^codes@(\\d+)$".r
-    fs.listStatus(rootP).iterator.map(_.getPath.getName)
-      .collect { case CodesGen(g) => g.toLong }
-      .maxOption
-  }
-
   private def currentGen(fs: FileSystem, dir: String): Option[Long] = {
     val p = new Path(s"$dir/_current")
     Commit.read(fs, p, t => parseGen(t).isDefined) match {
@@ -177,33 +142,9 @@ object VectorStore {
           "torn; serving the generation recovered from its sibling tmp " +
           "(run compact or retrain once to heal the pointer)")
         parseGen(t)
-      case Commit.Lost =>
-        parseLegacyGen(Commit.readSmall(fs, p)) match {
-          // the legacy parse is only believed when the disk agrees: a
-          // torn sealed pointer whose surviving prefix is all digits
-          // ('123 #' → '12') reads as a smaller legacy generation, and
-          // pointer mode runs precisely on object stores, where no
-          // sibling tmp exists to disambiguate — but the truncation
-          // always parses BELOW the real generation, whose codes@N
-          // directory is still on disk. A genuine pre-seal pointer names
-          // the highest (only) live generation, so the check costs an
-          // upgrade nothing.
-          case Some(g) if maxGenOnDisk(fs, dir).forall(_ <= g) =>
-            System.err.println(s"WARN graft.VectorStore: $dir/_current " +
-              "is a pre-seal bare-number pointer; serving it (run " +
-              "compact or retrain once to re-seal it)")
-            Some(g)
-          case Some(g) => throw new IllegalStateException(
-            s"$dir/_current parses as legacy generation $g but a higher " +
-              s"codes@${maxGenOnDisk(fs, dir).get} exists on disk — this " +
-              "is a torn sealed pointer, not a pre-seal one; refusing " +
-              "to serve a dead incarnation (restore _current from the " +
-              "store's backup, or point it at the highest complete " +
-              "generation by hand)")
-          case None => throw new IllegalStateException(
-            s"$dir/_current is torn and unrecoverable (no complete " +
-              "sibling tmp); refusing to guess which incarnation serves")
-        }
+      case Commit.Lost => throw new IllegalStateException(
+        s"$dir/_current is torn and unrecoverable (no complete " +
+          "sibling tmp); refusing to guess which incarnation serves")
     }
   }
 
@@ -211,24 +152,12 @@ object VectorStore {
     * maintenance process, so no concurrent flip exists): a Recovered
     * pointer is rewritten in place through [[Commit.heal]] (the direct
     * main-file write that never touches the sibling tmp, the only
-    * durable copy of the recovered content — the heal-not-replace
-    * rationale applies HERE only), and a legacy bare-number pointer is
-    * re-sealed through [[Commit.replace]] (atomic PUT / tmp+rename):
-    * the legacy branch has no tmp worth preserving, and a plain
-    * create-overwrite crashing mid-write could truncate a multi-digit
-    * generation into a shorter string the legacy parser accepts — the
-    * exact silent-wrong-incarnation failure the `#` sentinel exists to
-    * prevent. The legacy value is validated against on-disk generations
-    * first (see [[currentGen]]), so a torn sealed pointer is refused
-    * rather than re-sealed wrong. */
+    * durable copy of the recovered content). A Lost pointer is left as
+    * it is; the [[currentGen]] call that follows refuses it. */
   private def healPointer(fs: FileSystem, dir: String): Unit = {
     val p = new Path(s"$dir/_current")
     Commit.read(fs, p, t => parseGen(t).isDefined) match {
       case Commit.Recovered(t) => Commit.heal(fs, p, t)
-      case Commit.Lost =>
-        parseLegacyGen(Commit.readSmall(fs, p))
-          .filter(g => maxGenOnDisk(fs, dir).forall(_ <= g))
-          .foreach(g => Commit.replace(fs, p, s"$g #\n"))
       case _ => ()
     }
   }

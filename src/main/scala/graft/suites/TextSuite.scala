@@ -1851,9 +1851,9 @@ object TextSuite {
     * member pairs are reconstituted through the membership table. The
     * oracle brute-forces the SAME duplicated corpus directly, so the
     * collapse/expand must be row-identical to first principles, not to
-    * our own code. (The worst-case 2x-duplication probe lives in
-    * DedupSpec / `Dev scale` — benching it here would make the suite
-    * timing reflect a deliberate stress shape, not production cost.) */
+    * our own code. (The worst-case duplication probes live in DedupSpec
+    * and SCALE.md — benching them here would make the suite timing
+    * reflect a deliberate stress shape, not production cost.) */
   private def q84(s: SparkSession, d: String): DataFrame = {
     val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val duplicated = base.unionByName(

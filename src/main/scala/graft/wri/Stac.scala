@@ -316,7 +316,7 @@ object Stac {
     // no file opens); any out-of-band mutation mismatches the hash and
     // the honest per-document JSON scan answers instead
     readSidecarManifest(itemsDir, conf) match {
-      case Some((gen, hash, _))
+      case Some((gen, hash))
           if hash == stateHashOf(stats) &&
             WriFs.exists(s"${sidecarRoot(itemsDir)}/gen-$gen", conf) =>
         spark.read.schema(itemsFlatSchema)
@@ -325,13 +325,11 @@ object Stac {
     }
   }
 
-  /** The per-document JSON scan behind [[readItems]] — always correct,
-    * O(items) file opens; the sidecar exists so hot consumer verbs skip
-    * it. */
-  private[wri] def readItemsScan(spark: SparkSession,
-      itemsDir: String): DataFrame = {
+  /** The fields of an item document that [[itemsFlatSchema]] flattens;
+    * the one parse shape of the JSON scan and the sidecar rebuild. */
+  private val itemDocSchema = {
     import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
+    StructType(Seq(
       StructField("id", StringType),
       StructField("collection", StringType),
       StructField("bbox", ArrayType(DoubleType)),
@@ -344,7 +342,14 @@ object Stac {
       StructField("assets", StructType(Seq(
         StructField("data", StructType(Seq(
           StructField("href", StringType)))))))))
-    spark.read.schema(schema).option("multiLine", "true")
+  }
+
+  /** The per-document JSON scan behind [[readItems]] — always correct,
+    * O(items) file opens; the sidecar exists so hot consumer verbs skip
+    * it. */
+  private[wri] def readItemsScan(spark: SparkSession,
+      itemsDir: String): DataFrame =
+    spark.read.schema(itemDocSchema).option("multiLine", "true")
       .json(s"$itemsDir/*.json")
       .select(
         col("id").as("item_id"),
@@ -357,7 +362,6 @@ object Stac {
         col("bbox")(0).as("bbox_w"), col("bbox")(1).as("bbox_s"),
         col("bbox")(2).as("bbox_e"), col("bbox")(3).as("bbox_n"),
         col("assets.data.href").as("href"))
-  }
 
   // --------------------------------------------------------------------
   // Parquet catalog sidecar — the consumer-verb fast path
@@ -438,20 +442,15 @@ object Stac {
       conf: Configuration): String =
     stateHashOf(itemsStatList(itemsDir, conf))
 
-  /** (generation, items-state hash, doc-column flag) from the sidecar
-    * manifest; None when absent or unreadable (either means: scan
-    * JSON). The `doc` flag records that the generation carries the raw
-    * document column with the KNOWN [[itemsFlatSchemaWithDoc]] shape —
-    * manifests written before the flag existed read as false and take
-    * the schema-inferring compatibility path. */
+  /** (generation, items-state hash) from the sidecar manifest; None
+    * when absent or unreadable (either means: scan JSON). */
   private def readSidecarManifest(itemsDir: String,
-      conf: Configuration): Option[(Long, String, Boolean)] = {
+      conf: Configuration): Option[(Long, String)] = {
     val p = sidecarManifest(itemsDir)
     if (!WriFs.exists(p, conf)) None
     else scala.util.Try {
       val node = new ObjectMapper().readTree(WriFs.readString(p, conf))
-      (node.path("gen").asLong(), node.path("hash").asText(),
-        node.path("doc").asBoolean(false))
+      (node.path("gen").asLong(), node.path("hash").asText())
     }.toOption
   }
 
@@ -472,22 +471,8 @@ object Stac {
   /** (doc) → itemsFlatSchema columns + doc; the single parse used by
     * both the full sidecar rebuild and the incremental delta path, so
     * a generation's rows are identical however they were produced. */
-  private def flattenItemDocs(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("id", StringType),
-      StructField("collection", StringType),
-      StructField("bbox", ArrayType(DoubleType)),
-      StructField("properties", StructType(Seq(
-        StructField("datetime", StringType),
-        StructField("data_type", StringType),
-        StructField("wri_domain", StringType),
-        StructField("wri_dimension", StringType),
-        StructField("is_hosted", BooleanType)))),
-      StructField("assets", StructType(Seq(
-        StructField("data", StructType(Seq(
-          StructField("href", StringType)))))))))
-    docs.select(from_json(col("doc"), schema).as("j"), col("doc"))
+  private def flattenItemDocs(docs: DataFrame): DataFrame =
+    docs.select(from_json(col("doc"), itemDocSchema).as("j"), col("doc"))
       .select(
         col("j.id").as("item_id"),
         col("j.collection").as("collection"),
@@ -500,29 +485,19 @@ object Stac {
         col("j.bbox")(2).as("bbox_e"), col("j.bbox")(3).as("bbox_n"),
         col("j.assets.data.href").as("href"),
         col("doc"))
-  }
 
   /** The fresh, doc-carrying mirror — Some only when the manifest's
     * fingerprint matches `liveHash` (the caller's already-taken
-    * directory listing — no second LIST here) AND the generation
-    * carries the `doc` column (generations written before the column
-    * existed fall back to the scan path and age out on their next
-    * rebuild). */
+    * directory listing — no second LIST here). Read with the stated
+    * schema: zero footer-inference jobs on this hot refresh path. */
   private def freshMirrorWithDocs(spark: SparkSession, itemsDir: String,
       conf: Configuration, liveHash: String): Option[DataFrame] =
     readSidecarManifest(itemsDir, conf) match {
-      case Some((gen, hash, docKnown))
+      case Some((gen, hash))
           if hash == liveHash &&
             WriFs.exists(s"${sidecarRoot(itemsDir)}/gen-$gen", conf) =>
-        if (docKnown)
-          // manifest vouches for the doc column: read with the stated
-          // schema — zero footer-inference jobs on this hot refresh path
-          Some(spark.read.schema(itemsFlatSchemaWithDoc)
-            .parquet(s"${sidecarRoot(itemsDir)}/gen-$gen"))
-        else {
-          val df = spark.read.parquet(s"${sidecarRoot(itemsDir)}/gen-$gen")
-          if (df.columns.contains("doc")) Some(df) else None
-        }
+        Some(spark.read.schema(itemsFlatSchemaWithDoc)
+          .parquet(s"${sidecarRoot(itemsDir)}/gen-$gen"))
       case _ => None
     }
 
@@ -545,7 +520,7 @@ object Stac {
       .write.mode("overwrite").parquet(genDir)
     if (itemsStateHash(itemsDir, conf) == hash) {
       atomicDoc(sidecarManifest(itemsDir),
-        s"""{"gen": $gen, "hash": "$hash", "doc": true}""", conf)
+        s"""{"gen": $gen, "hash": "$hash"}""", conf)
       val fs = WriFs.fs(root, conf)
       WriFs.listNames(root, conf)
         .filter(_.startsWith("gen-"))

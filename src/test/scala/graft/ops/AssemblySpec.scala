@@ -428,6 +428,71 @@ class AssemblySpec extends SparkSpec {
     assert(e.getMessage.contains("overlaps"))
   }
 
+  test("exactly-once append soak: over 50 micro-batches, every 7th " +
+      "re-delivers a committed batch (a no-op) and every 11th first " +
+      "lands as a crashed half-append that the real append heals") {
+    // The pairwise specs above pin each transition; this drives their
+    // interleavings, then checks the committed manifest against the
+    // definitional recompute from the files.
+    val toks = tokDocs.select(col("doc_id"), col("tok"))
+    val out = java.nio.file.Files.createTempDirectory("shardsoak").toString
+    val budget = 8000L
+    def mkBatch(i: Int) = toks
+      .filter(col("doc_id") % 17 === (i % 17).toLong)
+      .select((col("doc_id") + lit(i * 10000000L)).as("doc_id"), col("tok"))
+    def manifestDocs() = Assembly.readManifest(spark, out)
+      .agg(sum(col("n_docs"))).head.getLong(0)
+    val initial = toks.filter(col("doc_id") % 10 === 0)
+    Assembly.writeShards(initial, "doc_id", "tok", budget, seed = 42L, out)
+    var expDocs = initial.count()
+    var expToks = initial.agg(sum(col("tok"))).head.getLong(0)
+    var replays = 0; var crashes = 0
+    val committed = scala.collection.mutable.Buffer.empty[Int]
+    (1 to 50).foreach { i =>
+      if (i % 7 == 0 && committed.nonEmpty) {
+        val j = committed((i * 31) % committed.size)
+        val before = manifestDocs()
+        Assembly.appendShardsExactlyOnce(mkBatch(j), "doc_id", "tok", out)
+        assert(manifestDocs() == before,
+          s"re-delivered batch $j was double-counted")
+        replays += 1
+      } else {
+        val b = mkBatch(i)
+        if (i % 11 == 0) {
+          // a crashed half-append: the batch's shard data on disk above
+          // the committed max, nothing committed
+          val nextShard = Assembly.readManifest(spark, out)
+            .agg(max(col("shard_id"))).head.getLong(0) + 1L
+          Assembly.tokenBudgetShards(b, "doc_id", "tok", budget, seed = 42L)
+            .withColumn("shard_id", col("shard_id") + lit(nextShard))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("shard_id").parquet(s"$out/shards")
+          crashes += 1
+        }
+        Assembly.appendShardsExactlyOnce(b, "doc_id", "tok", out)
+        expDocs += b.count()
+        expToks += b.agg(sum(col("tok"))).head.getLong(0)
+        committed += i
+      }
+    }
+    assert((replays, crashes) == ((7, 4)))
+    assert(Assembly.validateShards(spark, out, "doc_id", "tok")
+      .filter(!col("ok")).isEmpty,
+      "validateShards flagged shards after the soak")
+    val m = Assembly.readManifest(spark, out)
+      .agg(sum(col("n_docs")), sum(col("n_tokens"))).head
+    assert((m.getLong(0), m.getLong(1)) == ((expDocs, expToks)),
+      "manifest diverged from the definitional recompute")
+    val maxCommitted = Assembly.readManifest(spark, out)
+      .agg(max(col("shard_id"))).head.getLong(0)
+    val files = spark.read.parquet(s"$out/shards")
+      .filter(col("shard_id") <= maxCommitted)
+      .agg(count(lit(1)), sum(col("tok"))).head
+    assert((files.getLong(0), files.getLong(1)) == ((expDocs, expToks)),
+      "committed shard files diverged from the expected corpus")
+  }
+
   test("validateShards: clean store validates ok; missing files and " +
       "drifted content flag as error-as-data rows") {
     val out = java.nio.file.Files.createTempDirectory("shqa").toString

@@ -1149,7 +1149,7 @@ class VectorStoreSpec extends SparkSpec {
     assert(topk(d) == baseline)
     // unrecoverable: non-numeric garbage with no complete tmp — refuse,
     // never guess a generation (a digits-only tear with no tmp is
-    // checked against the on-disk generations instead — next test)
+    // refused the same way — next test)
     fabricate("x#", withTmp = false)
     intercept[IllegalStateException](topk(d))
     java.nio.file.Files.writeString(ptr, intact) // restore
@@ -1193,27 +1193,6 @@ class VectorStoreSpec extends SparkSpec {
       case Seq(g, "#") => g.nonEmpty && g.forall(_.isDigit)
       case _ => false
     }
-
-  test("a legacy bare-number _current pointer serves (WARN) instead of " +
-      "wedging, and the next offline verb re-seals it") {
-    val d = java.nio.file.Files.createTempDirectory("vecstore_legacyptr")
-      .toString
-    VectorStore.write(spark, emb, d)
-    VectorStore.compact(spark, d, pointerSwap = true)
-    val baseline = topk(d)
-    val ptr = java.nio.file.Paths.get(s"$d/_current")
-    val gen = java.nio.file.Files.readString(ptr).trim.stripSuffix("#").trim
-    // the pre-seal era wrote the bare number; an in-place upgrade must
-    // not classify an intact legacy pointer as torn-and-unrecoverable
-    java.nio.file.Files.writeString(ptr, gen)
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$d/_current.tmp"))
-    assert(topk(d) == baseline, "legacy pointer did not serve")
-    VectorStore.compact(spark, d, pointerSwap = true)
-    assert(parseableGen(java.nio.file.Files.readString(ptr)),
-      "offline verb did not re-seal the legacy pointer")
-    assert(topk(d) == baseline)
-  }
 
   test("compact does not destroy tombstones it did not capture: the " +
       "rename-mode teardown sweeps only captured dirs, and the pointer-" +

@@ -463,50 +463,6 @@ class StacRefreshSpec extends SparkSpec {
     assert(served.filter(col("item_id") === "keep").count() == 1)
   }
 
-  test("a generation written before the doc column existed still " +
-      "refreshes correctly: the mirror-backed compare declines it, the " +
-      "file-reading path runs, and the NEXT generation carries docs") {
-    val root = java.nio.file.Files
-      .createTempDirectory("stac_mirror_nodoc").toString
-    val itemsDir = s"$root/collections/${Model.collectionId}/items"
-    Stac.run(spark, consistentOf(Seq("a.tif" -> 0.0, "b.tif" -> 0.0)), root)
-    // rewrite gen-1 without `doc` (the pre-column layout), keeping the
-    // manifest hash valid (items untouched)
-    val gen1 = s"${Stac.sidecarRoot(itemsDir)}/gen-1"
-    val noDoc = spark.read.parquet(gen1).drop("doc").collect()
-    val schema = spark.read.parquet(gen1).drop("doc").schema
-    spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          java.util.Arrays.asList(noDoc: _*)), schema)
-      .coalesce(1).write.mode("overwrite").parquet(gen1)
-    // ...and the manifest to the pre-flag form too: old code wrote
-    // {"gen", "hash"} with no "doc" field. Generation and manifest
-    // always commit together, so the pre-column layout means BOTH are
-    // old — a doc-flagged manifest pointing at a docless generation is
-    // unreachable without out-of-band surgery.
-    val manifestPath = java.nio.file.Paths.get(
-      s"${Stac.sidecarRoot(itemsDir)}/manifest.json")
-    val mf = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(java.nio.file.Files.readString(manifestPath))
-    java.nio.file.Files.writeString(manifestPath,
-      s"""{"gen": ${mf.path("gen").asLong()}, """ +
-        s""""hash": "${mf.path("hash").asText()}"}""")
-    Thread.sleep(1100) // local-fs mtime granularity
-    val audit = Stac.refreshCatalog(spark, consistentOf(Seq(
-      "a.tif" -> 0.0, "b.tif" -> 900.0)), root).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(audit == Map("a" -> "unchanged", "b" -> "rewritten"),
-      audit.toString)
-    val m = Stac.readItems(spark, itemsDir)
-    assert(m.inputFiles.forall(_.contains("/_catalog/gen-")) &&
-      m.collect().toSet ==
-        Stac.readItemsScan(spark, itemsDir).collect().toSet,
-      "the migration refresh did not leave a fresh doc-carrying mirror")
-    assert(spark.read.parquet(m.inputFiles.head.replaceAll("/[^/]*$", ""))
-      .columns.contains("doc"),
-      "the rebuilt generation still lacks the doc column")
-  }
-
   test("metadata-store compaction: the streaming store folds to one " +
       "latest-wins generation once the batch-partition count hits the " +
       "threshold, the catalog equals the never-compacted twin " +
