@@ -325,10 +325,6 @@ object Dev {
           val itemsDir = s"$stacRoot/collections/$cid/items"
           wri.Stac.writeItems(wri.Stac.buildItems(spark, consistent),
             itemsDir)
-          // the parquet mirror a publish verb would have left behind —
-          // the 1kitems probes time the scan path (manifest hidden) and
-          // the mirror path against the SAME catalog
-          wri.Stac.writeCatalogSidecar(spark, itemsDir)
           itemsDir
         }
         def li8x = (0 until 8).map { k =>
@@ -634,23 +630,9 @@ object Dev {
                 minx = gx, maxx = gx + 2048 * 90.0,
                 miny = gy - 2048 * 90.0, maxy = gy).count()
             }),
-          ("catalog_window_stats_1kitems", "catalogWindowStats over a 1000-item catalog, JSON-scan resolve forced (sidecar manifest hidden for the timing) — 1000 document opens per lookup",
-            () => {
-              val itemsDir = catalog1k
-              val m = java.nio.file.Paths.get(
-                wri.Stac.sidecarRoot(itemsDir), "manifest.json")
-              val aside = m.resolveSibling("manifest.hidden")
-              java.nio.file.Files.move(m, aside)
-              try wri.Stac.catalogWindowStats(spark, itemsDir,
-                173.60, 54.70, 173.85, 54.92).count()
-              finally java.nio.file.Files.move(aside, m)
-            }),
-          ("catalog_window_stats_1kitems_mirror", "same lookup through the parquet catalog sidecar (the publish verbs maintain it): one listing to verify freshness + one parquet file read instead of 1000 JSON opens",
-            () => {
-              val itemsDir = catalog1k
-              wri.Stac.catalogWindowStats(spark, itemsDir,
-                173.60, 54.70, 173.85, 54.92).count()
-            }),
+          ("catalog_window_stats_1kitems", "catalogWindowStats over a 1000-item catalog — the resolve reads all 1000 item documents per lookup",
+            () => wri.Stac.catalogWindowStats(spark, catalog1k,
+              173.60, 54.70, 173.85, 54.92).count()),
           ("stream_refresh_200uploads", "one 200-raster upload batch through Stac.refreshBatch: distributed stage-00 header scan + metadata landing + delta catalog refresh (the streaming verb's per-micro-batch cost)",
             () => {
               val root = java.nio.file.Files
@@ -737,18 +719,17 @@ object Dev {
         }
         // streaming-refresh SLOPE: successive 200-upload micro-batches
         // against ONE growing catalog — each batch pays its own header
-        // scan (O(batch)) PLUS the per-batch refreshCatalog/ sidecar
-        // rebuild over the accumulated items (O(catalog)); these rows
+        // scan (O(batch)) PLUS the per-batch refreshCatalog over the
+        // accumulated items (O(catalog)); these rows
         // pin that constant. Single sequential run by nature (each
         // batch mutates the catalog the next one refreshes), so no
         // two-pass minimum here — treat small wiggles as ambient.
         sb.append("\n## Streaming-refresh slope (single sequential run)\n\n")
         sb.append("Per-micro-batch seconds as the catalog grows — the ")
         sb.append("per-batch cost is\nO(batch) header reads + document ")
-        sb.append("writes, plus a ROW-LEVEL O(catalog) tail\n(the ")
-        sb.append("mirror-join compare, the collection aggregate, the ")
-        sb.append("incremental\nsidecar rewrite): after batch 0 leaves a ")
-        sb.append("mirror, a micro-batch opens NO\ncatalog documents. ")
+        sb.append("writes, plus an O(catalog) tail\n(the delta ")
+        sb.append("classification reads every current item document, ")
+        sb.append("and the\ncollection aggregate). ")
         sb.append("Single sequential run by nature — wiggles are ")
         sb.append("ambient.\n\n")
         sb.append("| batch | items before | items after | seconds |\n")

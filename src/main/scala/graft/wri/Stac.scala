@@ -161,29 +161,27 @@ object Stac {
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
   }
 
-  /** Write item files (skip-if-exists, `02b:197-205`); returns count
-    * written. Each item lands through [[WriFs.atomicWriteString]] —
-    * the same replace discipline as [[refreshCatalog]] — so a reader
-    * concurrent with even the FIRST publish sees a complete document
-    * or none (the sibling `.json.tmp` never matches the item glob). */
-  def writeItems(items: DataFrame, itemsDir: String,
-      overwrite: Boolean = false): Long = {
+  /** Write item files (skip-if-exists, `02b:197-205`) in one job, so
+    * the hosting probe inside `items` runs once per item. Each item
+    * lands through [[WriFs.atomicWriteString]] — the same replace
+    * discipline as [[refreshCatalog]] — so a reader concurrent with even
+    * the FIRST publish sees a complete document or none (the sibling
+    * `.json.tmp` never matches the item glob). */
+  def writeItems(items: DataFrame, itemsDir: String): Unit = {
     val spark = items.sparkSession
     WriFs.mkdirs(itemsDir, spark.sparkContext.hadoopConfiguration)
     val confBc = WriFs.confBroadcast(spark)
     val dir = itemsDir
-    val ow = overwrite
     items.select("item_id", "json").foreachPartition {
       (rows: Iterator[org.apache.spark.sql.Row]) =>
         val conf = confBc.value.value
         rows.foreach { r =>
           val p = s"$dir/${r.getString(0)}.json"
-          if (ow || !WriFs.exists(p, conf))
+          if (!WriFs.exists(p, conf))
             WriFs.atomicWriteString(WriFs.fs(p, conf),
               new org.apache.hadoop.fs.Path(p), r.getString(1))
         }
     }
-    items.count()
   }
 
   /** Collection document (A3/A4 summaries computed as Spark aggregates,
@@ -265,20 +263,8 @@ object Stac {
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
   }
 
-  /** STAC item read-back — the catalog's QUERY surface (S9 extended
-    * from "list the ids" to "query the documents"): every item JSON
-    * under `itemsDir` parses into one FLAT row with an explicit schema
-    * (nothing inferred — the `02b:112-123` schema discipline), so a
-    * client filters the catalog by domain/dimension/extent/hosting with
-    * ordinary column predicates instead of walking JSON files. The
-    * documents are pretty-printed (one per file), hence multiLine; the
-    * read goes through whatever filesystem — or none: the JSON source
-    * is Spark's own — the path's scheme names, and at catalog scale the
-    * per-file parse fans out across executors like every other stage. */
-  /** The flat row shape [[readItems]] yields — ONE schema shared by the
-    * JSON scan and the parquet sidecar mirror, so a consumer never sees
-    * which source answered. */
-  private[wri] val itemsFlatSchema: org.apache.spark.sql.types.StructType = {
+  /** The flat row shape [[readItems]] yields. */
+  private val itemsFlatSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("item_id", StringType), StructField("collection", StringType),
@@ -291,42 +277,7 @@ object Stac {
       StructField("href", StringType)))
   }
 
-  /** [[itemsFlatSchema]] + the raw document text — the doc-carrying
-    * mirror generation's shape, stated explicitly so a mirror read
-    * costs ZERO schema-inference jobs (a footer-read job per call was
-    * measured as a real slice of every streaming micro-batch's driver
-    * latency). */
-  private[wri] val itemsFlatSchemaWithDoc: org.apache.spark.sql.types.StructType =
-    itemsFlatSchema.add(org.apache.spark.sql.types.StructField(
-      "doc", org.apache.spark.sql.types.StringType))
-
-  def readItems(spark: SparkSession, itemsDir: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    // ONE directory listing answers both questions below (emptiness
-    // and the mirror fingerprint) — listings are the object-store
-    // billable call, so a verb must not pay two per lookup
-    val stats = itemsStatList(itemsDir, conf)
-    // an empty catalog is an empty result, not an unmatched-glob error
-    if (stats.isEmpty)
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        itemsFlatSchema)
-    // prefer the parquet sidecar mirror when it provably reflects the
-    // CURRENT item directory (manifest hash == the one listing above —
-    // no file opens); any out-of-band mutation mismatches the hash and
-    // the honest per-document JSON scan answers instead
-    readSidecarManifest(itemsDir, conf) match {
-      case Some((gen, hash))
-          if hash == stateHashOf(stats) &&
-            WriFs.exists(s"${sidecarRoot(itemsDir)}/gen-$gen", conf) =>
-        spark.read.schema(itemsFlatSchema)
-          .parquet(s"${sidecarRoot(itemsDir)}/gen-$gen")
-      case _ => readItemsScan(spark, itemsDir)
-    }
-  }
-
-  /** The fields of an item document that [[itemsFlatSchema]] flattens;
-    * the one parse shape of the JSON scan and the sidecar rebuild. */
+  /** The fields of an item document that [[itemsFlatSchema]] flattens. */
   private val itemDocSchema = {
     import org.apache.spark.sql.types._
     StructType(Seq(
@@ -344,12 +295,25 @@ object Stac {
           StructField("href", StringType)))))))))
   }
 
-  /** The per-document JSON scan behind [[readItems]] — always correct,
-    * O(items) file opens; the sidecar exists so hot consumer verbs skip
-    * it. */
-  private[wri] def readItemsScan(spark: SparkSession,
-      itemsDir: String): DataFrame =
-    spark.read.schema(itemDocSchema).option("multiLine", "true")
+  /** STAC item read-back — the catalog's QUERY surface (S9 extended
+    * from "list the ids" to "query the documents"): every item JSON
+    * under `itemsDir` parses into one FLAT row with an explicit schema
+    * (nothing inferred — the `02b:112-123` schema discipline), so a
+    * client filters the catalog by domain/dimension/extent/hosting with
+    * ordinary column predicates instead of walking JSON files. The
+    * documents are pretty-printed (one per file), hence multiLine; the
+    * read goes through whatever filesystem — or none: the JSON source
+    * is Spark's own — the path's scheme names, and at catalog scale the
+    * per-file parse fans out across executors like every other stage.
+    * The item documents are the catalog's only copy, so a document
+    * written by any route is what the next read answers. */
+  def readItems(spark: SparkSession, itemsDir: String): DataFrame =
+    // an empty catalog is an empty result, not an unmatched-glob error
+    if (listItemIds(itemsDir, spark.sparkContext.hadoopConfiguration).isEmpty)
+      spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        itemsFlatSchema)
+    else spark.read.schema(itemDocSchema).option("multiLine", "true")
       .json(s"$itemsDir/*.json")
       .select(
         col("id").as("item_id"),
@@ -362,238 +326,6 @@ object Stac {
         col("bbox")(0).as("bbox_w"), col("bbox")(1).as("bbox_s"),
         col("bbox")(2).as("bbox_e"), col("bbox")(3).as("bbox_n"),
         col("assets.data.href").as("href"))
-
-  // --------------------------------------------------------------------
-  // Parquet catalog sidecar — the consumer-verb fast path
-  //
-  // Every consumer verb (getLayer / getLayerData / catalogWindowStats /
-  // validateAssets / stacQuery) resolves targets through [[readItems]];
-  // the JSON scan behind it opens EVERY item document per call — at a
-  // 10k-item catalog that is 10k file opens to answer one lookup. The
-  // publish verbs ([[run]] / [[refreshCatalog]], hence every streaming
-  // micro-batch) therefore maintain a columnar MIRROR of the flat item
-  // rows next to the items dir:
-  //
-  //   <collection>/_catalog/manifest.json   (atomic replace — the commit)
-  //   <collection>/_catalog/gen-<n>/        (parquet, [[itemsFlatSchema]]
-  //                                          + a `doc` column: the raw
-  //                                          document text, so a refresh
-  //                                          can byte-compare against
-  //                                          the mirror instead of
-  //                                          re-opening every item file)
-  //
-  // The manifest records the generation AND a fingerprint of the item
-  // directory the generation mirrors (name+len+mtime of every item file
-  // — ONE directory listing to verify, zero file opens). [[readItems]]
-  // serves from the generation only while the fingerprint still matches
-  // the live directory, so a hand-edited / out-of-band-written item
-  // silently falls back to the per-document scan instead of answering
-  // stale. Commit order makes the mirror transactional: the generation
-  // dir is fully written BEFORE the manifest atomically flips to it,
-  // and a manifest is only published if the directory fingerprint is
-  // STILL what the mirrored rows were read under (a concurrent publish
-  // in the gap skips the flip — readers just keep scanning JSON).
-  // --------------------------------------------------------------------
-
-  /** Sidecar root NEXT TO the items dir — never inside it, so nothing
-    * here can match the `*.json` item glob or the item listing. */
-  def sidecarRoot(itemsDir: String): String =
-    new org.apache.hadoop.fs.Path(itemsDir).getParent.toString + "/_catalog"
-
-  private def sidecarManifest(itemsDir: String): String =
-    s"${sidecarRoot(itemsDir)}/manifest.json"
-
-  /** Per-file (name, length, mtime) of every `<id>.json` in the item
-    * directory — ONE listing, no file opens. The unit both the
-    * fingerprint and the incremental-rebuild stability check build on:
-    * atomic item replaces are fresh renames, so a rewrite moves mtime
-    * and a membership change moves the name set. */
-  private[wri] def itemsStatList(itemsDir: String,
-      conf: Configuration): Seq[(String, Long, Long)] = {
-    val fs = WriFs.fs(itemsDir, conf)
-    val p = new org.apache.hadoop.fs.Path(itemsDir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
-      .sortBy(_._1)
-  }
-
-  private[wri] def stateHashOf(stats: Seq[(String, Long, Long)]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(stats.map { case (n, l, m) => s"$n:$l:$m" }
-      .mkString("\n").getBytes("UTF-8"))
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  /** Fingerprint of the live item directory (hash of [[itemsStatList]]);
-    * either a rewrite or a membership change mismatches a manifest
-    * recorded against the previous state.
-    *
-    * Honest limit: the fingerprint is (name, length, mtime) — an
-    * out-of-band rewrite that keeps the byte length AND lands inside
-    * one mtime-granularity tick of the mirrored state (1 s on many
-    * local filesystems) is invisible to it, the same blindspot rsync's
-    * default quick-check has. Publishes through this module always
-    * move the clock (atomic replace = fresh temp file), so the gap is
-    * only reachable by a foreign same-second writer; use the publish
-    * verbs, not hand edits, on a live catalog. */
-  private[wri] def itemsStateHash(itemsDir: String,
-      conf: Configuration): String =
-    stateHashOf(itemsStatList(itemsDir, conf))
-
-  /** (generation, items-state hash) from the sidecar manifest; None
-    * when absent or unreadable (either means: scan JSON). */
-  private def readSidecarManifest(itemsDir: String,
-      conf: Configuration): Option[(Long, String)] = {
-    val p = sidecarManifest(itemsDir)
-    if (!WriFs.exists(p, conf)) None
-    else scala.util.Try {
-      val node = new ObjectMapper().readTree(WriFs.readString(p, conf))
-      (node.path("gen").asLong(), node.path("hash").asText())
-    }.toOption
-  }
-
-  /** The per-document scan the sidecar GENERATIONS are built from:
-    * [[readItemsScan]]'s flat columns PLUS the raw document text
-    * (`doc`), read as one whole-text row per file and parsed with the
-    * same inner schema. The `doc` column is what lets a later refresh
-    * byte-compare its rebuilt items against the mirror instead of
-    * re-opening every live document. */
-  private[wri] def readItemDocsScan(spark: SparkSession,
-      itemsDir: String): DataFrame = {
-    val docs = spark.read.format("text").option("wholetext", "true")
-      .load(s"$itemsDir/*.json")
-      .select(col("value").as("doc"))
-    flattenItemDocs(docs)
-  }
-
-  /** (doc) → itemsFlatSchema columns + doc; the single parse used by
-    * both the full sidecar rebuild and the incremental delta path, so
-    * a generation's rows are identical however they were produced. */
-  private def flattenItemDocs(docs: DataFrame): DataFrame =
-    docs.select(from_json(col("doc"), itemDocSchema).as("j"), col("doc"))
-      .select(
-        col("j.id").as("item_id"),
-        col("j.collection").as("collection"),
-        col("j.properties.datetime").as("datetime"),
-        col("j.properties.data_type").as("data_type"),
-        col("j.properties.wri_domain").as("wri_domain"),
-        col("j.properties.wri_dimension").as("wri_dimension"),
-        col("j.properties.is_hosted").as("is_hosted"),
-        col("j.bbox")(0).as("bbox_w"), col("j.bbox")(1).as("bbox_s"),
-        col("j.bbox")(2).as("bbox_e"), col("j.bbox")(3).as("bbox_n"),
-        col("j.assets.data.href").as("href"),
-        col("doc"))
-
-  /** The fresh, doc-carrying mirror — Some only when the manifest's
-    * fingerprint matches `liveHash` (the caller's already-taken
-    * directory listing — no second LIST here). Read with the stated
-    * schema: zero footer-inference jobs on this hot refresh path. */
-  private def freshMirrorWithDocs(spark: SparkSession, itemsDir: String,
-      conf: Configuration, liveHash: String): Option[DataFrame] =
-    readSidecarManifest(itemsDir, conf) match {
-      case Some((gen, hash))
-          if hash == liveHash &&
-            WriFs.exists(s"${sidecarRoot(itemsDir)}/gen-$gen", conf) =>
-        Some(spark.read.schema(itemsFlatSchemaWithDoc)
-          .parquet(s"${sidecarRoot(itemsDir)}/gen-$gen"))
-      case _ => None
-    }
-
-  /** Write `rows` as the next generation and atomically flip the
-    * manifest to it — but only if the directory fingerprint is STILL
-    * `hash` after the parquet write (a concurrent publisher in the gap
-    * skips the flip; readers keep scanning JSON until ITS sidecar write
-    * lands). Generations older than the previous are pruned best-effort
-    * — the previous is kept one cycle so a reader that loaded the old
-    * manifest moments ago still finds its files. */
-  private def commitSidecarGeneration(spark: SparkSession,
-      itemsDir: String, conf: Configuration, hash: String,
-      rows: DataFrame): Unit = {
-    val root = sidecarRoot(itemsDir)
-    val prev = readSidecarManifest(itemsDir, conf)
-    val gen = prev.map(_._1).getOrElse(0L) + 1
-    val genDir = s"$root/gen-$gen"
-    rows
-      .coalesce(1) // catalog metadata: thousands of tiny rows, one file
-      .write.mode("overwrite").parquet(genDir)
-    if (itemsStateHash(itemsDir, conf) == hash) {
-      atomicDoc(sidecarManifest(itemsDir),
-        s"""{"gen": $gen, "hash": "$hash"}""", conf)
-      val fs = WriFs.fs(root, conf)
-      WriFs.listNames(root, conf)
-        .filter(_.startsWith("gen-"))
-        .flatMap(n => scala.util.Try(n.stripPrefix("gen-").toLong).toOption
-          .map(n -> _))
-        .filter(_._2 < gen - 1)
-        .foreach { case (n, _) =>
-          scala.util.Try(
-            fs.delete(new org.apache.hadoop.fs.Path(s"$root/$n"), true))
-        }
-    }
-  }
-
-  /** Rebuild the sidecar mirror from the live item documents and flip
-    * the manifest to it. Called by the publish verbs after their item
-    * writes land; safe to call any time (it reads ONLY the documents). */
-  def writeCatalogSidecar(spark: SparkSession, itemsDir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (!WriFs.listNames(itemsDir, conf).exists(_.endsWith(".json"))) return
-    // fingerprint FIRST: the manifest must describe the directory state
-    // the mirrored rows were read under, not whatever it drifted to
-    // while the parquet write ran
-    val hash = itemsStateHash(itemsDir, conf)
-    // steady-state no-op: an all-unchanged refresh leaves every item
-    // file untouched (the delta discipline), so the standing mirror
-    // still fingerprint-matches — skip the rebuild (this is what keeps
-    // the per-micro-batch sidecar cost at zero for quiet catalogs)
-    if (readSidecarManifest(itemsDir, conf).exists(_._2 == hash)) return
-    commitSidecarGeneration(spark, itemsDir, conf, hash,
-      readItemDocsScan(spark, itemsDir))
-  }
-
-  /** The INCREMENTAL sidecar rebuild a refresh uses when it started
-    * from a fresh mirror: next generation = the previous generation's
-    * rows minus the ids the refresh changed or pruned, plus the changed
-    * documents it already holds in memory — zero item-file opens, so a
-    * streaming micro-batch's sidecar cost is O(delta) document parses
-    * plus one small parquet write instead of O(catalog) JSON opens.
-    *
-    * Exactness guard: the previous generation's untouched rows are only
-    * valid if nothing ELSE moved those files while the refresh ran, so
-    * the post-refresh listing must (a) have exactly the expected
-    * membership (stat0 − pruned + changed) and (b) carry byte-identical
-    * (len, mtime) stats for every file the refresh did not write. Any
-    * mismatch falls back to the full document scan — correct for every
-    * interleaving, merely slower. */
-  private[wri] def writeCatalogSidecarDelta(spark: SparkSession,
-      itemsDir: String, mirror0: DataFrame,
-      stat0: Seq[(String, Long, Long)], changed: DataFrame,
-      changedIds: Set[String], prunedIds: Set[String]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (changedIds.isEmpty && prunedIds.isEmpty) return // mirror still fresh
-    val stat1 = itemsStatList(itemsDir, conf)
-    val changedNames = changedIds.map(_ + ".json")
-    val prunedNames = prunedIds.map(_ + ".json")
-    val expected = stat0.map(_._1).toSet -- prunedNames ++ changedNames
-    val stat0ByName = stat0.map(s => s._1 -> s).toMap
-    val untouchedStable = stat1
-      .filterNot(s => changedNames.contains(s._1))
-      .forall(s => stat0ByName.get(s._1).contains(s))
-    if (stat1.map(_._1).toSet != expected || !untouchedStable) {
-      writeCatalogSidecar(spark, itemsDir) // foreign writes — full scan
-      return
-    }
-    // anti-join, not an IN-list: a refresh that rewrote everything has
-    // an O(catalog) delta, and a million inlined literals is a plan,
-    // not a predicate (the small-delta common case broadcasts anyway)
-    import spark.implicits._
-    val gone = (changedIds ++ prunedIds).toSeq.toDF("item_id")
-    val rows = mirror0.join(gone, Seq("item_id"), "left_anti")
-      .unionByName(flattenItemDocs(changed.select(col("json").as("doc"))))
-    commitSidecarGeneration(spark, itemsDir, conf, stateHashOf(stat1), rows)
-  }
 
   /** Catalog search over [[readItems]] rows: items whose bbox
     * INTERSECTS [lonMin, lonMax] x [latMin, latMax] (the standard STAC
@@ -1081,32 +813,13 @@ object Stac {
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
     val consistent =
       if (alreadyLocal) consistentIn else consistentIn.localCheckpoint(true)
-    // release handle: the checkpointed blocks are found by walking THIS
-    // DataFrame's own RDD lineage to its first persisted ancestor — a
-    // global persistent-RDD-set diff would also capture (and unpersist)
-    // anything another thread persisted concurrently
-    val ckptRdd: Option[org.apache.spark.rdd.RDD[_]] =
-      if (alreadyLocal) None
-      else {
-        def persisted(r: org.apache.spark.rdd.RDD[_])
-            : Option[org.apache.spark.rdd.RDD[_]] =
-          if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-            Some(r)
-          else r.dependencies.iterator.map(d => persisted(d.rdd))
-            .collectFirst { case Some(x) => x }
-        persisted(consistent.rdd)
-      }
+    val checkpoints = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    if (!alreadyLocal) checkpoints += consistent
     try {
     val itemsDir = s"$stacRoot/collections/$collectionId/items"
     val conf = spark.sparkContext.hadoopConfiguration
     val confBc = WriFs.confBroadcast(spark)
     val dir = itemsDir
-    // the pre-refresh directory stats: the incremental sidecar rebuild
-    // verifies against these that nothing but this refresh's own writes
-    // moved while it ran
-    val stat0 = itemsStatList(itemsDir, conf)
-    val mirror0 = freshMirrorWithDocs(spark, itemsDir, conf,
-      stateHashOf(stat0))
     // a HOSTED-STATUS change is surfaced distinctly: a CI refresh run
     // with a different (or defaulted) hostedProbe than the build flips
     // is_hosted on every item — reported as plain "rewritten" that is a
@@ -1120,48 +833,29 @@ object Stac {
             .path("properties").path("is_hosted").asBoolean()))
         "rewritten(is_hosted)"
       else "rewritten"
-    // phase 1: distributed read-only classification (retry-exact).
-    // When the refresh starts from a fresh mirror the old documents are
-    // byte-compared against the mirror's `doc` column — a metadata join,
-    // ZERO item-file opens; otherwise each task reads the live file.
-    val built = buildItems(spark, consistent, hostedProbe)
+    // phase 1: distributed read-only classification (retry-exact), each
+    // task byte-comparing against the live document
+    val plan = buildItems(spark, consistent, hostedProbe)
       .select(col("item_id"), col("json"))
-    val plan = (mirror0 match {
-      case Some(m) =>
-        built.join(m.select(col("item_id"), col("doc")),
-            Seq("item_id"), "left")
-          .select(col("item_id"), col("json"), col("doc"))
-          .mapPartitions { rows =>
-            val mapper = new ObjectMapper()
-            rows.map { r =>
-              val (id, json) = (r.getString(0), r.getString(1))
-              val action =
-                if (r.isNullAt(2)) "written"
-                else classify(mapper, r.getString(2), json)
-              (id, action, json)
-            }
-          }
-      case None =>
-        built.mapPartitions { rows =>
-          val c = confBc.value.value
-          val mapper = new ObjectMapper()
-          rows.map { r =>
-            val (id, json) = (r.getString(0), r.getString(1))
-            val p = s"$dir/$id.json"
-            val action =
-              if (!WriFs.exists(p, c)) "written"
-              else classify(mapper, WriFs.readString(p, c), json)
-            (id, action, json)
-          }
+      .mapPartitions { rows =>
+        val c = confBc.value.value
+        val mapper = new ObjectMapper()
+        rows.map { r =>
+          val (id, json) = (r.getString(0), r.getString(1))
+          val p = s"$dir/$id.json"
+          val action =
+            if (!WriFs.exists(p, c)) "written"
+            else classify(mapper, WriFs.readString(p, c), json)
+          (id, action, json)
         }
-    }).toDF("item_id", "action", "json").localCheckpoint(true)
-    val audit = plan.select(col("item_id"), col("action"))
+      }.toDF("item_id", "action", "json").localCheckpoint(true)
+    checkpoints += plan
     // id→action, collected once (from the checkpoint the line above
     // already materialized): drives the EMPTINESS GATE below, the orphan
-    // sweep, AND tells the incremental sidecar rebuild which documents
-    // this refresh wrote (ids and one-word actions — bounded catalog
-    // metadata, the same size class as the listing below)
-    val actions = audit.as[(String, String)].collect()
+    // sweep, AND the returned audit (ids and one-word actions — bounded
+    // catalog metadata, the same size class as the listing below)
+    val actions = plan.select(col("item_id"), col("action"))
+      .as[(String, String)].collect()
     // the gate rides the collect instead of its own isEmpty job: items
     // are built 1:1 from metadata rows (buildItems is a mapPartitions),
     // so zero planned items ⟺ an empty metadata table — and nothing has
@@ -1191,10 +885,8 @@ object Stac {
     // orphan sweep, and the collection links — a second/third LIST of
     // a 10k-item directory is what an object store bills for
     val listedIds = listItemIds(itemsDir, conf)
-    // the mirror-backed classification never opens the live files, so
-    // a FOREIGN delete of an item between the freshness check and here
-    // would otherwise survive as "unchanged" with no document on disk
-    // (the file-reading arm self-heals this case as "written") —
+    // a FOREIGN delete of an item after its task classified it would
+    // otherwise survive as "unchanged" with no document on disk —
     // repair from the plan's own json, which holds every current item
     val missing = current -- listedIds.toSet
     if (missing.nonEmpty) {
@@ -1226,29 +918,23 @@ object Stac {
     atomicDoc(s"$stacRoot/collections/$collectionId/collection.json",
       collectionJson(consistent, ids), conf)
     atomicDoc(s"$stacRoot/catalog.json", catalogJson, conf)
-    // the refresh is the WRITE side of the consumer verbs' fast path:
-    // re-mirror the (possibly just-changed) item rows into the parquet
-    // sidecar so lookups stop paying O(items) JSON opens. A refresh
-    // that STARTED from a fresh mirror rebuilds it incrementally from
-    // the delta it just wrote (zero item-file opens); without one it
-    // pays the full document scan once, and every later refresh rides
-    // the mirror it leaves behind.
-    mirror0 match {
-      case Some(m) =>
-        val changedIds = actions.collect {
-          case (id, a) if a != "unchanged" => id }.toSet
-        // a foreign-delete repair rewrote "unchanged" documents, so
-        // their stats moved — the delta writer's stability check will
-        // see that and fall back to the full scan, which is exactly
-        // right after an out-of-band interleaving
-        writeCatalogSidecarDelta(spark, itemsDir, m, stat0,
-          plan.filter(col("action") =!= "unchanged")
-            .select(col("item_id"), col("json")),
-          changedIds, prunedIds)
-      case None => writeCatalogSidecar(spark, itemsDir)
-    }
-    audit.unionByName(orphanRows.toDF("item_id", "action"))
-    } finally ckptRdd.foreach(_.unpersist(blocking = false))
+    // a local audit: it reads no checkpoint, so both can be released
+    (actions.toSeq ++ orphanRows).toDF("item_id", "action")
+    } finally checkpoints.foreach(releaseCheckpoint)
+  }
+
+  /** Unpersist the blocks `df`'s `localCheckpoint` holds, found by
+    * walking THIS DataFrame's own RDD lineage to its first persisted
+    * ancestor — a global persistent-RDD-set diff would also capture
+    * (and unpersist) anything another thread persisted concurrently. */
+  private def releaseCheckpoint(df: DataFrame): Unit = {
+    def persisted(r: org.apache.spark.rdd.RDD[_])
+        : Option[org.apache.spark.rdd.RDD[_]] =
+      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
+        Some(r)
+      else r.dependencies.iterator.map(d => persisted(d.rdd))
+        .collectFirst { case Some(x) => x }
+    persisted(df.rdd).foreach(_.unpersist(blocking = false))
   }
 
   /** Full stage 02: items + collection + catalog under stacRoot. */
@@ -1266,7 +952,6 @@ object Stac {
     atomicDoc(s"$stacRoot/collections/$collectionId/collection.json",
       collectionJson(consistent, ids), conf)
     atomicDoc(s"$stacRoot/catalog.json", catalogJson, conf)
-    writeCatalogSidecar(spark, itemsDir)
     items
   }
 
@@ -1311,15 +996,10 @@ object Stac {
     * (`processAllAvailable`/`awaitTermination`/`stop`). At 100 TB the
     * shape holds: each micro-batch costs O(new files) header reads
     * fanned across executors, the store grows by metadata rows only,
-    * and the refresh rewrites only changed documents. After the first
-    * micro-batch leaves a mirror behind, each later batch rides it:
-    * the delta byte-compare joins against the sidecar's `doc` column
-    * and the sidecar itself rebuilds incrementally from the delta, so
-    * a micro-batch opens NO catalog documents — its item-file I/O is
-    * exactly the documents it writes. The remaining O(catalog) tail is
-    * row-level (the compare join, the collection summary aggregate,
-    * one small parquet rewrite), measured in SCALE.md's slope table
-    * per 200-upload batch as the catalog grows to 1000 items. */
+    * and the refresh rewrites only changed documents. The O(catalog)
+    * tail is the delta classification's one read per current document
+    * and the collection summary aggregate, measured in SCALE.md's slope
+    * table per 200-upload batch as the catalog grows to 1000 items. */
   def streamingCatalogRefresh(spark: SparkSession, dataDir: String,
       metaDir: String, stacRoot: String, checkpointDir: String,
       hostedProbe: String => Boolean = _ => false,

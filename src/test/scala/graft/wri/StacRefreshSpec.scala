@@ -169,44 +169,81 @@ class StacRefreshSpec extends SparkSpec {
     }
   }
 
-  test("the parquet catalog sidecar: after a publish, consumer reads " +
-      "serve from the columnar mirror and equal the JSON scan row-for-" +
-      "row; a refresh re-mirrors; an out-of-band item write falls back " +
-      "to the scan instead of answering stale") {
+  /** The flat rows the item documents under `itemsDir` hold, parsed
+    * with Jackson: the oracle [[Stac.readItems]] must match. */
+  private def documentRows(itemsDir: String): Set[org.apache.spark.sql.Row] = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    Stac.listItemIds(itemsDir).map { id =>
+      val j = mapper.readTree(new java.io.File(s"$itemsDir/$id.json"))
+      val p = j.path("properties")
+      val b = j.path("bbox")
+      org.apache.spark.sql.Row(j.path("id").asText, j.path("collection").asText,
+        p.path("datetime").asText, p.path("data_type").asText,
+        p.path("wri_domain").asText, p.path("wri_dimension").asText,
+        p.path("is_hosted").asBoolean,
+        b.get(0).asDouble, b.get(1).asDouble, b.get(2).asDouble,
+        b.get(3).asDouble, j.path("assets").path("data").path("href").asText)
+    }.toSet
+  }
+
+  test("readItems answers from the item documents alone: after a " +
+      "publish, a refresh and an out-of-band writeItems it returns " +
+      "exactly the documents' rows, and no publish verb writes a " +
+      "second copy of the catalog") {
     val root = java.nio.file.Files
-      .createTempDirectory("stac_sidecar").toString
+      .createTempDirectory("stac_read_items").toString
     val itemsDir = s"$root/collections/${Model.collectionId}/items"
+    def check(step: String, ids: Set[String]): Unit = {
+      val got = Stac.readItems(spark, itemsDir).collect().toSet
+      assert(got.map(_.getString(0)) == ids, s"$step: ${got.map(_.getString(0))}")
+      assert(got == documentRows(itemsDir),
+        s"$step: readItems drifted from the documents")
+    }
     Stac.run(spark, consistentOf(Seq("a.tif" -> 0.0, "b.tif" -> 0.0)), root)
-    val viaSidecar = Stac.readItems(spark, itemsDir)
-    assert(viaSidecar.inputFiles.nonEmpty &&
-      viaSidecar.inputFiles.forall(_.contains("/_catalog/gen-")),
-      s"readItems did not serve from the sidecar after a publish: " +
-        viaSidecar.inputFiles.mkString(", "))
-    val scan = Stac.readItemsScan(spark, itemsDir)
-    assert(viaSidecar.schema == scan.schema,
-      s"mirror schema drifted: ${viaSidecar.schema} vs ${scan.schema}")
-    assert(viaSidecar.collect().toSet == scan.collect().toSet,
-      "mirror rows drifted from the JSON documents")
-    // a delta refresh re-mirrors: the sidecar tracks the NEW state
-    Thread.sleep(1100) // local-fs mtime granularity for the fingerprint
+    check("publish", Set("a", "b"))
     Stac.refreshCatalog(spark, consistentOf(Seq(
       "a.tif" -> 0.0, "b.tif" -> 900.0, "c.tif" -> 0.0)), root)
-    val after = Stac.readItems(spark, itemsDir)
-    assert(after.inputFiles.forall(_.contains("/_catalog/gen-")),
-      "post-refresh reads fell off the sidecar")
-    assert(after.collect().toSet ==
-      Stac.readItemsScan(spark, itemsDir).collect().toSet,
-      "post-refresh mirror drifted from the documents")
-    assert(after.filter(col("item_id") === "c").count() == 1)
-    // out-of-band mutation (writeItems, no sidecar update): the
-    // fingerprint mismatches and readItems answers from the honest scan
+    check("refresh", Set("a", "b", "c"))
     Stac.writeItems(Stac.buildItems(spark,
       consistentOf(Seq("d.tif" -> 0.0))), itemsDir)
-    val fb = Stac.readItems(spark, itemsDir)
-    assert(fb.inputFiles.exists(_.endsWith(".json")),
-      "an out-of-band item write was answered from the stale sidecar")
-    assert(fb.filter(col("item_id") === "d").count() == 1,
-      "the fallback scan missed the out-of-band item")
+    check("out-of-band writeItems", Set("a", "b", "c", "d"))
+    val collection = new java.io.File(itemsDir).getParentFile
+    assert(collection.list().sorted.toSeq == Seq("collection.json", "items"),
+      s"the publish verbs left more than the documents: " +
+        collection.list().mkString(", "))
+  }
+
+  test("Stac.run builds each item once: the hosting probe runs exactly " +
+      "once per item across the whole publish") {
+    val root = java.nio.file.Files
+      .createTempDirectory("stac_probe_once").toString
+    val calls = spark.sparkContext.longAccumulator("stac_probe_calls")
+    Stac.run(spark, consistentOf(Seq(
+      "a.tif" -> 0.0, "b.tif" -> 0.0, "c.tif" -> 0.0)), root,
+      hostedProbe = { _ => calls.add(1); true })
+    assert(calls.value == 3L, s"${calls.value} probe calls for 3 items")
+    assert(Stac.listItemIds(
+      s"$root/collections/${Model.collectionId}/items") ==
+      Seq("a", "b", "c"))
+  }
+
+  test("refreshCatalog releases every block it persists: the persistent " +
+      "RDD count is the same before the refresh and after its audit is " +
+      "collected, for a local and for a checkpointed metadata table") {
+    val root = java.nio.file.Files
+      .createTempDirectory("stac_refresh_release").toString
+    val sc = spark.sparkContext
+    Stac.run(spark, consistentOf(Seq("a.tif" -> 0.0)), root)
+    Seq(consistentOf(Seq("a.tif" -> 0.0, "b.tif" -> 0.0)),
+        consistentOf(Seq("a.tif" -> 900.0, "c.tif" -> 0.0)).repartition(2))
+      .foreach { meta =>
+        val before = sc.getPersistentRDDs.size
+        val audit = Stac.refreshCatalog(spark, meta, root).collect()
+        assert(audit.nonEmpty)
+        assert(sc.getPersistentRDDs.size == before,
+          s"refreshCatalog left ${sc.getPersistentRDDs.size - before} " +
+            "persisted RDD(s) behind")
+      }
   }
 
   test("streaming refresh over an AUTHENTICATED mirror: micro-batch " +
@@ -325,119 +362,29 @@ class StacRefreshSpec extends SparkSpec {
     }}
   }
 
-  test("mirror-backed refresh: starting from a fresh sidecar, the " +
-      "delta classification joins against the mirror's doc column " +
-      "(zero item opens) and produces the IDENTICAL audit and bytes " +
-      "as the file-reading twin; the sidecar then rebuilds " +
-      "incrementally and equals a from-scratch document scan") {
-    def publish(suffix: String): (String, String) = {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"stac_mirror_$suffix").toString
-      Stac.run(spark, consistentOf(Seq(
-        "keep.tif" -> 0.0, "drift.tif" -> 0.0, "gone.tif" -> 0.0)), root)
-      (root, s"$root/collections/${Model.collectionId}/items")
-    }
-    val (rootA, itemsA) = publish("a") // refreshes THROUGH the mirror
-    val (rootB, itemsB) = publish("b") // manifest hidden → file compare
-    val mB = java.nio.file.Paths.get(Stac.sidecarRoot(itemsB),
-      "manifest.json")
-    java.nio.file.Files.move(mB, mB.resolveSibling("manifest.hidden"))
-    val next = Seq("keep.tif" -> 0.0, "drift.tif" -> 900.0,
-      "fresh.tif" -> 0.0)
-    val auditA = Stac.refreshCatalog(spark, consistentOf(next), rootA,
-      pruneOrphans = true).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val auditB = Stac.refreshCatalog(spark, consistentOf(next), rootB,
-      pruneOrphans = true).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(auditA == Map("keep" -> "unchanged", "drift" -> "rewritten",
-      "fresh" -> "written", "gone" -> "pruned"), auditA.toString)
-    assert(auditA == auditB,
-      s"mirror-backed classification drifted from the file-reading " +
-        s"twin: $auditA vs $auditB")
-    Stac.listItemIds(itemsA).foreach { id =>
-      val a = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$itemsA/$id.json")), "UTF-8")
-      val b = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$itemsB/$id.json")), "UTF-8")
-      assert(a == b, s"item $id differs between the mirror-backed and " +
-        "file-backed refresh")
-    }
-    // the incrementally rebuilt generation == a from-scratch scan,
-    // including the doc column the NEXT refresh will compare against
-    val mirrored = Stac.readItems(spark, itemsA)
-    assert(mirrored.inputFiles.forall(_.contains("/_catalog/gen-")),
-      "the incremental rebuild did not leave a live mirror")
-    assert(mirrored.collect().toSet ==
-      Stac.readItemsScan(spark, itemsA).collect().toSet,
-      "the incremental generation drifted from the documents")
-    assert(Stac.readItemDocsScan(spark, itemsA).collect().toSet ==
-      spark.read.parquet(mirrored.inputFiles.head
-        .replaceAll("/[^/]*$", "")).collect().toSet,
-      "the incremental generation's doc rows drifted from a full scan")
-  }
-
-  test("the incremental sidecar rebuild REFUSES to trust the previous " +
-      "generation when the directory moved out-of-band while the " +
-      "refresh ran — it falls back to the full document scan and the " +
-      "mirror still converges to the live directory") {
+  test("a FOREIGN delete that lands after the refresh classified the " +
+      "document (before the listing) is repaired: the vanished document " +
+      "is rewritten byte-identical from the plan") {
     val root = java.nio.file.Files
-      .createTempDirectory("stac_mirror_race").toString
+      .createTempDirectory("stac_foreign_delete").toString
     val itemsDir = s"$root/collections/${Model.collectionId}/items"
-    Stac.run(spark, consistentOf(Seq("a.tif" -> 0.0, "b.tif" -> 0.0)), root)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val stat0 = Stac.itemsStatList(itemsDir, conf)
-    val mirror0 = spark.read.parquet(
-      s"${Stac.sidecarRoot(itemsDir)}/gen-1")
-    // a foreign writer lands c.json AFTER stat0 was taken (simulating
-    // the mid-refresh interleaving) — the membership check must reject
-    // the incremental path, and the fallback scan must pick c up
-    Stac.writeItems(Stac.buildItems(spark,
-      consistentOf(Seq("c.tif" -> 0.0))), itemsDir)
-    val changed = Stac.buildItems(spark, consistentOf(Seq("b.tif" -> 900.0)))
-      .select(col("item_id"), col("json"))
-    changed.collect().foreach { r =>
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$itemsDir/${r.getString(0)}.json"),
-        r.getString(1))
-    }
-    Stac.writeCatalogSidecarDelta(spark, itemsDir, mirror0, stat0,
-      changed, Set("b"), Set.empty)
-    val served = Stac.readItems(spark, itemsDir)
-    assert(served.inputFiles.forall(_.contains("/_catalog/gen-")),
-      "the fallback rebuild did not leave a live mirror")
-    assert(served.collect().toSet ==
-      Stac.readItemsScan(spark, itemsDir).collect().toSet,
-      "the post-race mirror drifted from the documents — the foreign " +
-        "write was lost")
-    assert(served.filter(col("item_id") === "c").count() == 1,
-      "the foreign item is missing from the rebuilt mirror")
-  }
-
-  test("a FOREIGN delete that lands while a mirror-backed refresh is " +
-      "classifying (after the freshness check, before the writes) is " +
-      "repaired: the vanished document is rewritten from the plan and " +
-      "the sidecar converges to the live directory") {
-    val root = java.nio.file.Files
-      .createTempDirectory("stac_mirror_repair").toString
-    val itemsDir = s"$root/collections/${Model.collectionId}/items"
+    // ONE partition ordered keep, also: the task classifies keep before
+    // it builds also, so keep reads "unchanged" and only then vanishes
     val meta = consistentOf(Seq("keep.tif" -> 0.0, "also.tif" -> 0.0))
+      .coalesce(1)
     Stac.run(spark, meta, root)
     val keepBytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$itemsDir/keep.json")).toSeq
-    // the hostedProbe runs INSIDE phase 1 — i.e. after the refresh has
-    // already judged the mirror fresh — so a probe that deletes
-    // keep.json is exactly the mid-flight foreign delete the mirror
-    // path cannot see (it compares against the mirror's doc column,
-    // never the live file). The hook must be idempotent and signal
-    // through the FILESYSTEM: Spark serializes the closure per task
-    // even in local mode, so driver-side mutable state would be a
-    // per-task copy
+    // the hostedProbe runs INSIDE phase 1, so its call for also.tif is
+    // the foreign delete landing between keep's classification and the
+    // post-write listing. The hook signals through the FILESYSTEM: Spark
+    // serializes the closure per task even in local mode, so caller-side
+    // mutable state would be a per-task copy
     val markerPath = s"$root/delete_fired.marker" // String: Path is
     val keepPath = s"$itemsDir/keep.json"         // not serializable
     val audit = Stac.refreshCatalog(spark, meta, root,
-        hostedProbe = { _ =>
-          if (java.nio.file.Files.deleteIfExists(
+        hostedProbe = { f =>
+          if (f == "also.tif" && java.nio.file.Files.deleteIfExists(
               java.nio.file.Paths.get(keepPath)))
             java.nio.file.Files.createFile(
               java.nio.file.Paths.get(markerPath))
@@ -449,18 +396,11 @@ class StacRefreshSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(markerPath)),
       "the interleaving hook never fired")
-    // the repair restored the byte-identical document...
     assert(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$itemsDir/keep.json")).toSeq == keepBytes,
       "the mid-refresh foreign delete was not repaired")
-    // ...and the sidecar did NOT cement the broken directory: the
-    // stability check sees the repair write and rebuilds from the
-    // documents, so mirror == scan afterwards
-    val served = Stac.readItems(spark, itemsDir)
-    assert(served.collect().toSet ==
-      Stac.readItemsScan(spark, itemsDir).collect().toSet,
-      "the post-repair mirror drifted from the documents")
-    assert(served.filter(col("item_id") === "keep").count() == 1)
+    assert(Stac.readItems(spark, itemsDir)
+      .filter(col("item_id") === "keep").count() == 1)
   }
 
   test("metadata-store compaction: the streaming store folds to one " +
