@@ -10,8 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * streaming access).
   *
   * Per layer: ONE bounded prefix read parses every pyramid level's tile
-  * layout ([[TiffIO.levelLayoutsFromPrefix]] — the "single HEAD + first
-  * 16 KB" COG discipline), the full-resolution tiles intersecting the
+  * layout ([[TiffIO.levelLayoutsFromPrefix]] — the "one request for the
+  * first 16 KB" COG discipline), the full-resolution tiles intersecting the
   * requested pixel window are computed from that layout, and ONLY those
   * tiles are fetched by byte range and decoded
   * ([[TiffIO.decodeLevelTile]]). A window over an N-tile raster reads
@@ -168,10 +168,11 @@ object CogQuery {
     // eager destroy here would break the lazy DataFrame); bounded by
     // the window cap above
     val winBc = spark.sparkContext.broadcast(windows)
-    withReaderAt(spark, layers.map(n => (n, s"$cogDir/$n")), prefixBytes) {
-      (name, raf, prefix) =>
-        zonalOverWindows(name, raf, prefix, winBc.value, scale, level)
-    }.flatMap(identity).toDF()
+    spark.createDataset(
+      withReaderAt(spark, layers.map(n => (n, s"$cogDir/$n")), prefixBytes) {
+        (name, raf, prefix) =>
+          zonalOverWindows(name, raf, prefix, winBc.value, scale, level)
+      }.flatMap(identity)).toDF()
   }
 
   /** Parse the header prefix into the level's grid: (all layouts, the
@@ -298,12 +299,11 @@ object CogQuery {
     * only its in-window pixels. A 10k x 10k crop over 64 layers fans
     * out across the cluster instead of serializing behind 64 tasks,
     * and no task ever holds more than one decoded tile. Tiles are
-    * grouped into per-task CHUNKS of [[ReadChunkTiles]] so one reader
-    * open + one header-prefix read amortizes over the chunk instead
-    * of repeating per tile — fan-out granularity stays tile-scale,
-    * header overhead drops by the chunk factor (8 tiles/task: a
-    * 64-tile layer costs 8 header reads, not 64, while still fanning
-    * 8-wide). SCALE-pinned: the 16-layer 2048x2048 crop (67M pixel
+    * grouped into per-task CHUNKS of [[ReadChunkTiles]]; the header job
+    * hands each chunk its tiles' byte ranges and the level's decode
+    * parameters, so a chunk task opens the reader and fetches exactly
+    * those ranges — no header read, and over HTTP no HEAD either.
+    * SCALE-pinned: the 16-layer 2048x2048 crop (67M pixel
     * rows, 128 chunk tasks) answers in single-digit seconds at sf0.1
     * (SCALE.md `cog_crop_16layers_2k`). */
   def readWindowGeo(spark: SparkSession, cogDir: String,
@@ -328,10 +328,11 @@ object CogQuery {
     require(scale >= 1, s"scale must be >= 1: $scale")
     require(level >= 0, s"level must be >= 0: $level")
     // job 1 (one small task per layer): header prefix -> this layer's
-    // pixel window and the tile ids it intersects, chunked. Each chunk
-    // carries ITS OWN path, so duplicate layer labels (two targets with
-    // one name) stay correct-by-construction — no name->path lookup.
-    val perChunk = withReaderAt(spark, targets, prefixBytes) {
+    // pixel window and the tile ranges it intersects, chunked. Plans
+    // come back in target order and each chunk is paired with ITS OWN
+    // target, so duplicate layer labels (two targets with one name)
+    // stay correct-by-construction — no name->path lookup.
+    val perTarget = withReaderAt(spark, targets, prefixBytes) {
       (name, _, prefix) =>
         val (_, full, resX, resY, gx, gy) = geoGrid(name, prefix, level)
         val tw = full.tileWidth; val th = full.tileHeight
@@ -341,62 +342,66 @@ object CogQuery {
           boxToPixels(resX, resY, gx, gy, minx, miny, maxx, maxy)
         val xLo = math.max(0, x0); val xHi = math.min(full.width, xEnd)
         val yLo = math.max(0, y0); val yHi = math.min(full.height, yEnd)
-        if (xLo >= xHi || yLo >= yHi)
-          Seq.empty[(String, Int, Int, Int, Int, Seq[Int])]
+        if (xLo >= xHi || yLo >= yHi) Seq.empty[CropChunk]
         else (for {
           r <- yLo / th to (yHi - 1) / th
           c <- xLo / tw to (xHi - 1) / tw
-        } yield r * tilesAcross + c)
+          t = r * tilesAcross + c
+        } yield (t, full.tileOffsets(t), full.tileByteCounts(t)))
           .grouped(ReadChunkTiles)
-          .map(ts => (name, xLo, xHi, yLo, yHi, ts.toSeq)).toSeq
-    }.collect().toSeq // chunk plans: metadata-sized, in target order
-    val chunkPlans = targets.zip(perChunk).flatMap {
-      case ((_, path), chunks) =>
-        chunks.map { case (name, xLo, xHi, yLo, yHi, ts) =>
-          (name, path, xLo, xHi, yLo, yHi, ts)
-        }
+          .map(ts => CropChunk(xLo, xHi, yLo, yHi, tw, th, tilesAcross,
+            full.compression, full.predictor, ts.toList)).toSeq
+    }.collect() // chunk plans: metadata-sized
+    val chunks = targets.zip(perTarget).flatMap {
+      case ((name, path), cs) => cs.map((name, path, _))
     }
-    if (chunkPlans.isEmpty)
+    if (chunks.isEmpty)
       return Seq.empty[(String, Int, Int, Option[Long])]
         .toDF("layer", "x", "y", "vs")
-    // job 2 (one task per chunk): ONE reader open + ONE prefix read
-    // amortize over the chunk's tiles; decode one tile at a time and
-    // emit its in-window pixels
+    // job 2 (one task per chunk, spread by parallelize with no
+    // shuffle): ONE reader open, then exactly the chunk's tile ranges;
+    // decode one tile at a time and emit its in-window pixels
     val confBc = WriFs.confBroadcast(spark)
-    spark.createDataset(chunkPlans)
-      .repartition(math.min(chunkPlans.size,
-        spark.sparkContext.defaultParallelism))
-      .mapPartitions { it =>
-        it.flatMap { case (name, path, xLo, xHi, yLo, yHi, ts) =>
-          withPrefix(path, confBc.value.value, prefixBytes) { (raf, prefix) =>
-            val full = prefix.layouts(level)
-            val tw = full.tileWidth; val th = full.tileHeight
-            val tilesAcross = (full.width + tw - 1) / tw
-            ts.flatMap { t =>
-              val buf = new Array[Byte](full.tileByteCounts(t).toInt)
-              raf.readFully(full.tileOffsets(t), buf)
-              val px = TiffIO.decodeLevelTile(full, buf)
-              val c = t % tilesAcross; val r = t / tilesAcross
+    val sc = spark.sparkContext
+    spark.createDataset(
+      sc.parallelize(chunks, math.min(chunks.size, sc.defaultParallelism))
+        .mapPartitions { it =>
+          val conf = confBc.value.value
+          it.flatMap { case (name, path, ch) =>
+            val raf = RangeReader.open(path, conf)
+            try ch.tiles.flatMap { case (t, offset, byteCount) =>
+              val buf = new Array[Byte](byteCount.toInt)
+              raf.readFully(offset, buf)
+              val (tw, th) = (ch.tileWidth, ch.tileHeight)
+              val px = TiffIO.decodeBlock(buf, ch.compression, ch.predictor,
+                tw, th)
+              val c = t % ch.tilesAcross; val r = t / ch.tilesAcross
               for {
-                y <- math.max(yLo, r * th) until
-                  math.min(yHi, (r + 1) * th)
-                x <- math.max(xLo, c * tw) until
-                  math.min(xHi, (c + 1) * tw)
+                y <- math.max(ch.yLo, r * th) until
+                  math.min(ch.yHi, (r + 1) * th)
+                x <- math.max(ch.xLo, c * tw) until
+                  math.min(ch.xHi, (c + 1) * tw)
               } yield {
                 val v = px((y - r * th) * tw + (x - c * tw))
                 (name, x, y,
                   if (java.lang.Float.isNaN(v)) None
                   else Some(Math.round(v.toDouble * scale)))
               }
-            }
+            } finally raf.close()
           }
-        }
-      }.toDF("layer", "x", "y", "vs")
+        }).toDF("layer", "x", "y", "vs")
   }
 
-  /** Tiles per [[readWindowGeoAt]] task: one reader open + one header
-    * prefix amortize over this many tile fetches, while fan-out stays
-    * near tile granularity. */
+  /** One [[readWindowGeoAt]] chunk task's work: the target's clamped
+    * pixel window, the level's decode parameters, and up to
+    * [[ReadChunkTiles]] tiles as (index, offset, byte count). */
+  private case class CropChunk(xLo: Int, xHi: Int, yLo: Int, yHi: Int,
+      tileWidth: Int, tileHeight: Int, tilesAcross: Int,
+      compression: Int, predictor: Int, tiles: List[(Int, Long, Long)])
+
+  /** Tiles per [[readWindowGeoAt]] task: one reader open amortizes over
+    * this many tile fetches, while fan-out stays near tile
+    * granularity. */
   private val ReadChunkTiles = 8
 
   case class MapAlgebraStat(out: String, width: Int, height: Int,
@@ -864,12 +869,8 @@ object CogQuery {
   /** Range request #1: the bounded header prefix of an open reader,
     * decoded once. */
   private[wri] def readPrefix(raf: RangeReader,
-      prefixBytes: Int): TiffIO.HeaderPrefix = {
-    val prefix =
-      new Array[Byte](math.min(raf.length, prefixBytes.toLong).toInt)
-    raf.readFully(0L, prefix)
-    new TiffIO.HeaderPrefix(prefix)
-  }
+      prefixBytes: Int): TiffIO.HeaderPrefix =
+    new TiffIO.HeaderPrefix(raf.readPrefix(prefixBytes))
 
   /** Opens `path`, reads its header prefix and runs `f` on the open
     * reader and the decoded prefix; the reader closes when `f` returns. */
@@ -880,18 +881,20 @@ object CogQuery {
   }
 
   /** One task per (label, path) target; `f` sees the label (reported as
-    * the output's `layer`), the open reader, and the header prefix. */
-  private def withReaderAt[T](spark: SparkSession,
+    * the output's `layer`), the open reader, and the header prefix. An
+    * RDD, not a Dataset: the step hands Scala values to its caller, so
+    * Catalyst analysis and encoder planning would buy nothing — callers
+    * enter Spark SQL only at their result. */
+  private def withReaderAt[T: scala.reflect.ClassTag](spark: SparkSession,
       targets: Seq[(String, String)], prefixBytes: Int)(
-      f: (String, RangeReader, TiffIO.HeaderPrefix) => T)(
-      implicit enc: org.apache.spark.sql.Encoder[T]): org.apache.spark.sql.Dataset[T] = {
-    import spark.implicits._
+      f: (String, RangeReader, TiffIO.HeaderPrefix) => T)
+      : org.apache.spark.rdd.RDD[T] = {
     val confBc = WriFs.confBroadcast(spark)
-    spark.createDataset(targets).mapPartitions { it =>
-      it.map { case (name, path) =>
+    val sc = spark.sparkContext
+    sc.parallelize(targets, math.min(targets.size, sc.defaultParallelism))
+      .map { case (name, path) =>
         withPrefix(path, confBc.value.value, prefixBytes)(f(name, _, _))
       }
-    }
   }
 
   /** (label, width, height, tileWidth, tileHeight, resX, resY, originX,
@@ -933,11 +936,12 @@ object CogQuery {
     require(scale >= 1, s"scale must be >= 1: $scale")
     require(level >= 0, s"level must be >= 0: $level")
     require(layers.nonEmpty, "no layers to query")
-    withReaderAt(spark, layers.map(n => (n, s"$cogDir/$n")), prefixBytes) {
-      (name, raf, prefix) =>
-        statsOverWindow(name, raf, prefix.length, prefix.layouts, level,
-          x0, y0, x0 + winW, y0 + winH, scale)
-    }.toDF()
+    spark.createDataset(
+      withReaderAt(spark, layers.map(n => (n, s"$cogDir/$n")), prefixBytes) {
+        (name, raf, prefix) =>
+          statsOverWindow(name, raf, prefix.length, prefix.layouts, level,
+            x0, y0, x0 + winW, y0 + winH, scale)
+      }).toDF()
   }
 
   /** Stats of the CRS bounding box [minx, maxx] x [miny, maxy] (the
@@ -983,13 +987,13 @@ object CogQuery {
     require(scale >= 1, s"scale must be >= 1: $scale")
     require(level >= 0, s"level must be >= 0: $level")
     require(targets.nonEmpty, "no layers to query")
-    withReaderAt(spark, targets, prefixBytes) {
+    spark.createDataset(withReaderAt(spark, targets, prefixBytes) {
       (name, raf, prefix) =>
         val (layouts, _, resX, resY, gx, gy) = geoGrid(name, prefix, level)
         val (x0, xEnd, y0, yEnd) =
           boxToPixels(resX, resY, gx, gy, minx, miny, maxx, maxy)
         statsOverWindow(name, raf, prefix.length, layouts, level,
           x0, y0, xEnd, yEnd, scale)
-    }.toDF()
+    }).toDF()
   }
 }

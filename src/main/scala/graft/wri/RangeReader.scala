@@ -18,6 +18,14 @@ trait RangeReader extends AutoCloseable {
   def length: Long
   /** Read exactly `buf.length` bytes starting at `offset`. */
   def readFully(offset: Long, buf: Array[Byte]): Unit
+  /** The object's first `min(n, length)` bytes — the header prefix. A
+    * reader that learns the length from this read itself overrides it,
+    * so opening a file and reading its prefix cost one request. */
+  def readPrefix(n: Int): Array[Byte] = {
+    val buf = new Array[Byte](math.min(length, n.toLong).toInt)
+    readFully(0L, buf)
+    buf
+  }
 }
 
 object RangeReader {
@@ -122,15 +130,24 @@ final class HadoopRangeReader(url: String, conf: Configuration)
 }
 
 /** HTTP Range-request reader — the COG serving mode the reference's
-  * hosted catalog assumes: `HEAD` for the length, then one
-  * `Range: bytes=a-b` GET per requested range (header prefix + each
-  * tile). A server that ignores Range (responds 200 with the full
-  * body) is rejected loudly rather than silently downloading whole
-  * rasters — the economy IS the contract; the one legitimate 200 is a
-  * request whose range IS the entire object (RFC 9110 permits either
-  * answer there).
+  * hosted catalog assumes: one `Range: bytes=a-b` GET per requested
+  * range (header prefix + each tile). The object length comes from the
+  * prefix read's own answer — the `Content-Range` total of a 206, or
+  * the body of a 200 that fits the prefix — so an open plus its prefix
+  * is ONE request; a `HEAD` goes out only when [[length]] is asked
+  * before any answer carried it. A server that ignores Range (responds
+  * 200 with the full body) is rejected loudly rather than silently
+  * downloading whole rasters — the economy IS the contract; the one
+  * legitimate 200 is a request whose range covers the entire object
+  * (RFC 9110 permits either answer there).
   *
   * Robustness contract:
+  *   - `Connection: close` rides on every request: the reader hangs up
+  *     after each one, and RFC 9112 §9.6 requires a client that does
+  *     not keep connections open to say so. A server that keeps them
+  *     open instead and runs with Nagle's algorithm on (the JDK's
+  *     HttpServer does) holds any response shorter than one TCP segment
+  *     — every header prefix — until the client's delayed ACK, ~40 ms;
   *   - `Accept-Encoding: identity` rides on every request, so
   *     Content-Length and Range offsets always speak raw object bytes
   *     (a transparently-gzipping server would otherwise hand back
@@ -155,6 +172,8 @@ final class HttpRangeReader(url: String, maxAttempts: Int = 3,
       .asInstanceOf[java.net.HttpURLConnection]
     c.setConnectTimeout(10000)
     c.setReadTimeout(60000)
+    // one connection per request, announced (see the class contract)
+    c.setRequestProperty("Connection", "close")
     // raw bytes or nothing: a Content-Encoding would break the
     // Content-Length/Range-offset arithmetic this reader lives on
     c.setRequestProperty("Accept-Encoding", "identity")
@@ -171,6 +190,16 @@ final class HttpRangeReader(url: String, maxAttempts: Int = 3,
       c.setRequestProperty("Range", s"bytes=$a-$b")
     }
     c
+  }
+
+  /** The answer's status after the checks every request shares:
+    * redirect, auth and transient refusals. */
+  private def status(c: java.net.HttpURLConnection, what: String): Int = {
+    val code = c.getResponseCode
+    rejectRedirect(code, c, what)
+    rejectUnauthorized(code, what)
+    rejectTransient(code, what)
+    code
   }
 
   /** A 401/403 is an AUTH contract failure, not a transient blip and
@@ -228,60 +257,106 @@ final class HttpRangeReader(url: String, maxAttempts: Int = 3,
     sys.error("unreachable")
   }
 
-  val length: Long = withRetries { () =>
-    val c = connect(None)
-    c.setRequestMethod("HEAD")
+  /** Set by the first answer that states the object length. */
+  private var knownLength = -1L
+
+  def length: Long = {
+    if (knownLength < 0) knownLength = withRetries { () =>
+      val c = connect(None)
+      c.setRequestMethod("HEAD")
+      try {
+        val code = status(c, "HEAD")
+        require(code == 200, s"HEAD $url -> $code")
+        val len = c.getContentLengthLong
+        require(len >= 0, s"HEAD $url returned no Content-Length")
+        len
+      } finally c.disconnect()
+    }
+    knownLength
+  }
+
+  /** A 206's `Content-Range` as (first, last, total when stated); the
+    * caller checks it against its request before trusting any byte. */
+  private def contentRange(
+      c: java.net.HttpURLConnection): (Long, Long, Option[Long]) = {
+    val cr = Option(c.getHeaderField("Content-Range")).getOrElse("")
+    val m = "bytes (\\d+)-(\\d+)/(\\d+|\\*)".r.findFirstMatchIn(cr)
+    require(m.isDefined, s"GET $url -> 206 with unparsable " +
+      s"Content-Range '$cr'")
+    (m.get.group(1).toLong, m.get.group(2).toLong,
+      m.get.group(3).toLongOption)
+  }
+
+  private def rejectRange(c: java.net.HttpURLConnection, a: Long,
+      b: Long): Nothing =
+    throw new IllegalArgumentException(s"GET $url asked bytes=$a-$b, " +
+      s"server answered '${c.getHeaderField("Content-Range")}'")
+
+  private def readBody(c: java.net.HttpURLConnection, offset: Long,
+      buf: Array[Byte]): Unit = {
+    val in = c.getInputStream
     try {
-      val code = c.getResponseCode
-      rejectRedirect(code, c, "HEAD")
-      rejectUnauthorized(code, "HEAD")
-      rejectTransient(code, "HEAD")
-      require(code == 200, s"HEAD $url -> $code")
-      val len = c.getContentLengthLong
-      require(len >= 0, s"HEAD $url returned no Content-Length")
-      len
-    } finally c.disconnect()
+      var off = 0
+      while (off < buf.length) {
+        val n = in.read(buf, off, buf.length - off)
+        if (n < 0) throw new java.io.EOFException(
+          s"short range read from $url at $offset ($off/${buf.length})")
+        off += n
+      }
+    } finally in.close()
   }
 
   def readFully(offset: Long, buf: Array[Byte]): Unit = {
     if (buf.length == 0) return
+    val last = offset + buf.length - 1
     withRetries { () =>
-      val c = connect(Some((offset, offset + buf.length - 1)))
+      val c = connect(Some((offset, last)))
       try {
-        val code = c.getResponseCode
-        rejectRedirect(code, c, "GET")
-        rejectUnauthorized(code, "GET")
-        rejectTransient(code, "GET")
+        val code = status(c, "GET")
         // a 200 is acceptable ONLY when the requested range is the whole
         // object — then "the full body" and "the range" are the same
-        // bytes; anywhere else it means Range was ignored
-        val wholeObject = offset == 0 && buf.length.toLong == length
-        require(code == 206 || (code == 200 && wholeObject),
+        // bytes; anywhere else it means Range was ignored. The length
+        // is asked only then, so tile reads never cost a HEAD.
+        require(code == 206 || (code == 200 && offset == 0 &&
+            buf.length.toLong == length),
           s"GET $url range $offset+${buf.length} -> $code " +
             "(server does not honor Range requests)")
         if (code == 206) {
-          // trust no byte before the offsets check out
-          val cr = Option(c.getHeaderField("Content-Range")).getOrElse("")
-          val m = "bytes (\\d+)-(\\d+)/(?:\\d+|\\*)".r.findFirstMatchIn(cr)
-          require(m.isDefined, s"GET $url -> 206 with unparsable " +
-            s"Content-Range '$cr'")
-          val (a, b) = (m.get.group(1).toLong, m.get.group(2).toLong)
-          require(a == offset && b == offset + buf.length - 1,
-            s"GET $url asked bytes=$offset-${offset + buf.length - 1}, " +
-              s"server answered '$cr'")
+          val (a, b, _) = contentRange(c)
+          if (a != offset || b != last) rejectRange(c, offset, last)
         }
-        val in = c.getInputStream
-        try {
-          var off = 0
-          while (off < buf.length) {
-            val n = in.read(buf, off, buf.length - off)
-            if (n < 0) throw new java.io.EOFException(
-              s"short range read from $url at $offset ($off/${buf.length})")
-            off += n
-          }
-        } finally in.close()
+        readBody(c, offset, buf)
       } finally c.disconnect()
     }
+  }
+
+  /** One GET for `bytes=0-(n-1)` that also learns the length: a 206
+    * states it in its Content-Range total (clamping the range to a
+    * shorter object), and a 200 is the whole object, accepted only when
+    * it fits the prefix — a larger 200 means Range was ignored. */
+  override def readPrefix(n: Int): Array[Byte] = withRetries { () =>
+    val c = connect(Some((0L, n - 1L)))
+    try {
+      val code = status(c, "GET")
+      val size =
+        if (code == 206) {
+          val (a, b, total) = contentRange(c)
+          if (a != 0 || !total.fold(b < n)(t => b == math.min(t, n.toLong) - 1))
+            rejectRange(c, 0, n - 1L)
+          total.foreach(knownLength = _)
+          b + 1
+        } else {
+          val len = c.getContentLengthLong
+          require(code == 200 && len >= 0 && len <= n,
+            s"GET $url range 0+$n -> $code (server does not honor " +
+              "Range requests)")
+          knownLength = len
+          len
+        }
+      val buf = new Array[Byte](size.toInt)
+      readBody(c, 0L, buf)
+      buf
+    } finally c.disconnect()
   }
 
   def close(): Unit = ()

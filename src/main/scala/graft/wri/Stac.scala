@@ -162,26 +162,31 @@ object Stac {
   }
 
   /** Write item files (skip-if-exists, `02b:197-205`) in one job, so
-    * the hosting probe inside `items` runs once per item. Each item
-    * lands through [[WriFs.atomicWriteString]] — the same replace
-    * discipline as [[refreshCatalog]] — so a reader concurrent with even
-    * the FIRST publish sees a complete document or none (the sibling
-    * `.json.tmp` never matches the item glob). */
-  def writeItems(items: DataFrame, itemsDir: String): Unit = {
+    * the hosting probe inside `items` runs once per item, and hand back
+    * the (item_id, is_hosted, json) rows that job was given — item
+    * documents are catalog metadata, driver-sized. Each item lands
+    * through [[WriFs.atomicWriteString]] — the same replace discipline
+    * as [[refreshCatalog]] — so a reader concurrent with even the FIRST
+    * publish sees a complete document or none (the sibling `.json.tmp`
+    * is not an item document to [[readItems]]). */
+  def writeItems(items: DataFrame,
+      itemsDir: String): Seq[(String, Boolean, String)] = {
     val spark = items.sparkSession
+    import spark.implicits._
     WriFs.mkdirs(itemsDir, spark.sparkContext.hadoopConfiguration)
     val confBc = WriFs.confBroadcast(spark)
     val dir = itemsDir
-    items.select("item_id", "json").foreachPartition {
-      (rows: Iterator[org.apache.spark.sql.Row]) =>
+    items.select("item_id", "is_hosted", "json")
+      .as[(String, Boolean, String)].mapPartitions { rows =>
         val conf = confBc.value.value
-        rows.foreach { r =>
-          val p = s"$dir/${r.getString(0)}.json"
+        rows.map { case row @ (id, _, json) =>
+          val p = s"$dir/$id.json"
           if (!WriFs.exists(p, conf))
             WriFs.atomicWriteString(WriFs.fs(p, conf),
-              new org.apache.hadoop.fs.Path(p), r.getString(1))
+              new org.apache.hadoop.fs.Path(p), json)
+          row
         }
-    }
+      }.collect().toSeq
   }
 
   /** Collection document (A3/A4 summaries computed as Spark aggregates,
@@ -263,21 +268,7 @@ object Stac {
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
   }
 
-  /** The flat row shape [[readItems]] yields. */
-  private val itemsFlatSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("item_id", StringType), StructField("collection", StringType),
-      StructField("datetime", StringType), StructField("data_type", StringType),
-      StructField("wri_domain", StringType),
-      StructField("wri_dimension", StringType),
-      StructField("is_hosted", BooleanType),
-      StructField("bbox_w", DoubleType), StructField("bbox_s", DoubleType),
-      StructField("bbox_e", DoubleType), StructField("bbox_n", DoubleType),
-      StructField("href", StringType)))
-  }
-
-  /** The fields of an item document that [[itemsFlatSchema]] flattens. */
+  /** The fields of an item document that [[readItems]] flattens. */
   private val itemDocSchema = {
     import org.apache.spark.sql.types._
     StructType(Seq(
@@ -300,38 +291,46 @@ object Stac {
     * under `itemsDir` parses into one FLAT row with an explicit schema
     * (nothing inferred — the `02b:112-123` schema discipline), so a
     * client filters the catalog by domain/dimension/extent/hosting with
-    * ordinary column predicates instead of walking JSON files. The
-    * documents are pretty-printed (one per file), hence multiLine; the
-    * read goes through whatever filesystem — or none: the JSON source
-    * is Spark's own — the path's scheme names, and at catalog scale the
-    * per-file parse fans out across executors like every other stage.
-    * The item documents are the catalog's only copy, so a document
-    * written by any route is what the next read answers. */
-  def readItems(spark: SparkSession, itemsDir: String): DataFrame =
-    // an empty catalog is an empty result, not an unmatched-glob error
-    if (listItemIds(itemsDir, spark.sparkContext.hadoopConfiguration).isEmpty)
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        itemsFlatSchema)
-    else spark.read.schema(itemDocSchema).option("multiLine", "true")
-      .json(s"$itemsDir/*.json")
+    * ordinary column predicates instead of walking JSON files.
+    *
+    * The documents are read on the DRIVER (one listing, then one
+    * [[WriFs.readString]] per `*.json` whose name does not start with
+    * `.` or `_` — the file set Spark's JSON source would scan) and
+    * parsed by Spark's own JSON parser (`from_json`) over a local
+    * relation. Catalyst then evaluates filters, projections and limits
+    * over the result on the driver, so a catalog lookup runs no Spark
+    * job. The trade: the reads are no longer fanned out across
+    * executors. That is right at the paper's 82 items and at SCALE's
+    * 1,000; a remote-store catalog of far more items would need
+    * parallel reads. The item documents are the catalog's only copy, so
+    * a document written by any route is what the next read answers. */
+  def readItems(spark: SparkSession, itemsDir: String): DataFrame = {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    WriFs.listNames(itemsDir, conf)
+      .filter(n => n.endsWith(".json") && !n.startsWith(".") &&
+        !n.startsWith("_"))
+      .sorted.map(n => WriFs.readString(s"$itemsDir/$n", conf))
+      .toDF("doc")
+      .select(from_json(col("doc"), itemDocSchema).as("d"))
       .select(
-        col("id").as("item_id"),
-        col("collection"),
-        col("properties.datetime").as("datetime"),
-        col("properties.data_type").as("data_type"),
-        col("properties.wri_domain").as("wri_domain"),
-        col("properties.wri_dimension").as("wri_dimension"),
-        col("properties.is_hosted").as("is_hosted"),
-        col("bbox")(0).as("bbox_w"), col("bbox")(1).as("bbox_s"),
-        col("bbox")(2).as("bbox_e"), col("bbox")(3).as("bbox_n"),
-        col("assets.data.href").as("href"))
+        col("d.id").as("item_id"),
+        col("d.collection").as("collection"),
+        col("d.properties.datetime").as("datetime"),
+        col("d.properties.data_type").as("data_type"),
+        col("d.properties.wri_domain").as("wri_domain"),
+        col("d.properties.wri_dimension").as("wri_dimension"),
+        col("d.properties.is_hosted").as("is_hosted"),
+        col("d.bbox")(0).as("bbox_w"), col("d.bbox")(1).as("bbox_s"),
+        col("d.bbox")(2).as("bbox_e"), col("d.bbox")(3).as("bbox_n"),
+        col("d.assets.data.href").as("href"))
+  }
 
   /** Catalog search over [[readItems]] rows: items whose bbox
     * INTERSECTS [lonMin, lonMax] x [latMin, latMax] (the standard STAC
     * bbox-overlap test: disjoint iff one box lies wholly past the
-    * other on either axis). A plain filter, so Catalyst pushes it into
-    * the item scan. */
+    * other on either axis). A plain column predicate, so Catalyst
+    * evaluates it with the rest of the catalog read. */
   def bboxIntersects(lonMin: Double, latMin: Double, lonMax: Double,
       latMax: Double): org.apache.spark.sql.Column =
     !(col("bbox_e") < lonMin || col("bbox_w") > lonMax ||
@@ -940,10 +939,13 @@ object Stac {
   /** Full stage 02: items + collection + catalog under stacRoot. */
   def run(spark: SparkSession, consistent: DataFrame, stacRoot: String,
       hostedProbe: String => Boolean = _ => false): DataFrame = {
+    import spark.implicits._
     assertRequired(consistent)
-    val items = buildItems(spark, consistent, hostedProbe)
     val itemsDir = s"$stacRoot/collections/$collectionId/items"
-    writeItems(items, itemsDir)
+    // a local result: an action on it never re-runs buildItems (and so
+    // never re-sends the hosting probe)
+    val items = writeItems(buildItems(spark, consistent, hostedProbe),
+      itemsDir).toDF("item_id", "is_hosted", "json")
     // S9: crawl the items directory (not the in-memory DF) for the
     // collection's rel=item links, exactly like the reference's dir_ls
     // re-scan (`02b:312-322`) — picks up items from earlier runs too

@@ -268,7 +268,7 @@ object TiffIO {
         "(II) TIFFs only")
 
   /** One strip or tile: decompress, undo the predictor, read w*h floats. */
-  private def decodeBlock(bytes: Array[Byte], compression: Int,
+  private[wri] def decodeBlock(bytes: Array[Byte], compression: Int,
       predictor: Int, w: Int, h: Int): Array[Float] = {
     val raw = undoPredictor(decompress(bytes, compression, w * h * 4),
       predictor, w, h)

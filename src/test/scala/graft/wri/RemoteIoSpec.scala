@@ -278,6 +278,61 @@ class RemoteIoSpec extends SparkSpec {
     assert(far.isEmpty, "an uncovered box must answer empty")
   }
 
+  test("getLayerData's catalog resolve runs no Spark job, and a " +
+      "refreshCatalog between two calls is visible to the second") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    val rRoot = Files.createTempDirectory("wriresolve").toString
+    val inputs = Fixtures.writeCogInputs(rRoot, n = 2, w = 96, h = 64)
+    val stacRoot = s"$rRoot/stac"
+    val cogDir = s"$stacRoot/collections/${Model.collectionId}/cogs"
+    Cog.run(spark, inputs.toDF("filepath", "cog_filename"), cogDir,
+      TiffWriter.CogOptions(blockSize = 32)).count()
+    val gx = -5216639.6695348294
+    val gy = 6199081.688491997
+    def meta(files: Seq[String]) = files.toDF("cog_filename").select(
+      col("cog_filename"), lit(5070).as("crs_epsg"),
+      lit("indicator").as("data_type"), lit("water").as("wri_domain"),
+      lit("status").as("wri_dimension"),
+      lit(gx).as("extent_xmin"), lit(gx + 96 * 90.0).as("extent_xmax"),
+      lit(gy - 64 * 90.0).as("extent_ymin"), lit(gy).as("extent_ymax"),
+      col("cog_filename").as("filepath"), col("cog_filename").as("filename"))
+    val itemsDir = s"$stacRoot/collections/${Model.collectionId}/items"
+    Stac.run(spark, meta(Seq("layer_0.tif")), stacRoot)
+    val (minx, miny) = (gx + 10.3 * 90.0, gy - 50.7 * 90.0)
+    val (maxx, maxy) = (gx + 80.6 * 90.0, gy - 5.2 * 90.0)
+    // job ids are sequential: the gap between two marker jobs counts
+    // every job submitted in between
+    val sc = spark.sparkContext
+    def marker(): Int = {
+      val f = sc.parallelize(Seq(1), 1).countAsync()
+      f.get()
+      f.jobIds.head
+    }
+    def jobsDuring(body: => Any): Int = {
+      val a = marker(); body; marker() - a - 1
+    }
+    // an uncovered box: the call is the resolve alone
+    assert(jobsDuring(Stac.getLayerData(spark, itemsDir, "layer_0",
+      gx + 5000 * 90.0, miny, gx + 5100 * 90.0, maxy)) == 0)
+    // a covered box: the resolve plus the crop's one header job
+    assert(jobsDuring(Stac.getLayerData(spark, itemsDir, "layer_0",
+      minx, miny, maxx, maxy)) == 1)
+    val e = intercept[IllegalArgumentException] {
+      Stac.getLayerData(spark, itemsDir, "layer_1", minx, miny, maxx, maxy)
+    }
+    assert(e.getMessage.contains("not in the catalog"), e.getMessage)
+    Stac.refreshCatalog(spark, meta(Seq("layer_0.tif", "layer_1.tif")),
+      stacRoot)
+    def pixels(df: org.apache.spark.sql.DataFrame) =
+      df.select("x", "y", "vs").collect().map(_.toSeq).toSeq
+        .sortBy(r => (r(0).asInstanceOf[Int], r(1).asInstanceOf[Int]))
+    val viaCatalog = pixels(Stac.getLayerData(spark, itemsDir, "layer_1",
+      minx, miny, maxx, maxy))
+    assert(viaCatalog.nonEmpty && viaCatalog == pixels(CogQuery.readWindowGeo(
+      spark, cogDir, Seq("layer_1.tif"), minx, miny, maxx, maxy)))
+  }
+
   test("authenticated range reads: a token-protected mirror 401s the " +
       "bare reader with the conf key named, and the SAME consumer verbs " +
       "succeed once the per-host auth header is configured") {
@@ -451,6 +506,7 @@ class RemoteIoSpec extends SparkSpec {
         intercept[java.io.IOException] {
           new HttpRangeReader(
             s"$base/${Paths.get(cogFile).getFileName}", maxAttempts = 2)
+            .length
         }
     }
   }
@@ -531,6 +587,80 @@ class RemoteIoSpec extends SparkSpec {
       assert(headers.asScala.nonEmpty &&
         headers.asScala.forall(_ == "identity"))
     } finally server.stop(0)
+  }
+
+  test("every HEAD and GET the range reader sends announces " +
+      "Connection: close, and a configured auth header still rides along") {
+    val dir = Paths.get(cogFile).getParent.toString
+    val name = Paths.get(cogFile).getFileName.toString
+    val bearer = "Authorization" -> "Bearer close-7"
+    val seen =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    TestHttp.withHttpServer(dir, requireAuth = Some(bearer),
+        connection = Some(seen)) { base =>
+      val url = s"$base/$name"
+      // requireAuth answers 401 to any request without the bearer, so
+      // each call succeeding shows the header rode along
+      assert(new HttpRangeReader(url, headers = Seq(bearer)).length ==
+        Files.size(Paths.get(cogFile)))
+      val r = new HttpRangeReader(url, headers = Seq(bearer))
+      r.readPrefix(1024)
+      r.readFully(100, new Array[Byte](16))
+    }
+    val got = seen.asScala.toSeq
+    assert(got.map(_._1).sorted == Seq("GET", "GET", "HEAD"), got)
+    assert(got.forall(_._2.equalsIgnoreCase("close")), got)
+  }
+
+  test("an open plus its header prefix is ONE request, the length comes " +
+      "with it, and a crop's chunk tasks fetch only tiles; a file shorter " +
+      "than the prefix reads whole from a clamped 206 and from a 200") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("wrioneopen").toString
+    Cog.run(spark, Fixtures.writeCogInputs(dir, n = 1)
+        .toDF("filepath", "cog_filename"), s"$dir/cogs",
+      TiffWriter.CogOptions(blockSize = 32)).count()
+    val cog = "layer_0.tif"
+    val whole = Files.readAllBytes(Paths.get(s"$dir/cogs/$cog"))
+    Files.write(Paths.get(s"$dir/cogs/short.bin"), whole.take(100))
+    val requested = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    withHttpServer(s"$dir/cogs", requested = Some(requested)) { base =>
+      val r = new HttpRangeReader(s"$base/$cog")
+      assert(java.util.Arrays.equals(r.readPrefix(1024), whole.take(1024)))
+      assert(r.length == whole.length.toLong)
+      assert(requested.size == 1, requested)
+      // clamped 206: the server shortens the range to the object
+      val s = new HttpRangeReader(s"$base/short.bin")
+      assert(java.util.Arrays.equals(s.readPrefix(1024), whole.take(100)))
+      assert(s.length == 100L && requested.size == 2, requested)
+      // a crop: the header job's one prefix request, then only the
+      // window's tile ranges — no HEAD and no second prefix read
+      requested.clear()
+      val gx = -5216639.6695348294
+      val gy = 6199081.688491997
+      val (minx, miny, maxx, maxy) =
+        (gx + 10.3 * 90.0, gy - 50.7 * 90.0, gx + 80.6 * 90.0, gy - 5.2 * 90.0)
+      val crop = CogQuery.readWindowGeo(spark, base, Seq(cog),
+        minx, miny, maxx, maxy).collect()
+      val local = CogQuery.windowStatsGeo(spark, s"$dir/cogs", Seq(cog),
+        minx, miny, maxx, maxy).head()
+      assert(local.getAs[Long]("tiles_read") > 1L)
+      assert(crop.length.toLong ==
+        local.getAs[Long]("n_valid") + local.getAs[Long]("n_nan"))
+      assert(requested.size.toLong == 1L + local.getAs[Long]("tiles_read"),
+        requested)
+    }
+    withHttpServer(s"$dir/cogs", ignoreRange = true) { base =>
+      // a 200 whose body fits the prefix is the whole object: accepted
+      val s = new HttpRangeReader(s"$base/short.bin")
+      assert(java.util.Arrays.equals(s.readPrefix(1024), whole.take(100)))
+      assert(s.length == 100L)
+      // a 200 larger than the prefix means Range was ignored: refused
+      val e = intercept[IllegalArgumentException] {
+        new HttpRangeReader(s"$base/$cog").readPrefix(1024)
+      }
+      assert(e.getMessage.contains("Range"), e.getMessage)
+    }
   }
 
   test("the built-in hosting probe has auth parity with the range " +

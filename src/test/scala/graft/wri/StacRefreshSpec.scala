@@ -213,15 +213,93 @@ class StacRefreshSpec extends SparkSpec {
         collection.list().mkString(", "))
   }
 
+  test("readItems equals Spark's JSON file scan of the item documents: " +
+      "a malformed document, a wrong-typed bbox, names starting with _ " +
+      "or . and a .json.tmp, an empty and a missing directory") {
+    val root = java.nio.file.Files
+      .createTempDirectory("stac_read_oracle").toString
+    val itemsDir = s"$root/items"
+    Stac.writeItems(Stac.buildItems(spark, consistentOf(Seq(
+      "a.tif" -> 0.0, "b.tif" -> 900.0)), hostedProbe = _ == "a.tif"),
+      itemsDir)
+    val doc = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$itemsDir/a.json"))
+    def put(name: String, text: String): Unit =
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$itemsDir/$name"), text)
+    put("malformed.json", doc.take(doc.length / 2))
+    put("wrongbbox.json", doc.replace("\"id\" : \"a\"", "\"id\" : \"wb\"")
+      .replaceFirst("(?s)\"bbox\" : \\[.*?\\]", "\"bbox\" : \"west\""))
+    put("_hidden.json", doc.replace("\"id\" : \"a\"", "\"id\" : \"u\""))
+    put(".hidden.json", doc.replace("\"id\" : \"a\"", "\"id\" : \"d\""))
+    put("c.json.tmp", doc.replace("\"id\" : \"a\"", "\"id\" : \"t\""))
+    assert(doc.contains("\"id\" : \"a\"") &&
+      !java.nio.file.Files.readString(java.nio.file.Paths.get(
+        s"$itemsDir/wrongbbox.json")).contains("\"bbox\" : ["))
+    // the file-source scan readItems replaced, rebuilt as the oracle
+    val docSchema = {
+      import org.apache.spark.sql.types._
+      StructType(Seq(
+        StructField("id", StringType),
+        StructField("collection", StringType),
+        StructField("bbox", ArrayType(DoubleType)),
+        StructField("properties", StructType(Seq(
+          StructField("datetime", StringType),
+          StructField("data_type", StringType),
+          StructField("wri_domain", StringType),
+          StructField("wri_dimension", StringType),
+          StructField("is_hosted", BooleanType)))),
+        StructField("assets", StructType(Seq(
+          StructField("data", StructType(Seq(
+            StructField("href", StringType)))))))))
+    }
+    def scan(dir: String): DataFrame =
+      spark.read.schema(docSchema).option("multiLine", "true")
+        .json(s"$dir/*.json")
+        .select(
+          col("id").as("item_id"),
+          col("collection"),
+          col("properties.datetime").as("datetime"),
+          col("properties.data_type").as("data_type"),
+          col("properties.wri_domain").as("wri_domain"),
+          col("properties.wri_dimension").as("wri_dimension"),
+          col("properties.is_hosted").as("is_hosted"),
+          col("bbox")(0).as("bbox_w"), col("bbox")(1).as("bbox_s"),
+          col("bbox")(2).as("bbox_e"), col("bbox")(3).as("bbox_n"),
+          col("assets.data.href").as("href"))
+    val want = scan(itemsDir)
+    val got = Stac.readItems(spark, itemsDir)
+    assert(got.schema == want.schema, got.schema.treeString)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
+      .sortBy(_.mkString("|"))
+    assert(rows(got) == rows(want))
+    val ids = rows(got).map(_.head).toSet
+    assert(Set[Any]("a", "b").subsetOf(ids) &&
+      (ids & Set[Any]("u", "d", "t")).isEmpty, ids)
+    // an empty and a missing directory: the old read's listing gate
+    // answered both with an empty table of the same shape
+    val empty = s"$root/empty"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(empty))
+    for (dir <- Seq(empty, s"$root/missing")) {
+      val r = Stac.readItems(spark, dir)
+      assert(r.schema == want.schema && r.isEmpty, dir)
+    }
+  }
+
   test("Stac.run builds each item once: the hosting probe runs exactly " +
       "once per item across the whole publish") {
     val root = java.nio.file.Files
       .createTempDirectory("stac_probe_once").toString
     val calls = spark.sparkContext.longAccumulator("stac_probe_calls")
-    Stac.run(spark, consistentOf(Seq(
+    val items = Stac.run(spark, consistentOf(Seq(
       "a.tif" -> 0.0, "b.tif" -> 0.0, "c.tif" -> 0.0)), root,
       hostedProbe = { _ => calls.add(1); true })
     assert(calls.value == 3L, s"${calls.value} probe calls for 3 items")
+    // the returned rows are local: acting on them probes nothing again
+    assert(items.count() == 3L)
+    assert(items.filter(col("is_hosted")).count() == 3L)
+    assert(calls.value == 3L,
+      s"${calls.value} probe calls after counting Stac.run's result")
     assert(Stac.listItemIds(
       s"$root/collections/${Model.collectionId}/items") ==
       Seq("a", "b", "c"))

@@ -10,7 +10,8 @@ import java.util.concurrent.atomic.AtomicInteger
   * and a Range-ignoring server. `requested` records EVERY request's
   * path (HEAD included — "zero requests for excluded layers" audits);
   * `gets` records GET paths only (fetch-count economy assertions, where
-  * the HEAD length probe must not count as a byte fetch). */
+  * the HEAD length probe must not count as a byte fetch); `connection`
+  * records each request's method and `Connection` header. */
 object TestHttp {
   def withHttpServer[T](dir: String,
       ignoreRange: Boolean = false,
@@ -22,6 +23,8 @@ object TestHttp {
         None,
       gets: Option[java.util.concurrent.ConcurrentLinkedQueue[String]] =
         None,
+      connection: Option[
+        java.util.concurrent.ConcurrentLinkedQueue[(String, String)]] = None,
       // when set, every request must carry this exact (name, value)
       // header or be answered 401 — the token-protected-mirror knob
       requireAuth: Option[(String, String)] = None)(f: String => T): T = {
@@ -33,6 +36,9 @@ object TestHttp {
       requested.foreach(_.add(exchange.getRequestURI.getPath))
       if (exchange.getRequestMethod == "GET")
         gets.foreach(_.add(exchange.getRequestURI.getPath))
+      connection.foreach(_.add((exchange.getRequestMethod,
+        Option(exchange.getRequestHeaders.getFirst("Connection"))
+          .getOrElse("<none>"))))
       if (failures.getAndDecrement() > 0) {
         // die without a response: the client sees a transient IOException
         exchange.close()
