@@ -45,79 +45,6 @@ object CogQuery {
       n_valid: Long, n_nan: Long,
       vs_sum: Long, vs_min: Option[Long], vs_max: Option[Long])
 
-  /** The shared per-layer fold: fetch + decode exactly the tiles of
-    * `layouts(level)` that intersect the half-open pixel window
-    * [x0, xEnd) x [y0, yEnd) (already in that level's grid; may lie
-    * partly or fully outside the raster — it is clamped here), and
-    * aggregate scaled-integer stats. `prefixLen` counts toward
-    * bytes_read (the one header range request already paid). */
-  private def statsOverWindow(name: String, raf: RangeReader,
-      prefixLen: Int, layouts: Seq[TiffIO.LevelLayout],
-      level: Int, x0: Int, y0: Int, xEnd: Int, yEnd: Int,
-      scale: Long): CogWindowStat = {
-    require(level < layouts.length,
-      s"$name has ${layouts.length} levels, requested $level")
-    val full = layouts(level)
-    val tw = full.tileWidth
-    val th = full.tileHeight
-    require(tw > 0 && th > 0, s"$name is not tiled — not a COG")
-    val tilesAcross = (full.width + tw - 1) / tw
-    val tilesDown = (full.height + th - 1) / th
-    val xLo = math.max(0, x0); val xHi = math.min(full.width, xEnd)
-    val yLo = math.max(0, y0); val yHi = math.min(full.height, yEnd)
-    var tilesRead = 0L
-    var bytesRead = prefixLen.toLong
-    var nValid = 0L
-    var nNan = 0L
-    var vsSum = 0L
-    var vsMin = Long.MaxValue
-    var vsMax = Long.MinValue
-    if (xLo < xHi && yLo < yHi) {
-      val c0 = xLo / tw; val c1 = (xHi - 1) / tw
-      val r0 = yLo / th; val r1 = (yHi - 1) / th
-      var r = r0
-      while (r <= r1) {
-        var c = c0
-        while (c <= c1) {
-          val t = r * tilesAcross + c
-          val cnt = full.tileByteCounts(t).toInt
-          val buf = new Array[Byte](cnt)
-          raf.readFully(full.tileOffsets(t), buf) // range req #2..k
-          tilesRead += 1
-          bytesRead += cnt
-          val px = TiffIO.decodeLevelTile(full, buf)
-          val pxLo = math.max(xLo, c * tw)
-          val pxHi = math.min(xHi, (c + 1) * tw)
-          val pyLo = math.max(yLo, r * th)
-          val pyHi = math.min(yHi, (r + 1) * th)
-          var y = pyLo
-          while (y < pyHi) {
-            var x = pxLo
-            while (x < pxHi) {
-              val v = px((y - r * th) * tw + (x - c * tw))
-              if (java.lang.Float.isNaN(v)) nNan += 1
-              else {
-                val vs = Math.round(v.toDouble * scale)
-                nValid += 1
-                vsSum += vs
-                if (vs < vsMin) vsMin = vs
-                if (vs > vsMax) vsMax = vs
-              }
-              x += 1
-            }
-            y += 1
-          }
-          c += 1
-        }
-        r += 1
-      }
-    }
-    CogWindowStat(name, tilesAcross.toLong * tilesDown, tilesRead,
-      bytesRead, raf.length, nValid, nNan, vsSum,
-      if (nValid == 0) None else Some(vsMin),
-      if (nValid == 0) None else Some(vsMax))
-  }
-
   case class CogZonalStat(
       layer: String, window_id: Long, tiles_read: Long,
       n_valid: Long, n_nan: Long,
@@ -127,11 +54,10 @@ object CogQuery {
     * catalog client's real ask: per-admin-region statistics over every
     * layer, not one window per call). One task per layer; within a
     * task every window maps onto the pixel grid from the one header
-    * prefix, the needed tiles are COALESCED — each tile the union of
-    * windows touches is fetched and decoded exactly ONCE, in
-    * file-offset order (sequential ranges, the friendliest shape for
-    * HTTP/object-store reads) — and every window's integer-exact
-    * accumulator folds the pixels of its intersection with that tile.
+    * prefix and [[foldWindows]] COALESCES the needed tiles — each tile
+    * the union of windows touches is fetched and decoded exactly ONCE —
+    * while every window's integer-exact accumulator folds the pixels of
+    * its intersection with that tile.
     * Cost per layer: one prefix + O(union-of-window tiles) bytes,
     * however many windows ask; overlapping windows stop costing
     * duplicate fetches, which is exactly where the one-window-per-call
@@ -171,85 +97,104 @@ object CogQuery {
     spark.createDataset(
       withReaderAt(spark, layers.map(n => (n, s"$cogDir/$n")), prefixBytes) {
         (name, raf, prefix) =>
-          zonalOverWindows(name, raf, prefix, winBc.value, scale, level)
+          val lv = levelOf(name, prefix, level)
+          val ws = winBc.value
+          val accs = ws.map { case (_, minx, miny, maxx, maxy) =>
+            val (x0, xEnd, y0, yEnd) =
+              boxToPixels(prefix, lv, minx, miny, maxx, maxy)
+            new Window(lv, x0, xEnd, y0, yEnd)
+          }
+          foldWindows(name, raf, lv, accs, scale)
+          ws.lazyZip(accs).map { (w, a) =>
+            CogZonalStat(name, w._1, a.tiles, a.nValid, a.nNan, a.vsSum,
+              a.min, a.max)
+          }
       }.flatMap(identity)).toDF()
   }
 
-  /** Parse the header prefix into the level's grid: (all layouts, the
-    * level layout, resX, resY, originX, originY) with the level-0 cell
-    * size scaled to `level`'s grid (exact powers of two for the
-    * writer's own pyramids). ONE implementation for every geographic
-    * verb — the mapping rule is oracle-load-bearing. */
-  private def geoGrid(name: String, prefix: TiffIO.HeaderPrefix,
-      level: Int): (Seq[TiffIO.LevelLayout], TiffIO.LevelLayout,
-        Double, Double, Double, Double) = {
+  /** `level`'s tile layout from the header prefix, refused loudly past
+    * the pyramid's depth. */
+  private def levelOf(name: String, prefix: TiffIO.HeaderPrefix,
+      level: Int): TiffIO.LevelLayout = {
     val layouts = prefix.layouts
     require(level < layouts.length,
       s"$name has ${layouts.length} levels, requested $level")
-    val (resX0, resY0, gx, gy) = prefix.geoTransform
-    val l0 = layouts.head
-    val lv = layouts(level)
-    (layouts, lv, resX0 * l0.width.toDouble / lv.width,
-      resY0 * l0.height.toDouble / lv.height, gx, gy)
+    layouts(level)
   }
 
-  /** The floor/ceil pixel-is-area mapping of one CRS box onto the grid
-    * — every pixel whose cell intersects the box, as UNCLAMPED
-    * half-open bounds (x0, xEnd, y0, yEnd); callers clamp. */
-  private def boxToPixels(resX: Double, resY: Double, gx: Double,
-      gy: Double, minx: Double, miny: Double, maxx: Double,
-      maxy: Double): (Int, Int, Int, Int) =
+  /** The floor/ceil pixel-is-area mapping of one CRS box onto `lv`'s
+    * grid — every pixel whose cell intersects the box, as UNCLAMPED
+    * half-open bounds (x0, xEnd, y0, yEnd); [[Window]] clamps. The
+    * geotransform names the level-0 grid, so the cell size scales by
+    * `width0 / widthL` per axis (exact powers of two for the writer's
+    * own pyramids). ONE implementation for every geographic verb — the
+    * mapping rule is oracle-load-bearing. */
+  private def boxToPixels(prefix: TiffIO.HeaderPrefix,
+      lv: TiffIO.LevelLayout, minx: Double, miny: Double, maxx: Double,
+      maxy: Double): (Int, Int, Int, Int) = {
+    val (resX0, resY0, gx, gy) = prefix.geoTransform
+    val l0 = prefix.layouts.head
+    val resX = resX0 * l0.width.toDouble / lv.width
+    val resY = resY0 * l0.height.toDouble / lv.height
     (math.floor((minx - gx) / resX).toInt,
       math.ceil((maxx - gx) / resX).toInt,
       math.floor((gy - maxy) / resY).toInt,
       math.ceil((gy - miny) / resY).toInt)
+  }
 
-  private def zonalOverWindows(name: String, raf: RangeReader,
-      prefix: TiffIO.HeaderPrefix,
-      windows: Seq[(Long, Double, Double, Double, Double)],
-      scale: Long, level: Int): Seq[CogZonalStat] = {
-    val (_, full, resX, resY, gx, gy) = geoGrid(name, prefix, level)
-    val tw = full.tileWidth
-    val th = full.tileHeight
+  /** One window on `lv`'s grid: the half-open pixel rectangle
+    * [x0, xEnd) x [y0, yEnd) clamped to the raster (it may lie partly
+    * or wholly outside), and the integer-exact stats [[foldWindows]]
+    * accumulates over it. */
+  private final class Window(lv: TiffIO.LevelLayout, x0: Int, xEnd: Int,
+      y0: Int, yEnd: Int) {
+    val xLo = math.max(0, x0); val xHi = math.min(lv.width, xEnd)
+    val yLo = math.max(0, y0); val yHi = math.min(lv.height, yEnd)
+    var tiles = 0L; var nValid = 0L; var nNan = 0L
+    var vsSum = 0L; var vsMin = Long.MaxValue; var vsMax = Long.MinValue
+    def min: Option[Long] = if (nValid == 0) None else Some(vsMin)
+    def max: Option[Long] = if (nValid == 0) None else Some(vsMax)
+
+    /** Indices of the tiles the clamped rectangle touches, row-major. */
+    def tileIndices: Seq[Int] = {
+      val (tw, th) = (lv.tileWidth, lv.tileHeight)
+      val across = (lv.width + tw - 1) / tw
+      if (xLo >= xHi || yLo >= yHi) Seq.empty
+      else for {
+        r <- yLo / th to (yHi - 1) / th
+        c <- xLo / tw to (xHi - 1) / tw
+      } yield r * across + c
+    }
+  }
+
+  /** THE stats fold of every windowed verb ([[windowStats]],
+    * [[windowStatsGeo]], [[windowStatsGeoAt]], [[zonalStatsGeo]]): the
+    * tiles are COALESCED — each tile the union of `windows` touches is
+    * fetched and decoded exactly ONCE, in file-offset order (sequential
+    * ranges, the friendliest shape for HTTP/object-store reads) — and
+    * every window touching a tile folds the pixels of its intersection
+    * with it: `round(v * scale)` summed, min'd and max'd as longs, NaN
+    * pixels counted apart. `tiles` counts each window's LOGICAL tiles.
+    * Returns the tile bytes fetched. */
+  private def foldWindows(name: String, raf: RangeReader,
+      lv: TiffIO.LevelLayout, windows: Seq[Window], scale: Long): Long = {
+    val tw = lv.tileWidth
+    val th = lv.tileHeight
     require(tw > 0 && th > 0, s"$name is not tiled — not a COG")
-    val tilesAcross = (full.width + tw - 1) / tw
-    // per-window accumulator over its clamped pixel rect (the same
-    // floor/ceil pixel-is-area mapping as windowStatsGeo)
-    class Acc(val id: Long, val xLo: Int, val xHi: Int,
-        val yLo: Int, val yHi: Int) {
-      var tiles = 0L; var nValid = 0L; var nNan = 0L
-      var vsSum = 0L; var vsMin = Long.MaxValue; var vsMax = Long.MinValue
-    }
-    val accs = windows.map { case (id, minx, miny, maxx, maxy) =>
-      val (x0, xEnd, y0, yEnd) =
-        boxToPixels(resX, resY, gx, gy, minx, miny, maxx, maxy)
-      new Acc(id, math.max(0, x0), math.min(full.width, xEnd),
-        math.max(0, y0), math.min(full.height, yEnd))
-    }
+    val tilesAcross = (lv.width + tw - 1) / tw
     // the COALESCING step: tile -> every window that touches it
     val byTile = scala.collection.mutable.LinkedHashMap
-      .empty[Int, scala.collection.mutable.ArrayBuffer[Acc]]
-    accs.foreach { a =>
-      if (a.xLo < a.xHi && a.yLo < a.yHi) {
-        var r = a.yLo / th
-        while (r <= (a.yHi - 1) / th) {
-          var c = a.xLo / tw
-          while (c <= (a.xHi - 1) / tw) {
-            byTile.getOrElseUpdate(r * tilesAcross + c,
-              scala.collection.mutable.ArrayBuffer.empty[Acc]) += a
-            c += 1
-          }
-          r += 1
-        }
-      }
-    }
-    // fetch each needed tile ONCE, in offset order (sequential ranges)
-    byTile.toSeq.sortBy { case (t, _) => full.tileOffsets(t) }
+      .empty[Int, scala.collection.mutable.ArrayBuffer[Window]]
+    windows.foreach(a => a.tileIndices.foreach(t => byTile.getOrElseUpdate(t,
+      scala.collection.mutable.ArrayBuffer.empty[Window]) += a))
+    var fetched = 0L
+    byTile.toSeq.sortBy { case (t, _) => lv.tileOffsets(t) }
       .foreach { case (t, ws) =>
-        val cnt = full.tileByteCounts(t).toInt
+        val cnt = lv.tileByteCounts(t).toInt
         val buf = new Array[Byte](cnt)
-        raf.readFully(full.tileOffsets(t), buf)
-        val px = TiffIO.decodeLevelTile(full, buf)
+        raf.readFully(lv.tileOffsets(t), buf)
+        fetched += cnt
+        val px = TiffIO.decodeLevelTile(lv, buf)
         val c = t % tilesAcross; val r = t / tilesAcross
         ws.foreach { a =>
           a.tiles += 1
@@ -276,10 +221,7 @@ object CogQuery {
           }
         }
       }
-    accs.map(a => CogZonalStat(name, a.id, a.tiles, a.nValid, a.nNan,
-      a.vsSum,
-      if (a.nValid == 0) None else Some(a.vsMin),
-      if (a.nValid == 0) None else Some(a.vsMax)))
+    fetched
   }
 
   /** The DATA form of the consumption verbs — the reference's
@@ -302,7 +244,8 @@ object CogQuery {
     * grouped into per-task CHUNKS of [[ReadChunkTiles]]; the header job
     * hands each chunk its tiles' byte ranges and the level's decode
     * parameters, so a chunk task opens the reader and fetches exactly
-    * those ranges — no header read, and over HTTP no HEAD either.
+    * those ranges — no header read, and over HTTP no HEAD either — then
+    * closes it and streams its rows out one decoded tile at a time.
     * SCALE-pinned: the 16-layer 2048x2048 crop (67M pixel
     * rows, 128 chunk tasks) answers in single-digit seconds at sf0.1
     * (SCALE.md `cog_crop_16layers_2k`). */
@@ -334,23 +277,18 @@ object CogQuery {
     // stay correct-by-construction — no name->path lookup.
     val perTarget = withReaderAt(spark, targets, prefixBytes) {
       (name, _, prefix) =>
-        val (_, full, resX, resY, gx, gy) = geoGrid(name, prefix, level)
-        val tw = full.tileWidth; val th = full.tileHeight
+        val lv = levelOf(name, prefix, level)
+        val tw = lv.tileWidth; val th = lv.tileHeight
         require(tw > 0 && th > 0, s"$name is not tiled — not a COG")
-        val tilesAcross = (full.width + tw - 1) / tw
         val (x0, xEnd, y0, yEnd) =
-          boxToPixels(resX, resY, gx, gy, minx, miny, maxx, maxy)
-        val xLo = math.max(0, x0); val xHi = math.min(full.width, xEnd)
-        val yLo = math.max(0, y0); val yHi = math.min(full.height, yEnd)
-        if (xLo >= xHi || yLo >= yHi) Seq.empty[CropChunk]
-        else (for {
-          r <- yLo / th to (yHi - 1) / th
-          c <- xLo / tw to (xHi - 1) / tw
-          t = r * tilesAcross + c
-        } yield (t, full.tileOffsets(t), full.tileByteCounts(t)))
+          boxToPixels(prefix, lv, minx, miny, maxx, maxy)
+        val win = new Window(lv, x0, xEnd, y0, yEnd)
+        win.tileIndices
+          .map(t => (t, lv.tileOffsets(t), lv.tileByteCounts(t)))
           .grouped(ReadChunkTiles)
-          .map(ts => CropChunk(xLo, xHi, yLo, yHi, tw, th, tilesAcross,
-            full.compression, full.predictor, ts.toList)).toSeq
+          .map(ts => CropChunk(win.xLo, win.xHi, win.yLo, win.yHi, tw, th,
+            (lv.width + tw - 1) / tw, lv.compression, lv.predictor,
+            ts.toList)).toSeq
     }.collect() // chunk plans: metadata-sized
     val chunks = targets.zip(perTarget).flatMap {
       case ((name, path), cs) => cs.map((name, path, _))
@@ -359,8 +297,8 @@ object CogQuery {
       return Seq.empty[(String, Int, Int, Option[Long])]
         .toDF("layer", "x", "y", "vs")
     // job 2 (one task per chunk, spread by parallelize with no
-    // shuffle): ONE reader open, then exactly the chunk's tile ranges;
-    // decode one tile at a time and emit its in-window pixels
+    // shuffle): ONE reader open fetches exactly the chunk's tile ranges
+    // and closes; the rows then stream out one decoded tile at a time
     val confBc = WriFs.confBroadcast(spark)
     val sc = spark.sparkContext
     spark.createDataset(
@@ -369,25 +307,26 @@ object CogQuery {
           val conf = confBc.value.value
           it.flatMap { case (name, path, ch) =>
             val raf = RangeReader.open(path, conf)
-            try ch.tiles.flatMap { case (t, offset, byteCount) =>
+            val fetched = try ch.tiles.map { case (t, offset, byteCount) =>
               val buf = new Array[Byte](byteCount.toInt)
               raf.readFully(offset, buf)
-              val (tw, th) = (ch.tileWidth, ch.tileHeight)
+              (t, buf)
+            } finally raf.close()
+            val (tw, th) = (ch.tileWidth, ch.tileHeight)
+            fetched.iterator.flatMap { case (t, buf) =>
               val px = TiffIO.decodeBlock(buf, ch.compression, ch.predictor,
                 tw, th)
               val c = t % ch.tilesAcross; val r = t / ch.tilesAcross
-              for {
-                y <- math.max(ch.yLo, r * th) until
-                  math.min(ch.yHi, (r + 1) * th)
-                x <- math.max(ch.xLo, c * tw) until
-                  math.min(ch.xHi, (c + 1) * tw)
-              } yield {
-                val v = px((y - r * th) * tw + (x - c * tw))
-                (name, x, y,
-                  if (java.lang.Float.isNaN(v)) None
-                  else Some(Math.round(v.toDouble * scale)))
-              }
-            } finally raf.close()
+              val xs = math.max(ch.xLo, c * tw) until
+                math.min(ch.xHi, (c + 1) * tw)
+              (math.max(ch.yLo, r * th) until math.min(ch.yHi, (r + 1) * th))
+                .iterator.flatMap(y => xs.iterator.map { x =>
+                  val v = px((y - r * th) * tw + (x - c * tw))
+                  (name, x, y,
+                    if (java.lang.Float.isNaN(v)) None
+                    else Some(Math.round(v.toDouble * scale)))
+                })
+            }
           }
         }).toDF("layer", "x", "y", "vs")
   }
@@ -427,17 +366,21 @@ object CogQuery {
     *    exist there); NaN only where every input is NaN.
     *
     * Scale shape — three jobs, each the right granularity:
-    *  1. one small task per INPUT: header prefix -> grid signature;
-    *     inputs must share width/height/tile grid/geotransform AND CRS
-    *     exactly (refused loudly otherwise — resampling is a different
+    *  1. one small task per INPUT: header prefix -> [[Grid]] (the
+    *     level-0 tile layout, geotransform and CRS); inputs must share
+    *     width/height/tile grid/geotransform AND CRS exactly (refused
+    *     loudly otherwise — resampling is a different
     *     verb: [[resampleToGrid]]); the derived COG is stamped with the
     *     inputs' shared EPSG code (the `epsg` parameter only labels
     *     inputs that carry no GeoKey of their own);
-    *  2. one task per TILE CHUNK: reads this chunk's tiles from EVERY
-    *     input by byte range ([[ReadChunkTiles]] tiles per task, k
-    *     range reads per tile for k inputs) and combines — an 82-input
-    *     final-score pass over a large grid fans out across the cluster
-    *     at tile granularity instead of serializing behind one writer;
+    *  2. one task per TILE CHUNK, spread by `parallelize` with no
+    *     shuffle: the layouts job 1 collected ride in ONE broadcast, so
+    *     a chunk task reads no header — it opens each input and
+    *     range-reads exactly this chunk's tiles ([[ReadChunkTiles]]
+    *     tiles per task, k range reads per tile for k inputs) and
+    *     combines — an 82-input final-score pass over a large grid fans
+    *     out across the cluster at tile granularity instead of
+    *     serializing behind one writer;
     *  3. ONE writer task: the combined tiles shuffle to a single
     *     assembler that writes the COG (+ pyramid) — the same
     *     one-raster-in-memory unit as a [[Cog.run]] encode task, which
@@ -452,74 +395,69 @@ object CogQuery {
       epsg: Int = Model.Expected.epsg,
       prefixBytes: Int = 16 * 1024,
       combine: String = "wsum"): DataFrame = {
-    import spark.implicits._
     require(inputs.nonEmpty, "no input layers to combine")
     require(combine == "wsum" || combine == "wmean",
       s"combine must be 'wsum' or 'wmean': '$combine'")
     val wmean = combine == "wmean"
-    // job 1: grid signatures, one small task per input
+    // job 1: grids, one small task per input
     val grids = withReaderAt(spark,
-      inputs.map(t => (t._1, t._2)), prefixBytes)(gridSignature)
+      inputs.map(t => (t._1, t._2)), prefixBytes)(gridOf)
       .collect().toSeq
     val ref = grids.head
     grids.foreach { g =>
-      require((g._2, g._3, g._4, g._5, g._6, g._7, g._8, g._9) ==
-        (ref._2, ref._3, ref._4, ref._5, ref._6, ref._7, ref._8, ref._9),
-        s"input '${g._1}' grid (${g._2}x${g._3} tiles ${g._4}x${g._5}) " +
-          s"does not match '${ref._1}' (${ref._2}x${ref._3} tiles " +
-          s"${ref._4}x${ref._5}) — map algebra needs grid-aligned " +
-          "inputs; resample first (resampleToGrid)")
+      require(g.shape == ref.shape,
+        s"input '${g.name}' grid (${g.layout.width}x${g.layout.height} " +
+          s"tiles ${g.layout.tileWidth}x${g.layout.tileHeight}) does not " +
+          s"match '${ref.name}' (${ref.layout.width}x${ref.layout.height} " +
+          s"tiles ${ref.layout.tileWidth}x${ref.layout.tileHeight}) — map " +
+          "algebra needs grid-aligned inputs; resample first " +
+          "(resampleToGrid)")
       // the CRS is part of the grid: equal pixel indices in two
       // different projections are different places on Earth, and the
       // output is stamped with ONE code — combining across codes would
       // silently mislabel the derived raster's georeferencing
-      require(g._10 == ref._10,
-        s"input '${g._1}' CRS (EPSG:${g._10.getOrElse("<unlabelled>")}) " +
-          s"does not match '${ref._1}' " +
-          s"(EPSG:${ref._10.getOrElse("<unlabelled>")}) — map algebra " +
+      require(g.epsg == ref.epsg,
+        s"input '${g.name}' CRS (EPSG:${g.epsg.getOrElse("<unlabelled>")}) " +
+          s"does not match '${ref.name}' " +
+          s"(EPSG:${ref.epsg.getOrElse("<unlabelled>")}) — map algebra " +
           "needs one shared CRS; reproject first")
     }
     // GeoKey 32767 is the USER-DEFINED sentinel, not a CRS code: two
     // rasters in two different custom projections both carry 32767, so
     // sentinel equality proves nothing — refuse rather than combine
     // possibly-different projections under a fake match
-    require(!ref._10.contains(32767),
+    require(!ref.epsg.contains(32767),
       "inputs carry a USER-DEFINED CRS (ProjectedCSTypeGeoKey = 32767): " +
         "equal sentinels do not mean equal projections — write real " +
         "EPSG codes into the rasters before combining")
     // the output inherits the inputs' SHARED code when they carry one;
     // a caller-passed epsg that contradicts it is refused, not obeyed —
     // the parameter only labels inputs that carry no GeoKey themselves
-    val outEpsg = ref._10.getOrElse(epsg)
-    ref._10.foreach { e =>
+    val outEpsg = ref.epsg.getOrElse(epsg)
+    ref.epsg.foreach { e =>
       require(epsg == Model.Expected.epsg || epsg == e,
         s"epsg parameter ($epsg) contradicts the inputs' own CRS " +
           s"(EPSG:$e) — drop the parameter (the inputs' code wins) or " +
           "reproject the inputs")
     }
-    val (w, h, tw, th) = (ref._2, ref._3, ref._4, ref._5)
-    require(tw > 0 && th > 0, s"'${ref._1}' is not tiled — not a COG")
-    val (resX, resY, gx, gy) = (ref._6, ref._7, ref._8, ref._9)
-    val tilesAcross = (w + tw - 1) / tw
-    val tilesDown = (h + th - 1) / th
-    // .toList, not .toSeq: grouped() over a Range yields Range slices,
-    // which the Dataset encoder rejects
-    val chunks = (0 until tilesAcross * tilesDown)
-      .grouped(ReadChunkTiles).map(_.toList).toList
+    val (w, h) = (ref.layout.width, ref.layout.height)
+    val (tw, th) = (ref.layout.tileWidth, ref.layout.tileHeight)
+    require(tw > 0 && th > 0, s"'${ref.name}' is not tiled — not a COG")
+    val chunks = tileChunks(w, h, tw, th)
     val paths = inputs.map(_._2)
     val wts = inputs.map(_._3).toArray
+    val layoutsBc = spark.sparkContext.broadcast(grids.map(_.layout))
     val confBc = WriFs.confBroadcast(spark)
+    val sc = spark.sparkContext
     // job 2: one task per tile chunk — k range reads per tile, combine
-    val combined = spark.createDataset(chunks)
-      .repartition(math.min(chunks.size,
-        spark.sparkContext.defaultParallelism))
-      .mapPartitions { it =>
-        val conf = confBc.value.value
-        it.flatMap { ts =>
-          val readers = paths.map(p => RangeReader.open(p, conf))
-          try {
-            val layouts = readers.map(readPrefix(_, prefixBytes).layouts.head)
-            ts.map { t =>
+    val combined =
+      sc.parallelize(chunks, math.min(chunks.size, sc.defaultParallelism))
+        .mapPartitions { it =>
+          val conf = confBc.value.value
+          val layouts = layoutsBc.value
+          it.flatMap { ts =>
+            val readers = paths.map(p => RangeReader.open(p, conf))
+            try ts.map { t =>
               val pxs = readers.lazyZip(layouts).map { (r, full) =>
                 val buf = new Array[Byte](full.tileByteCounts(t).toInt)
                 r.readFully(full.tileOffsets(t), buf)
@@ -546,14 +484,21 @@ object CogQuery {
                 k += 1
               }
               (t, out)
-            }
-          } finally readers.foreach(_.close())
+            } finally readers.foreach(_.close())
+          }
         }
-      }
     // job 3: one assembler/writer task — the Cog.run task memory unit
-    assembleDerivedCog(combined, w, h, tw, th, outPath,
-      TiffIO.GeoInfo(outEpsg, resX, resY, gx, gy), opts, confBc)
+    assembleDerivedCog(spark, combined, w, h, tw, th, outPath,
+      TiffIO.GeoInfo(outEpsg, ref.resX, ref.resY, ref.gx, ref.gy), opts,
+      confBc)
   }
+
+  /** The full-resolution tile indices of a w x h raster in
+    * [[ReadChunkTiles]]-sized chunks — the unit of one derived-COG
+    * chunk task. */
+  private def tileChunks(w: Int, h: Int, tw: Int, th: Int): Seq[Seq[Int]] =
+    (0 until ((w + tw - 1) / tw) * ((h + th - 1) / th))
+      .grouped(ReadChunkTiles).toSeq
 
   /** Job-3 shape shared by the derived-COG verbs ([[mapAlgebra]],
     * [[resampleToGrid]]): the combined (tileIndex, pixels) rows shuffle
@@ -561,18 +506,17 @@ object CogQuery {
     * (+ pyramid) — the same one-raster-in-memory unit as a [[Cog.run]]
     * encode task; the upstream per-tile stage is where the parallelism
     * lives. Returns the one-row stat frame. */
-  private def assembleDerivedCog(
-      combined: org.apache.spark.sql.Dataset[(Int, Array[Float])],
+  private def assembleDerivedCog(spark: SparkSession,
+      combined: org.apache.spark.rdd.RDD[(Int, Array[Float])],
       w: Int, h: Int, tw: Int, th: Int, outPath: String,
       geo: TiffIO.GeoInfo, opts: TiffWriter.CogOptions,
       confBc: org.apache.spark.broadcast.Broadcast[
         org.apache.spark.SerializableWritable[
           org.apache.hadoop.conf.Configuration]]): DataFrame = {
-    val spark = combined.sparkSession
     import spark.implicits._
     val (ww, hh, ttw, tth) = (w, h, tw, th)
     val (oPath, oGeo, oOpts) = (outPath, geo, opts)
-    combined.repartition(1).mapPartitions { it =>
+    spark.createDataset(combined.repartition(1).mapPartitions { it =>
       val conf = confBc.value.value
       val px = new Array[Float](ww * hh)
       val across = (ww + ttw - 1) / ttw
@@ -600,7 +544,7 @@ object CogQuery {
         k += 1
       }
       Iterator.single(MapAlgebraStat(oPath, ww, hh, tiles, nValid, nNan))
-    }.toDF()
+    }).toDF()
   }
 
   /** How many DECODED source tiles one resample task keeps at once —
@@ -641,14 +585,16 @@ object CogQuery {
     * weights collapse to the center pixel).
     *
     * Scale shape — the [[mapAlgebra]] three-job pattern:
-    *  1. one small task per input: header prefix -> grid signature +
-    *     CRS for source and reference (reference pixels are never
-    *     read — only its header prefix);
-    *  2. one task per OUTPUT tile chunk: computes which source tiles
-    *     cover the chunk's pixel centers, range-reads exactly those,
-    *     and samples — with an LRU decoded-tile cache capped at
-    *     [[ResampleTileCacheCap]] so task memory stays bounded no
-    *     matter how the grids shear against each other;
+    *  1. one small task per input: header prefix -> [[Grid]] for
+    *     source and reference (reference pixels are never read — only
+    *     its header prefix);
+    *  2. one task per OUTPUT tile chunk, spread by `parallelize` with
+    *     no shuffle, the source's layout in a broadcast (no header
+    *     read): computes which source tiles cover the chunk's pixel
+    *     centers, range-reads exactly those, and samples — with an LRU
+    *     decoded-tile cache capped at [[ResampleTileCacheCap]] so task
+    *     memory stays bounded no matter how the grids shear against
+    *     each other;
     *  3. ONE writer task ([[assembleDerivedCog]]).
     *
     * Returns one stat row: (out, width, height, tiles, n_valid, n_nan). */
@@ -658,67 +604,64 @@ object CogQuery {
       epsg: Int = Model.Expected.epsg,
       prefixBytes: Int = 16 * 1024,
       method: String = "nearest"): DataFrame = {
-    import spark.implicits._
     require(method == "nearest" || method == "bilinear",
       s"unknown resample method '$method' — expected 'nearest' " +
         "(categorical/masked data) or 'bilinear' (continuous fields)")
-    // job 1: grid signatures — source and reference, one task each
-    val sigs = withReaderAt(spark,
-      Seq(("src", srcPath), ("ref", refPath)), prefixBytes)(gridSignature)
+    // job 1: grids — source and reference, one task each
+    val grids = withReaderAt(spark,
+      Seq(("src", srcPath), ("ref", refPath)), prefixBytes)(gridOf)
       .collect()
-    val src = sigs.find(_._1 == "src").get
-    val ref = sigs.find(_._1 == "ref").get
-    require(src._10 == ref._10,
-      s"source CRS (EPSG:${src._10.getOrElse("<unlabelled>")}) does not " +
-        s"match reference (EPSG:${ref._10.getOrElse("<unlabelled>")}) — " +
+    val src = grids.find(_.name == "src").get
+    val ref = grids.find(_.name == "ref").get
+    require(src.epsg == ref.epsg,
+      s"source CRS (EPSG:${src.epsg.getOrElse("<unlabelled>")}) does not " +
+        s"match reference (EPSG:${ref.epsg.getOrElse("<unlabelled>")}) — " +
         "resampleToGrid regrids within ONE CRS; reproject first")
     // GeoKey 32767 = user-defined: sentinel equality proves nothing
     // about the actual projections (same refusal as mapAlgebra)
-    require(!src._10.contains(32767),
+    require(!src.epsg.contains(32767),
       "rasters carry a USER-DEFINED CRS (ProjectedCSTypeGeoKey = " +
         "32767): equal sentinels do not mean equal projections — " +
         "write real EPSG codes into the rasters before regridding")
-    require(ref._4 > 0 && ref._5 > 0,
+    require(ref.layout.tileWidth > 0 && ref.layout.tileHeight > 0,
       s"reference '$refPath' is not tiled — not a COG")
-    require(src._4 > 0 && src._5 > 0,
+    require(src.layout.tileWidth > 0 && src.layout.tileHeight > 0,
       s"source '$srcPath' is not tiled — not a COG")
-    require(src._6 > 0 && src._7 > 0 && ref._6 > 0 && ref._7 > 0,
+    require(src.resX > 0 && src.resY > 0 && ref.resX > 0 && ref.resY > 0,
       "both rasters need positive pixel resolutions")
     // the output inherits the rasters' shared code when they carry one;
     // a caller-passed epsg that contradicts it is refused, not obeyed —
     // the mapAlgebra contract, applied consistently
-    val outEpsg = src._10.getOrElse(epsg)
-    src._10.foreach { e =>
+    val outEpsg = src.epsg.getOrElse(epsg)
+    src.epsg.foreach { e =>
       require(epsg == Model.Expected.epsg || epsg == e,
         s"epsg parameter ($epsg) contradicts the rasters' own CRS " +
           s"(EPSG:$e) — drop the parameter (the rasters' code wins) " +
           "or reproject the inputs")
     }
-    val (w, h, tw, th) = (ref._2, ref._3, ref._4, ref._5)
-    val (resX, resY, gx, gy) = (ref._6, ref._7, ref._8, ref._9)
-    val (sw, sh) = (src._2, src._3)
-    val (sResX, sResY, sGx, sGy) = (src._6, src._7, src._8, src._9)
+    val (w, h) = (ref.layout.width, ref.layout.height)
+    val (tw, th) = (ref.layout.tileWidth, ref.layout.tileHeight)
+    val (resX, resY, gx, gy) = (ref.resX, ref.resY, ref.gx, ref.gy)
+    val (sw, sh) = (src.layout.width, src.layout.height)
+    val (sResX, sResY, sGx, sGy) = (src.resX, src.resY, src.gx, src.gy)
     val tilesAcross = (w + tw - 1) / tw
-    val tilesDown = (h + th - 1) / th
-    // .toList, not .toSeq: grouped() over a Range yields Range slices,
-    // which the Dataset encoder rejects
-    val chunks = (0 until tilesAcross * tilesDown)
-      .grouped(ReadChunkTiles).map(_.toList).toList
+    val chunks = tileChunks(w, h, tw, th)
+    val srcBc = spark.sparkContext.broadcast(src.layout)
     val confBc = WriFs.confBroadcast(spark)
     val sp = srcPath
-    val pfx = prefixBytes
     val bilinear = method == "bilinear"
+    val sc = spark.sparkContext
     // job 2: one task per OUTPUT tile chunk — sample from the covering
     // source tiles only
-    val sampled = spark.createDataset(chunks)
-      .repartition(math.min(chunks.size,
-        spark.sparkContext.defaultParallelism))
+    val sampled =
+      sc.parallelize(chunks, math.min(chunks.size, sc.defaultParallelism))
       .mapPartitions { it =>
         val conf = confBc.value.value
+        val sl = srcBc.value
+        val sAcross = (sl.width + sl.tileWidth - 1) / sl.tileWidth
         it.flatMap { ts =>
-          withPrefix(sp, conf, pfx) { (reader, prefix) =>
-            val sl = prefix.layouts.head
-            val sAcross = (sl.width + sl.tileWidth - 1) / sl.tileWidth
+          val reader = RangeReader.open(sp, conf)
+          try {
             // LRU decoded-source-tile cache, bounded
             val cache = new java.util.LinkedHashMap[Int, Array[Float]](
               ResampleTileCacheCap, 0.75f, true) {
@@ -858,26 +801,22 @@ object CogQuery {
               }
               (t, out)
             }
-          }
+          } finally reader.close()
         }
       }
     // job 3: one assembler/writer task
-    assembleDerivedCog(sampled, w, h, tw, th, outPath,
+    assembleDerivedCog(spark, sampled, w, h, tw, th, outPath,
       TiffIO.GeoInfo(outEpsg, resX, resY, gx, gy), opts, confBc)
   }
 
-  /** Range request #1: the bounded header prefix of an open reader,
-    * decoded once. */
-  private[wri] def readPrefix(raf: RangeReader,
-      prefixBytes: Int): TiffIO.HeaderPrefix =
-    new TiffIO.HeaderPrefix(raf.readPrefix(prefixBytes))
-
-  /** Opens `path`, reads its header prefix and runs `f` on the open
-    * reader and the decoded prefix; the reader closes when `f` returns. */
+  /** Opens `path`, reads its bounded header prefix (range request #1),
+    * decodes it once and runs `f` on the open reader and the decoded
+    * prefix; the reader closes when `f` returns. */
   private[wri] def withPrefix[T](path: String, conf: Configuration,
       prefixBytes: Int)(f: (RangeReader, TiffIO.HeaderPrefix) => T): T = {
     val raf = RangeReader.open(path, conf)
-    try f(raf, readPrefix(raf, prefixBytes)) finally raf.close()
+    try f(raf, new TiffIO.HeaderPrefix(raf.readPrefix(prefixBytes)))
+    finally raf.close()
   }
 
   /** One task per (label, path) target; `f` sees the label (reported as
@@ -897,15 +836,23 @@ object CogQuery {
       }
   }
 
-  /** (label, width, height, tileWidth, tileHeight, resX, resY, originX,
-    * originY, EPSG) of a raster's full-resolution grid — the signature
-    * [[mapAlgebra]] and [[resampleToGrid]] compare before combining. */
-  private def gridSignature(name: String, raf: RangeReader,
-      prefix: TiffIO.HeaderPrefix) = {
-    val full = prefix.layouts.head
+  /** A raster's full-resolution grid as job 1 of [[mapAlgebra]] and
+    * [[resampleToGrid]] reads it from the header prefix: the level-0
+    * tile layout (which job 2's chunk tasks fetch from, so they read no
+    * header), the geotransform and the EPSG code. */
+  private case class Grid(name: String, layout: TiffIO.LevelLayout,
+      resX: Double, resY: Double, gx: Double, gy: Double,
+      epsg: Option[Int]) {
+    /** What two rasters must share to combine pixel by pixel (the CRS
+      * is checked on its own, with its own message). */
+    def shape = (layout.width, layout.height, layout.tileWidth,
+      layout.tileHeight, resX, resY, gx, gy)
+  }
+
+  private def gridOf(name: String, raf: RangeReader,
+      prefix: TiffIO.HeaderPrefix): Grid = {
     val (resX, resY, gx, gy) = prefix.geoTransform
-    (name, full.width, full.height, full.tileWidth, full.tileHeight,
-      resX, resY, gx, gy, prefix.epsg)
+    Grid(name, prefix.layouts.head, resX, resY, gx, gy, prefix.epsg)
   }
 
   /** Stats of the pixel window [x0, x0+winW) x [y0, y0+winH) for each
@@ -930,18 +877,10 @@ object CogQuery {
       x0: Int, y0: Int, winW: Int, winH: Int,
       scale: Long = 10000L, prefixBytes: Int = 16 * 1024,
       level: Int = 0): DataFrame = {
-    import spark.implicits._
     require(x0 >= 0 && y0 >= 0 && winW > 0 && winH > 0,
       s"window must be non-empty and non-negative: ($x0,$y0) ${winW}x$winH")
-    require(scale >= 1, s"scale must be >= 1: $scale")
-    require(level >= 0, s"level must be >= 0: $level")
-    require(layers.nonEmpty, "no layers to query")
-    spark.createDataset(
-      withReaderAt(spark, layers.map(n => (n, s"$cogDir/$n")), prefixBytes) {
-        (name, raf, prefix) =>
-          statsOverWindow(name, raf, prefix.length, prefix.layouts, level,
-            x0, y0, x0 + winW, y0 + winH, scale)
-      }).toDF()
+    windowStatsOf(spark, layers.map(n => (n, s"$cogDir/$n")), scale,
+      prefixBytes, level)((_, _) => (x0, x0 + winW, y0, y0 + winH))
   }
 
   /** Stats of the CRS bounding box [minx, maxx] x [miny, maxy] (the
@@ -966,11 +905,9 @@ object CogQuery {
       layers: Seq[String],
       minx: Double, miny: Double, maxx: Double, maxy: Double,
       scale: Long = 10000L, prefixBytes: Int = 16 * 1024,
-      level: Int = 0): DataFrame = {
-    require(layers.nonEmpty, "no layers to query")
+      level: Int = 0): DataFrame =
     windowStatsGeoAt(spark, layers.map(n => (n, s"$cogDir/$n")),
       minx, miny, maxx, maxy, scale, prefixBytes, level)
-  }
 
   /** [[windowStatsGeo]] over explicit (layer, path) targets — the form a
     * CATALOG consumer needs, where each item's asset href resolves to
@@ -981,19 +918,34 @@ object CogQuery {
       minx: Double, miny: Double, maxx: Double, maxy: Double,
       scale: Long = 10000L, prefixBytes: Int = 16 * 1024,
       level: Int = 0): DataFrame = {
-    import spark.implicits._
     require(maxx > minx && maxy > miny,
       s"box must be non-empty: x [$minx, $maxx], y [$miny, $maxy]")
+    windowStatsOf(spark, targets, scale, prefixBytes, level)(
+      boxToPixels(_, _, minx, miny, maxx, maxy))
+  }
+
+  /** One window per target through [[foldWindows]]: `rect` places it on
+    * `level`'s grid as unclamped half-open pixel bounds (x0, xEnd, y0,
+    * yEnd). `bytes_read` is the header prefix plus the tiles fetched. */
+  private def windowStatsOf(spark: SparkSession,
+      targets: Seq[(String, String)], scale: Long, prefixBytes: Int,
+      level: Int)(rect: (TiffIO.HeaderPrefix, TiffIO.LevelLayout) =>
+        (Int, Int, Int, Int)): DataFrame = {
+    import spark.implicits._
     require(scale >= 1, s"scale must be >= 1: $scale")
     require(level >= 0, s"level must be >= 0: $level")
     require(targets.nonEmpty, "no layers to query")
     spark.createDataset(withReaderAt(spark, targets, prefixBytes) {
       (name, raf, prefix) =>
-        val (layouts, _, resX, resY, gx, gy) = geoGrid(name, prefix, level)
-        val (x0, xEnd, y0, yEnd) =
-          boxToPixels(resX, resY, gx, gy, minx, miny, maxx, maxy)
-        statsOverWindow(name, raf, prefix.length, layouts, level,
-          x0, y0, xEnd, yEnd, scale)
+        val lv = levelOf(name, prefix, level)
+        val (x0, xEnd, y0, yEnd) = rect(prefix, lv)
+        val win = new Window(lv, x0, xEnd, y0, yEnd)
+        val fetched = foldWindows(name, raf, lv, Seq(win), scale)
+        val (tw, th) = (lv.tileWidth, lv.tileHeight)
+        CogWindowStat(name,
+          ((lv.width + tw - 1) / tw).toLong * ((lv.height + th - 1) / th),
+          win.tiles, prefix.length + fetched, raf.length, win.nValid,
+          win.nNan, win.vsSum, win.min, win.max)
     }).toDF()
   }
 }

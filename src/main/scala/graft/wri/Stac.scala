@@ -294,8 +294,8 @@ object Stac {
     * ordinary column predicates instead of walking JSON files.
     *
     * The documents are read on the DRIVER (one listing, then one
-    * [[WriFs.readString]] per `*.json` whose name does not start with
-    * `.` or `_` — the file set Spark's JSON source would scan) and
+    * [[WriFs.readString]] per [[isItemDoc]] name — the file set Spark's
+    * JSON source would scan) and
     * parsed by Spark's own JSON parser (`from_json`) over a local
     * relation. Catalyst then evaluates filters, projections and limits
     * over the result on the driver, so a catalog lookup runs no Spark
@@ -307,9 +307,7 @@ object Stac {
   def readItems(spark: SparkSession, itemsDir: String): DataFrame = {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
-    WriFs.listNames(itemsDir, conf)
-      .filter(n => n.endsWith(".json") && !n.startsWith(".") &&
-        !n.startsWith("_"))
+    WriFs.listNames(itemsDir, conf).filter(isItemDoc)
       .sorted.map(n => WriFs.readString(s"$itemsDir/$n", conf))
       .toDF("doc")
       .select(from_json(col("doc"), itemDocSchema).as("d"))
@@ -397,8 +395,8 @@ object Stac {
 
   /** STAC 1.0.0 STRUCTURAL conformance of the emitted item documents —
     * the `stac-validator` step the reference plans (`README.md:248-250`)
-    * but never built, as one distributed sweep: every `*.json` under
-    * `itemsDir` is parsed and checked against the Item spec's
+    * but never built, as one distributed sweep: every [[isItemDoc]]
+    * file under `itemsDir` is parsed and checked against the Item spec's
     * structural requirements (STAC 1.0.0 item-spec, public), failures
     * as DATA with first-failure-wins messages (the P7 cascade
     * discipline — one malformed document never kills the sweep of an
@@ -427,7 +425,7 @@ object Stac {
     val confBc = WriFs.confBroadcast(spark)
     val files = WriFs.listNames(itemsDir,
       spark.sparkContext.hadoopConfiguration)
-      .filter(_.endsWith(".json")).sorted
+      .filter(isItemDoc).sorted
     spark.createDataset(files).mapPartitions { it =>
       val mapper = new ObjectMapper()
       val conf = confBc.value.value
@@ -733,9 +731,15 @@ object Stac {
     * whichever filesystem `itemsDir`'s scheme names. */
   def listItemIds(itemsDir: String,
       conf: Configuration = WriFs.defaultConf): Seq[String] =
-    WriFs.listNames(itemsDir, conf)
-      .filter(_.endsWith(".json"))
+    WriFs.listNames(itemsDir, conf).filter(isItemDoc)
       .map(_.stripSuffix(".json")).sorted
+
+  /** An item document's file name: `*.json` not starting with `.` or
+    * `_` (the hidden-file rule of Spark's file sources). Every listing
+    * of an items directory filters through it, so a file the consumer
+    * verbs skip is never linked from the collection or pruned. */
+  private def isItemDoc(name: String): Boolean =
+    name.endsWith(".json") && !name.startsWith(".") && !name.startsWith("_")
 
   /** Required-column assert (`02b:112-123`): fail fast, by name. */
   def assertRequired(meta: DataFrame): Unit = {

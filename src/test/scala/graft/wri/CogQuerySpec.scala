@@ -459,6 +459,67 @@ class CogQuerySpec extends SparkSpec {
     java.util.Arrays.copyOf(all, math.min(all.length, 16 * 1024))
   }
 
+  test("derived COGs over HTTP: mapAlgebra and resampleToGrid read each " +
+      "input's header prefix ONCE per call (not once per chunk task), " +
+      "every other GET is a level-0 tile range, and the output bytes " +
+      "equal a local-path run") {
+    val names = inputs.map(_._2)
+    // 192x128 at 32px: 24 tiles, so 3 chunk tasks per derived COG
+    val tileRanges = names.map { n =>
+      val l0 = TiffIO.levelLayoutsFromPrefix(prefixOf(s"$cogDir/$n")).head
+      assert(l0.tileOffsets.size > 8, "the input needs more than one chunk")
+      n -> l0.tileOffsets.indices.map(t => s"bytes=${l0.tileOffsets(t)}-" +
+        s"${l0.tileOffsets(t) + l0.tileByteCounts(t) - 1}")
+    }.toMap
+    val opts = TiffWriter.CogOptions(blockSize = 32)
+    def bytesOf(p: String) =
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)).toSeq
+    /** GETs per input path over the call: (prefix GETs, tile GETs). */
+    def overHttp(
+        call: String => Unit): Map[String, (Seq[String], Seq[String])] = {
+      val reqs =
+        new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+      TestHttp.withHttpServer(cogDir, ranges = Some(reqs))(call)
+      import scala.jdk.CollectionConverters._
+      reqs.asScala.toSeq.groupBy(_._1.stripPrefix("/")).map { case (n, rs) =>
+        n -> rs.map(_._2).partition(_ == s"bytes=0-${16 * 1024 - 1}") }
+    }
+    // map algebra: each input's 24 tiles fetched once each
+    val weighted =
+      names.zipWithIndex.map { case (n, i) => (n, (i + 1).toDouble) }
+    CogQuery.mapAlgebra(spark, weighted.map { case (n, w) =>
+      (n, s"$cogDir/$n", w) }, s"$root/http_ma_local.tif", opts).count()
+    val ma = overHttp { base =>
+      CogQuery.mapAlgebra(spark, weighted.map { case (n, w) =>
+        (n, s"$base/$n", w) }, s"$root/http_ma_remote.tif", opts).count()
+    }
+    assert(ma.keySet == names.toSet, ma.keySet)
+    for (n <- names) {
+      val (prefixes, tiles) = ma(n)
+      assert(prefixes.size == 1, s"$n: ${prefixes.size} header-prefix GETs")
+      assert(tiles.sorted == tileRanges(n).sorted, s"$n: tile GETs $tiles")
+    }
+    assert(bytesOf(s"$root/http_ma_remote.tif") ==
+      bytesOf(s"$root/http_ma_local.tif"))
+    // resample: the source's prefix once plus its tiles; the
+    // reference's prefix once and none of its pixels
+    val (src, ref) = (names(1), names(0))
+    CogQuery.resampleToGrid(spark, s"$cogDir/$src", s"$cogDir/$ref",
+      s"$root/http_rs_local.tif", opts).count()
+    val rs = overHttp { base =>
+      CogQuery.resampleToGrid(spark, s"$base/$src", s"$base/$ref",
+        s"$root/http_rs_remote.tif", opts).count()
+    }
+    assert(rs(src)._1.size == 1 && rs(ref)._1.size == 1,
+      s"header-prefix GETs: source ${rs(src)._1.size}, " +
+        s"reference ${rs(ref)._1.size}")
+    assert(rs(src)._2.nonEmpty &&
+      rs(src)._2.forall(tileRanges(src).contains), rs(src)._2)
+    assert(rs(ref)._2.isEmpty, rs(ref)._2)
+    assert(bytesOf(s"$root/http_rs_remote.tif") ==
+      bytesOf(s"$root/http_rs_local.tif"))
+  }
+
   test("resampleToGrid: identity regrid round-trips pixels exactly, a " +
       "shifted/smaller source lands NN-exact with NaN past its edge, " +
       "resample-then-combine equals combining a pre-aligned twin, and " +

@@ -218,7 +218,7 @@ class StacRefreshSpec extends SparkSpec {
       "or . and a .json.tmp, an empty and a missing directory") {
     val root = java.nio.file.Files
       .createTempDirectory("stac_read_oracle").toString
-    val itemsDir = s"$root/items"
+    val itemsDir = s"$root/collections/${Model.collectionId}/items"
     Stac.writeItems(Stac.buildItems(spark, consistentOf(Seq(
       "a.tif" -> 0.0, "b.tif" -> 900.0)), hostedProbe = _ == "a.tif"),
       itemsDir)
@@ -284,6 +284,32 @@ class StacRefreshSpec extends SparkSpec {
       val r = Stac.readItems(spark, dir)
       assert(r.schema == want.schema && r.isEmpty, dir)
     }
+    // one item-document predicate: a pruning refresh deletes the two
+    // documents it does not plan (malformed, wrongbbox) and keeps the
+    // names readItems skips; then the listing, the collection's
+    // rel=item links and readItems name the same items
+    val audit = Stac.refreshCatalog(spark, consistentOf(Seq(
+      "a.tif" -> 0.0, "b.tif" -> 900.0)), root,
+      hostedProbe = _ == "a.tif", pruneOrphans = true)
+      .as[(String, String)].collect().toMap
+    assert(audit == Map("a" -> "unchanged", "b" -> "unchanged",
+      "malformed" -> "pruned", "wrongbbox" -> "pruned"), audit)
+    for (n <- Seq("_hidden.json", ".hidden.json", "c.json.tmp"))
+      assert(new java.io.File(s"$itemsDir/$n").isFile, s"$n was swept")
+    val readIds = Stac.readItems(spark, itemsDir).select("item_id")
+      .as[String].collect().sorted.toSeq
+    val links = {
+      import scala.jdk.CollectionConverters._
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(new java.io.File(itemsDir).getParentFile
+          .toPath.resolve("collection.json").toFile)
+        .path("links").elements().asScala
+        .filter(_.path("rel").asText == "item")
+        .map(_.path("href").asText).toSeq
+    }
+    assert(readIds == Seq("a", "b"), readIds)
+    assert(Stac.listItemIds(itemsDir) == readIds)
+    assert(links == readIds.map(id => s"items/$id.json"), links)
   }
 
   test("Stac.run builds each item once: the hosting probe runs exactly " +

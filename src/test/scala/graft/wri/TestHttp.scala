@@ -10,8 +10,10 @@ import java.util.concurrent.atomic.AtomicInteger
   * and a Range-ignoring server. `requested` records EVERY request's
   * path (HEAD included — "zero requests for excluded layers" audits);
   * `gets` records GET paths only (fetch-count economy assertions, where
-  * the HEAD length probe must not count as a byte fetch); `connection`
-  * records each request's method and `Connection` header. */
+  * the HEAD length probe must not count as a byte fetch); `ranges`
+  * records each GET's path and `Range` header (which GET was a header
+  * prefix and which a tile); `connection` records each request's
+  * method and `Connection` header. */
 object TestHttp {
   def withHttpServer[T](dir: String,
       ignoreRange: Boolean = false,
@@ -23,6 +25,8 @@ object TestHttp {
         None,
       gets: Option[java.util.concurrent.ConcurrentLinkedQueue[String]] =
         None,
+      ranges: Option[
+        java.util.concurrent.ConcurrentLinkedQueue[(String, String)]] = None,
       connection: Option[
         java.util.concurrent.ConcurrentLinkedQueue[(String, String)]] = None,
       // when set, every request must carry this exact (name, value)
@@ -34,8 +38,12 @@ object TestHttp {
     val throttles = new AtomicInteger(throttleFirstN)
     server.createContext("/", { exchange =>
       requested.foreach(_.add(exchange.getRequestURI.getPath))
-      if (exchange.getRequestMethod == "GET")
+      if (exchange.getRequestMethod == "GET") {
         gets.foreach(_.add(exchange.getRequestURI.getPath))
+        ranges.foreach(_.add((exchange.getRequestURI.getPath,
+          Option(exchange.getRequestHeaders.getFirst("Range"))
+            .getOrElse("<none>"))))
+      }
       connection.foreach(_.add((exchange.getRequestMethod,
         Option(exchange.getRequestHeaders.getFirst("Connection"))
           .getOrElse("<none>"))))
