@@ -358,7 +358,7 @@ object Assembly {
   /** [[appendShards]] body; `checkOverlap = false` skips the committed-
     * id scan when the caller ([[appendShardsExactlyOnce]]) has already
     * proven zero overlap — the scan is the append path's one full read
-    * of the store and must not run twice per micro-batch. */
+    * of the store and must not run twice per batch. */
   private def appendImpl(dfNew0: DataFrame, idCol: String,
       tokensCol: String, outDir: String,
       checkOverlap: Boolean): DataFrame = {
@@ -541,10 +541,9 @@ object Assembly {
     * (returning the committed manifest); NONE committed appends; a
     * PARTIAL overlap is not a replay but a corrupted delivery (half a
     * batch re-keyed, or two producers sharing ids) and fails loudly.
-    * This is what makes [[appendShardsStream]] exactly-once across
-    * restarts: a crash BEFORE the version flip replays into the
-    * all-new branch (the uncommitted dirs heal), a crash AFTER the flip
-    * replays into the no-op branch. */
+    * A crash BEFORE the version flip replays into the all-new branch
+    * (the uncommitted dirs heal), a crash AFTER the flip replays into
+    * the no-op branch. */
   def appendShardsExactlyOnce(dfNew0: DataFrame, idCol: String,
       tokensCol: String, outDir: String): DataFrame = {
     require(idCol != "__in", "idCol may not be the reserved name __in")
@@ -552,7 +551,7 @@ object Assembly {
     val spark = dfNew0.sparkSession
     val fs = graft.wri.WriFs.fs(outDir,
       spark.sparkContext.hadoopConfiguration)
-    // guard BEFORE the replay classification: a micro-batch that is
+    // guard BEFORE the replay classification: a batch that is
     // entirely takedown-blocked must classify as empty (no version
     // churn), and a mixed one must classify on its admissible ids only
     val dfNew = Takedown.guard(dfNew0, idCol, None, fs, outDir)
@@ -587,25 +586,6 @@ object Assembly {
       s"batch overlaps the committed store on $m of $n ids — neither a " +
         "replay nor new data; refusing to guess")
   }
-
-  /** Streaming twin of the incremental export: each micro-batch of the
-    * doc stream lands as new shards through [[appendShardsExactlyOnce]],
-    * with the checkpoint pinned UNDER the shard directory by default so
-    * a restarted stream resumes instead of renumbering. Combined with
-    * the versioned-manifest commit this is exactly-once end to end:
-    * re-delivered micro-batches no-op, crashed ones heal and replay. */
-  def appendShardsStream(stream: DataFrame, idCol: String,
-      tokensCol: String, outDir: String,
-      checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation",
-        checkpointLocation.getOrElse(s"$outDir/_stream_checkpoint"))
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        appendShardsExactlyOnce(df, idCol, tokensCol, outDir): Unit
-      }
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
 
   /** Shard-store QA sweep — the "verify a delivered dataset" workflow
     * the manifest exists for: recompute every committed shard's

@@ -35,9 +35,7 @@ import org.apache.spark.storage.StorageLevel
   *                      by doc_id mod bucket_shards, so the verify join
   *                      back prunes to the candidates' shards.
   *   deletes/batch=<d>/ (doc_id) tombstones — [[delete]]'s takedown
-  *                      verb ([[deleteStream]] lands micro-batches the
-  *                      same way under the delete-STREAM pool);
-  *                      committed dirs mask their doc_ids out of every
+  *                      verb; committed dirs mask their doc_ids out of every
   *                      query (before candidate generation AND the
   *                      stop-bucket sizing) until [[compact]] physically
   *                      drops the rows and GC's the dirs.
@@ -50,29 +48,21 @@ import org.apache.spark.storage.StorageLevel
   *                      the GC that retires the applied tombstone.
   *   _folded            [[compact]]'s marker:
   *                      `<foldId> <coveredBatch> <coveredStream>
-  *                      <coveredDelete> <coveredDeleteStream> #` — fold
-  *                      batches (ids >= [[FoldBase]]) hold the folded
-  *                      content of every BATCH-pool id <= coveredBatch
-  *                      and every STREAM-pool id <= coveredStream
-  *                      (coverage is tracked PER POOL — a single scalar
-  *                      would let a folded stream id mark every smaller
+  *                      <coveredDelete> #` — fold batches (ids >=
+  *                      [[FoldBase]]) hold the folded content of every
+  *                      BATCH-pool id <= coveredBatch and every
+  *                      STREAM-pool id <= coveredStream (coverage is
+  *                      tracked PER POOL — a single scalar would let a
+  *                      folded stream-pool id mark every smaller
   *                      batch-pool id as ingested and silently swallow
-  *                      its data), with every batch-pool tombstone <=
-  *                      coveredDelete and every stream-pool tombstone <=
-  *                      coveredDeleteStream already applied (same
-  *                      per-pool reasoning); folds are invisible until
+  *                      its data), with every tombstone <= coveredDelete
+  *                      already applied; folds are invisible until
   *                      this marker names them. Written atomically
   *                      (replace, not create-overwrite) — a reader sees
   *                      the old or the new marker, never a torn one; a
   *                      filesystem that broke even that contract is
   *                      classified (heal / read-only serve / refuse) by
   *                      [[Commit.read]]'s tmp recovery.
-  *   pairs/batch=<b>/   [[ingestStream]]'s pair log — one idempotent
-  *                      directory per micro-batch, written ONCE (a
-  *                      committed log is never overwritten).
-  *   _stream_checkpoint [[ingestStream]]'s default checkpoint
-  *                      (`_delete_stream_checkpoint` is
-  *                      [[deleteStream]]'s).
   *
   * Ingest idempotence is COMMIT-based, exactly as the vector store's: a
   * batch id counts as committed only when BOTH its postings and sigs
@@ -83,12 +73,10 @@ import org.apache.spark.storage.StorageLevel
   * as the original run and re-lands the same files (mode overwrite):
   * fully idempotent WITHIN a pool ("id <" means "committed before" only
   * among ids assigned in commit order; a batch-pool ingest interleaved
-  * between a stream micro-batch's run and its replay is the cross-pool
-  * exception — [[ingestStream]]'s once-only pair log is what shields the
-  * log's consumers from it). Default-allocated ids take one past the
-  * batch pool's high-water mark; concurrent default-id ingests need
-  * external serialization (explicit ids — the stream discipline — do
-  * not).
+  * between a stream-pool ingest and its replay is the cross-pool
+  * exception). Default-allocated ids take one past the batch pool's
+  * high-water mark; concurrent default-id ingests need external
+  * serialization (explicit ids do not).
   *
   * Candidate semantics (all replayed by the DuckDB oracle):
   *   - batch docs pair only with INDEXED docs (batch-internal pairs are
@@ -194,10 +182,13 @@ object DedupIndex {
       .filter(batchCommitted(fs, dir, _))
       .sorted
 
-  /** Stream micro-batch ids map to `StreamBatchBase + id`; batch-mode
-    * default ids allocate from the BATCH pool only (ids below the base),
-    * so the pools never collide — a stream commit does not advance the
-    * batch pool's high-water mark (the [[VectorStore]] discipline). */
+  /** Explicit ingest ids in `[StreamBatchBase, FoldBase)` form the
+    * STREAM pool — the range a producer that numbers its own deliveries
+    * (a stream's micro-batch ids, offset by the base) passes to
+    * [[ingest]]/[[append]]. Default ids allocate from the BATCH pool
+    * only (ids below the base), so the pools never collide — a
+    * stream-pool commit does not advance the batch pool's high-water
+    * mark (the [[VectorStore]] discipline). */
   val StreamBatchBase = 1000000L
 
   /** Fold batches ([[compact]]'s output) live ABOVE every normal and
@@ -215,25 +206,19 @@ object DedupIndex {
 
   /** The `_folded` marker's content: fold `id` holds the folded content
     * of every batch-pool id <= coveredBatch and every stream-pool id <=
-    * coveredStream, with every batch-pool tombstone <= coveredDelete and
-    * every stream-pool tombstone <= coveredDeleteStream already APPLIED
-    * (their doc_ids physically dropped, their tombstone dirs GC'd).
-    * Coverage is PER POOL everywhere: ids are allocated independently in
-    * each pool, so one scalar cannot order them — for deletes too, or a
-    * folded [[deleteStream]] micro-batch (ids at StreamBatchBase+) would
-    * mark every smaller batch-pool tombstone as applied and silently
-    * drop a crashed takedown's replay. */
+    * coveredStream, with every tombstone <= coveredDelete already
+    * APPLIED (their doc_ids physically dropped, their tombstone dirs
+    * GC'd). Ingest coverage is PER POOL: ids are allocated independently
+    * in each pool, so one scalar cannot order them. Tombstone ids have
+    * one pool ([[delete]] refuses explicit ids at or above
+    * [[StreamBatchBase]]), so one scalar covers them. */
   private final case class Fold(id: Long, coveredBatch: Long,
-      coveredStream: Long, coveredDelete: Long, coveredDeleteStream: Long) {
+      coveredStream: Long, coveredDelete: Long) {
     def covers(b: Long): Boolean =
       if (b < StreamBatchBase) b <= coveredBatch
       else if (b < FoldBase) b <= coveredStream
       else false
-    /** Applied coverage for a tombstone id, routed by ITS pool. */
-    def coversDelete(d: Long): Boolean =
-      if (d < StreamBatchBase) d <= coveredDelete
-      else if (d < FoldBase) d <= coveredDeleteStream
-      else false
+    def coversDelete(d: Long): Boolean = d <= coveredDelete
   }
 
   /** One control-plane read per verb: the committed-batch and
@@ -254,17 +239,11 @@ object DedupIndex {
         fs.exists(new Path(s"${deletesRoot(dir)}/batch=$b/_SUCCESS")))
       .sorted
 
-  /** Parse a complete `_folded` marker; None = torn or malformed.
-    * Earlier-era markers (3 or 4 fields) carry no delete / no
-    * stream-delete coverage: nothing of that pool folded yet. */
+  /** Parse a complete `_folded` marker; None = torn or malformed. */
   private def parseFold(text: String): Option[Fold] =
     scala.util.Try(text.trim.split(" ").toSeq match {
-      case Seq(f, cb, cs, "#") =>
-        Some(Fold(f.toLong, cb.toLong, cs.toLong, -1L, -1L))
       case Seq(f, cb, cs, cd, "#") =>
-        Some(Fold(f.toLong, cb.toLong, cs.toLong, cd.toLong, -1L))
-      case Seq(f, cb, cs, cd, cds, "#") =>
-        Some(Fold(f.toLong, cb.toLong, cs.toLong, cd.toLong, cds.toLong))
+        Some(Fold(f.toLong, cb.toLong, cs.toLong, cd.toLong))
       case _ => None
     }).toOption.flatten
 
@@ -332,10 +311,10 @@ object DedupIndex {
 
   /** Next default batch id: one past the BATCH pool's high-water mark —
     * the max of the live batch-pool ids and the fold's batch-pool
-    * coverage. Stream-pool ids never advance it (a default append after
-    * a streaming ingest must not land inside the stream pool, where the
-    * stream's next micro-batch would see it committed and silently skip
-    * its own write), and GC'd folded ids are never reallocated (a
+    * coverage. Stream-pool ids never advance it (a default append must
+    * not land inside the stream pool, where a later explicit-id ingest
+    * of that id would see it committed and silently skip its own
+    * write), and GC'd folded ids are never reallocated (a
     * reallocation would false-positive the replay no-op check and
     * swallow new data). */
   private def nextBatchId(st: State): Long = {
@@ -395,15 +374,13 @@ object DedupIndex {
         !fs.exists(landingMarker(dir, id)) &&
         !fs.exists(landingMarkerTmp(dir, id)))
 
-  /** Next default tombstone id: one past the delete BATCH pool's
-    * high-water mark — live committed ids and the fold's applied
-    * coverage, so a GC'd folded id is never reallocated (a reallocation
-    * would false-positive the replay no-op check and silently drop a
-    * new takedown). Stream-pool tombstone ids never advance it (the
-    * ingest pools' discipline). */
+  /** Next default tombstone id: one past the tombstones' high-water
+    * mark — live committed ids and the fold's applied coverage, so a
+    * GC'd folded id is never reallocated (a reallocation would
+    * false-positive the replay no-op check and silently drop a new
+    * takedown). */
   private def nextDeleteId(st: State): Long =
-    math.max(
-      st.deletes.filter(_ < StreamBatchBase).lastOption.getOrElse(-1L),
+    math.max(st.deletes.lastOption.getOrElse(-1L),
       st.fold.map(_.coveredDelete).getOrElse(-1L)) + 1L
 
   /** Land tombstone `id`: the landing marker FIRST (the durable witness
@@ -482,43 +459,6 @@ object DedupIndex {
     if (deleteLanded(fs, dir, st, id)) return id
     landTombstone(fs, dir, ids, id)
     id
-  }
-
-  /** Streaming takedowns — [[delete]]'s foreachBatch twin, mirroring
-    * [[ingestStream]]'s discipline: every micro-batch of a doc_id
-    * stream lands as one idempotent tombstone directory under the
-    * delete-STREAM pool (`batchBase + microBatchId`, ids in
-    * `[StreamBatchBase, FoldBase)` like the ingest stream's), so a
-    * replayed micro-batch no-ops through the usual landed check — across
-    * covering compacts too, because fold coverage is PER POOL (the
-    * marker's fifth field) and a folded stream tombstone never marks
-    * smaller batch-pool tombstones as applied. Each landing writes the
-    * `_landing_<id>` witness first, so a micro-batch that crashes before
-    * any parquet lands replays instead of being silently swallowed.
-    *
-    * The checkpoint lives INSIDE the index by default for the same
-    * reason [[ingestStream]]'s does — a temp checkpoint would restart
-    * micro-batch numbering at 0 and every already-landed id would
-    * silently swallow new takedowns. Returns the started query; one
-    * active delete stream per index. */
-  def deleteStream(spark: SparkSession, dir: String, idStream: DataFrame,
-      batchBase: Long = StreamBatchBase,
-      checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(batchBase >= StreamBatchBase && batchBase < FoldBase,
-      s"batchBase must be in [$StreamBatchBase, $FoldBase): $batchBase")
-    idStream.writeStream
-      .option("checkpointLocation",
-        checkpointLocation.getOrElse(s"$dir/_delete_stream_checkpoint"))
-      .foreachBatch { (df: DataFrame, mb: Long) =>
-        val id = batchBase + mb
-        val fs = fsOf(spark, dir)
-        val st = readState(fs, dir)
-        if (!deleteLanded(fs, dir, st, id)) landTombstone(fs, dir, df, id)
-        ()
-      }
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
   }
 
   /** Frozen signature-family parameters, written once by [[write]]. */
@@ -633,12 +573,9 @@ object DedupIndex {
     * share): the store's PERSISTED `_takedowns` registry
     * ([[Takedown.register]] — read automatically by every ingest verb,
     * so compliance does not depend on every caller remembering), plus
-    * whatever `takedownIds` list the caller still passes. In
-    * [[ingestStream]] the caller's list is resolved when the STREAM
-    * STARTS (file-based sources snapshot their listing into the plan),
-    * but the REGISTRY is re-read per micro-batch — a registration bites
-    * on the next micro-batch without a restart. A takedown that must
-    * bite immediately on already-stored rows is a [[delete]]. */
+    * whatever `takedownIds` list the caller still passes. A takedown
+    * that must bite immediately on already-stored rows is a
+    * [[delete]]. */
   private def guardTakedowns(fs: FileSystem, dir: String,
       batch: DataFrame, takedownIds: Option[DataFrame]): DataFrame =
     Takedown.guard(batch, "doc_id", takedownIds, fs, dir)
@@ -669,9 +606,8 @@ object DedupIndex {
     * [[ingest]] passes its own batch id here so a REPLAY scores against
     * exactly the index the original run saw, even after later batches
     * commit (batch ids are monotone within a pool: default allocation
-    * is the pool's high-water mark + 1, and explicit ids — the stream
-    * discipline — must be assigned in commit order for "id <" to mean
-    * "committed before").
+    * is the pool's high-water mark + 1, and explicit ids must be
+    * assigned in commit order for "id <" to mean "committed before").
     *
     * Output: (batch_doc, index_doc, est_jaccard >= minEstJaccard).
     *
@@ -709,9 +645,9 @@ object DedupIndex {
     out
   }
 
-  /** The scoring core shared by [[queryPairs]], [[ingest]] and
-    * [[ingestStream]] (which compute the batch's signatures ONCE and
-    * reuse them for the append write). Does not unpersist its inputs;
+  /** The scoring core shared by [[queryPairs]] and [[ingest]] (which
+    * computes the batch's signatures ONCE and reuses them for the append
+    * write). Does not unpersist its inputs;
     * with `eager` the bounded pair result is materialized and the
     * internal candidate cache released. */
   private def queryPairsImpl(spark: SparkSession, dir: String,
@@ -823,8 +759,7 @@ object DedupIndex {
     * [[delete]] committed between the original run and the replay masks
     * its docs out of the replayed score too (a takedown outranks replay
     * stability; a consumer that must see the original pairs verbatim
-    * reads a persisted log — [[ingestStream]]'s once-only pair log is
-    * exactly that shield).
+    * persists them).
     * The batch's signatures are computed ONCE and shared by the scoring
     * and the append write. Default ids allocate one past the batch
     * pool's high-water mark and must not be replayed (a replay would
@@ -851,156 +786,6 @@ object DedupIndex {
       writeBatch(spark, dir, id, sigs, banded, p)
     sigs.unpersist()
     pairs
-  }
-
-  /** Streaming ingest: every micro-batch of a document stream scores
-    * against the index, logs its pairs under `dir/pairs/batch=<id>`,
-    * and lands its postings/sigs under `batchBase + id`.
-    *
-    * Replay discipline: the pair log is written ONCE — a replayed
-    * micro-batch whose log already committed (its `_SUCCESS` is
-    * present) never rewrites it, so a consumer that read the log sees
-    * the same rows forever, even if a batch-pool ingest committed
-    * between the original run and the replay (recomputing would fold
-    * that interleaved batch into the replayed score — the cross-pool
-    * "committed before" gap [[ingest]] documents). The index write
-    * replays through the usual commit check. A fully-done micro-batch
-    * (log + index both committed) skips all work.
-    *
-    * The checkpoint lives INSIDE the index by default, for the same
-    * reason [[VectorStore.appendStream]]'s does — a temp checkpoint
-    * would restart micro-batch numbering at 0 and every
-    * already-committed id would silently swallow new data. Returns the
-    * started query; one active stream per index. */
-  def ingestStream(spark: SparkSession, dir: String,
-      docStream: DataFrame, textCol: String = "text",
-      minEstJaccard: Double = 0.5, maxBucketSize: Int = 50,
-      batchBase: Long = StreamBatchBase,
-      checkpointLocation: Option[String] = None,
-      takedownIds: Option[DataFrame] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(batchBase >= StreamBatchBase && batchBase < FoldBase,
-      s"batchBase must be in [$StreamBatchBase, $FoldBase): $batchBase")
-    docStream.writeStream
-      .option("checkpointLocation",
-        checkpointLocation.getOrElse(s"$dir/_stream_checkpoint"))
-      .foreachBatch { (df: DataFrame, mb: Long) =>
-        val id = batchBase + mb
-        val fs = fsOf(spark, dir)
-        val st = readState(fs, dir)
-        val logDone =
-          fs.exists(new Path(s"$dir/pairs/batch=$id/_SUCCESS"))
-        val batchDone = alreadyIngested(st, id)
-        if (!logDone || !batchDone) {
-          val p = readParams(spark, dir)
-          val (sigs, banded) =
-            sigAndBand(guardTakedowns(fs, dir, df, takedownIds), textCol, p)
-          if (!logDone) {
-            val pairs = queryPairsImpl(spark, dir, fs, st, p, sigs,
-              banded, minEstJaccard, maxBucketSize, probeCap = 4096,
-              beforeBatchId = id, eager = true)
-            pairs.write.mode("overwrite")
-              .parquet(s"$dir/pairs/batch=$id")
-          }
-          if (!batchDone) writeBatch(spark, dir, id, sigs, banded, p)
-          sigs.unpersist()
-        }
-        ()
-      }
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-  }
-
-  /** Takedown at the PAIR LOG — the last place a taken-down doc_id
-    * could outlive its deletion in this store: [[ingestStream]]'s
-    * `pairs/batch=<id>` logs are a derived artifact holding
-    * (batch_doc, index_doc) id pairs, written ONCE by contract so a
-    * consumer re-reading a log sees the same rows forever — which is
-    * exactly why a tombstone (masking future queries only) cannot
-    * reach them. This verb rewrites exactly the affected committed
-    * logs with every row referencing a taken-down id dropped; the
-    * written-once contract is deliberately broken FOR THE AFFECTED
-    * LOGS ONLY (compliance trumps replay stability — a consumer
-    * re-reading an affected log sees fewer rows, never different
-    * ones). Untouched logs stay byte-identical; re-delivery no-ops
-    * (the detection scan finds nothing left to drop).
-    *
-    * Crash safety: a rewrite that dies mid-overwrite leaves the log
-    * without its `_SUCCESS` — [[ingestStream]]'s replay then treats
-    * the log as unwritten and RECOMPUTES it, and the recomputation is
-    * masked by the ids' tombstones (land the [[delete]] first, as
-    * [[Takedown.execute]] does), so the taken-down ids cannot
-    * resurface through that window either. That ordering is ENFORCED,
-    * not just documented: before any rewrite, every id that actually
-    * hits an affected log must be covered by a live tombstone, or the
-    * verb refuses loudly — a standalone caller that skipped the
-    * [[delete]] would otherwise reopen the crash-resurrection window
-    * silently. (Re-delivered purges find nothing to drop and return
-    * before the check; after a covering compact the ids are physically
-    * gone, so a fresh purge either finds no hits or needs a fresh —
-    * harmless — tombstone first.)
-    *
-    * Scale shape: ONE basePath scan of the committed logs finds the
-    * affected set (two hash semi-joins — batch_doc and index_doc
-    * sides; ids broadcast); only affected directories are re-read and
-    * rewritten. Output: (batch, n_dropped), one row per affected log. */
-  def purgePairLogs(spark: SparkSession, dir: String,
-      ids: DataFrame): DataFrame = {
-    import spark.implicits._
-    val fs = fsOf(spark, dir)
-    val idDf = ids.select(col("doc_id").cast("long").as("doc_id"))
-    val root = new Path(s"$dir/pairs")
-    val batches =
-      if (!fs.exists(root)) Seq.empty[Long]
-      else fs.listStatus(root).iterator.map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-        .map(_.stripPrefix("batch=").toLong)
-        .filter(b => fs.exists(new Path(s"$dir/pairs/batch=$b/_SUCCESS")))
-        .toSeq.sorted
-    if (batches.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("batch", "n_dropped")
-    val all = spark.read.option("basePath", s"$dir/pairs")
-      .parquet(batches.map(b => s"$dir/pairs/batch=$b"): _*)
-    def hits(side: String) = all
-      .join(broadcast(idDf.withColumnRenamed("doc_id", side)),
-        Seq(side), "left_semi")
-      .select(col("batch").cast("long"))
-    val affected = hits("batch_doc").union(hits("index_doc"))
-      .distinct().collect().map(_.getLong(0)).sorted
-    if (affected.nonEmpty) {
-      // the crash-window contract: a torn rewrite's replay recomputes
-      // the log, and ONLY the ids' tombstones mask that recomputation
-      val hitIds = all.select(col("batch_doc").as("doc_id"))
-        .union(all.select(col("index_doc").as("doc_id")))
-        .join(broadcast(idDf), Seq("doc_id"), "left_semi").distinct()
-      val dead = deletedDocs(spark, fs, dir, readState(fs, dir))
-      val uncovered = dead.fold(hitIds)(d =>
-        hitIds.join(d, Seq("doc_id"), "left_anti"))
-        .limit(6).collect().map(_.getLong(0)).sorted
-      require(uncovered.isEmpty,
-        s"purgePairLogs at $dir: ids ${uncovered.mkString(", ")}" +
-          s"${if (uncovered.length >= 6) ", …" else ""} hit committed " +
-          "pair logs but carry no live tombstone — a crash mid-rewrite " +
-          "would let the ingest-stream replay recompute the log and " +
-          "resurrect them. Land DedupIndex.delete(ids) first " +
-          "(Takedown.execute orders this for you).")
-    }
-    affected.toSeq.map { b =>
-      val path = s"$dir/pairs/batch=$b"
-      val log = spark.read.parquet(path)
-      val before = log.count()
-      // two sequential anti-joins == drop rows matching EITHER side
-      // (an OR-condition anti-join would plan a nested loop)
-      val kept = log
-        .join(broadcast(idDf.withColumnRenamed("doc_id", "batch_doc")),
-          Seq("batch_doc"), "left_anti")
-        .join(broadcast(idDf.withColumnRenamed("doc_id", "index_doc")),
-          Seq("index_doc"), "left_anti")
-        .select(log.columns.map(col): _*)
-        .localCheckpoint(true) // the write overwrites the path read
-      kept.write.mode("overwrite").parquet(path)
-      (b, before - kept.count())
-    }.toDF("batch", "n_dropped")
   }
 
   /** The store's QA sweep — [[Assembly.validateShards]]' discipline for
@@ -1110,7 +895,7 @@ object DedupIndex {
         fs.delete(new Path(s"${sigsRoot(dir)}/batch=$b"), true)
       }
     // tombstones the fold APPLIED (doc_ids physically dropped) are
-    // spent — the marker's per-pool delete coverage keeps their replays
+    // spent — the marker's delete coverage keeps their replays
     // no-ops after the dirs are gone. Sweep ONLY ids from the caller's
     // committed-at-capture snapshot, never a fresh filesystem probe: a
     // crashed delete's torn dir must survive the compact (its replay
@@ -1192,9 +977,7 @@ object DedupIndex {
       math.max(st.fold.map(_.coveredStream).getOrElse(-1L),
         unfolded.filter(isStreamId).lastOption.getOrElse(-1L)),
       math.max(st.fold.map(_.coveredDelete).getOrElse(-1L),
-        st.deletes.filter(_ < StreamBatchBase).lastOption.getOrElse(-1L)),
-      math.max(st.fold.map(_.coveredDeleteStream).getOrElse(-1L),
-        st.deletes.filter(isStreamId).lastOption.getOrElse(-1L)))
+        st.deletes.lastOption.getOrElse(-1L)))
     // the physical half of the tombstone contract: the fold is written
     // with every tombstoned doc's postings AND signatures dropped —
     // after the marker lands the serving path needs no anti-join for
@@ -1221,7 +1004,7 @@ object DedupIndex {
     // already GC'd, the coverage could not be reconstructed.
     Commit.replace(fs, new Path(s"$dir/_folded"),
       s"${newFold.id} ${newFold.coveredBatch} ${newFold.coveredStream} " +
-        s"${newFold.coveredDelete} ${newFold.coveredDeleteStream} #\n")
+        s"${newFold.coveredDelete} #\n")
     gcRetired(fs, dir, newFold, st.deletes)
   }
 }

@@ -58,48 +58,6 @@ object Multimodal {
     out
   }
 
-  /** STUB resize: a real decoder would rescale decoded image planes; the
-    * stand-in downsamples the feature vector by striding — the Spark-side
-    * contract (fixed-width in, fixed-width out, per-row) is the real
-    * shape. */
-  private[ops] def resizeStub(feature: Array[Float], outDim: Int): Array[Float] = {
-    val out = new Array[Float](outDim)
-    var i = 0
-    while (i < outDim) {
-      out(i) = feature((i.toLong * feature.length / outDim).toInt); i += 1
-    }
-    out
-  }
-
-  /** STUB frame sampling: slices `n` evenly-spaced fixed-size windows out
-    * of the payload, standing in for video frame extraction. Returns
-    * fewer windows when the payload is short. */
-  private[ops] def frameSampleStub(payload: Array[Byte], n: Int,
-      frameBytes: Int = 16): Seq[Array[Byte]] = {
-    if (payload.isEmpty) Seq.empty
-    else (0 until n).flatMap { i =>
-      val start = (i.toLong * payload.length / n).toInt
-      if (start < payload.length)
-        Some(payload.slice(start, math.min(start + frameBytes, payload.length)))
-      else None
-    }
-  }
-
-  case class FrameRow(doc_id: Long, frame_idx: Int, frame: Array[Byte])
-
-  /** Frame-sampling operator over the media table (video modality only);
-    * one output row per sampled frame. */
-  def sampleFrames(spark: SparkSession, blobs: DataFrame, n: Int = 4): Dataset[FrameRow] = {
-    import spark.implicits._
-    blobs.filter(col("modality") === "video")
-      .select(col("doc_id"), col("modality"), col("payload")).as[MediaRow]
-      .flatMap { r =>
-        frameSampleStub(r.payload, n).zipWithIndex.map { case (f, i) =>
-          FrameRow(r.doc_id, i, f)
-        }
-      }
-  }
-
   /** Partition-parallel feature extraction: the batch shape a
     * mapInPandas/Arrow UDF would use, expressed as a typed mapPartitions
     * (one decoder init per partition, streaming over rows). Image rows

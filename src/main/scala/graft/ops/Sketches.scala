@@ -48,8 +48,8 @@ object Sketches {
   }
 
   /** Scalar twin of [[portableHash]] (bit-identical; spec-pinned) — for
-    * per-row state updates in streaming processors where the hash runs
-    * outside Catalyst. */
+    * the `HllSketch` aggregator's per-row buffer updates (Udafs.scala),
+    * where the hash runs outside Catalyst. */
   def portableHashLong(key: Long): Long = {
     var h = java.lang.Math.floorMod(key, P) * 2654435761L % P
     h = (h + (h >> 13)) * 972663749L % P
@@ -57,7 +57,7 @@ object Sketches {
     h
   }
 
-  /** Scalar HLL pieces shared with the streaming processor: bucket index,
+  /** Scalar HLL pieces of the `HllSketch` aggregator: bucket index,
     * rho, and the estimate from a 64-entry max-rho table — each the exact
     * scalar twin of the Column/SQL formulation. */
   private[graft] def bucketOf(h: Long): Int = (h % M).toInt
@@ -212,14 +212,6 @@ object Sketches {
         pmod(portableHash(pmod(key, lit(P)) + lit(j * CmsRowSalt)),
           lit(width.toLong)).as("pos"))
     }: _*)
-
-  /** Scalar twin of the CMS coordinate derivation (bit-identical to the
-    * Column path for every long key; spec-pinned) — for per-row state
-    * updates in streaming processors where the hash runs outside
-    * Catalyst. */
-  def cmsPosOf(key: Long, j: Int, width: Int): Int =
-    (portableHashLong(
-      java.lang.Math.floorMod(key, P) + j * CmsRowSalt) % width).toInt
 
   /** Count-min sketch table over long keys: `depth` x `width` counters
     * as rows (j, pos, cnt). The table is the classic mergeable frequency

@@ -19,12 +19,9 @@ import org.apache.spark.sql.functions._
   * loudly), and every ingest verb of both stores reads it automatically
   * through [[guard]], unioning it with whatever the caller still passes.
   *
-  * Freshness: batch verbs read the registry at call time; the STREAMING
-  * verbs delegate per micro-batch (foreachBatch calls the batch verb),
-  * so a registration lands on the NEXT micro-batch without a stream
-  * restart — stricter than the caller-supplied list, whose file-source
-  * snapshot is frozen when the stream starts. A takedown that must bite
-  * immediately on ALREADY-stored rows is still a `delete`.
+  * Freshness: every ingest verb reads the registry at call time. A
+  * takedown that must bite immediately on ALREADY-stored rows is still
+  * a `delete`.
   *
   * Scale shape: the registry is a compliance list (thousands to low
   * millions), not a corpus — it is a driver-side sealed file by design,
@@ -337,9 +334,6 @@ object Takedown {
     *
     *  - [[DedupIndex.delete]] + [[VectorStore.delete]]: tombstones mask
     *    the ids from serving immediately; the next compact reclaims.
-    *  - [[DedupIndex.purgePairLogs]]: the ingest-stream pair logs — a
-    *    written-once derived artifact tombstones cannot reach — drop
-    *    every row referencing the ids.
     *  - [[Assembly.purgeDocs]]: the committed training shards holding
     *    the ids are rewritten with them dropped and the next manifest
     *    version commits — the exported data itself forgets.
@@ -350,9 +344,10 @@ object Takedown {
     *    needed in any ingest path.
     *
     * Re-delivery safe end to end: tombstoning the same ids again is a
-    * fresh (harmless) tombstone batch, the purge and the registration
-    * no-op. `ids` is one single-column frame; pass the column name it
-    * uses — each store receives it renamed to its own key. Returns one
+    * fresh (harmless) tombstone batch, the shard purge and the
+    * registration no-op. `ids` is one single-column frame; pass the
+    * column name it uses — each store receives it renamed to its own
+    * key. Returns one
     * audit table (store, action, n) — `n` is the distinct id count for
     * tombstone/registry actions and the number of document rows
     * physically dropped for the shard purge. */
@@ -369,15 +364,8 @@ object Takedown {
       .empty[(String, String, Long)]
     dedupIndexDir.foreach { d =>
       val docIds = distinctIds.select(col(idCol).as("doc_id"))
-      // tombstone FIRST: purgePairLogs' crash window replays a log
-      // recomputation, which these tombstones then mask
       DedupIndex.delete(spark, d, docIds)
       audit += (("dedup_index", "tombstoned", n))
-      val droppedPairs = Option(
-        DedupIndex.purgePairLogs(spark, d, docIds)
-          .agg(sum(col("n_dropped"))).head.get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      audit += (("dedup_index", "pair_logs_purged", droppedPairs))
       if (standing) {
         Takedown.register(spark, d, docIds, "doc_id")
         audit += (("dedup_index", "registered", n))

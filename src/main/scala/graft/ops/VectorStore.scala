@@ -64,8 +64,7 @@ import org.apache.spark.sql.functions._
   * copy+delete (s3a). The one remaining object-store caveat is the
   * exclusive-create id claim for DEFAULT-id batch appends/deletes
   * (`create(overwrite=false)` is not atomic on s3a): there, pass
-  * explicit batch ids (the stream discipline) or serialize batch-mode
-  * ingest.
+  * explicit batch ids or serialize batch-mode ingest.
   *
   * Everything is deterministic and bit-identical to [[Pq.ivfPqTopK]]
   * with the same parameters: same k-means init/merge order, same
@@ -77,9 +76,11 @@ import org.apache.spark.sql.functions._
   */
 object VectorStore {
 
-  /** Stream micro-batch ids map to `StreamBatchBase + id`; batch-mode
-    * appends allocate below the base — the two id pools can never
-    * collide, so a batch-mode append can't shadow a future micro-batch. */
+  /** Explicit ids at or above this base form the STREAM pool — the range
+    * a producer that numbers its own deliveries (a stream's micro-batch
+    * ids, offset by the base) passes to [[append]]; default ids allocate
+    * below the base, so the two pools can never collide and a default
+    * append can't shadow a future explicit-id delivery. */
   val StreamBatchBase = 1000000L
 
   // ---- store plumbing ---------------------------------------------------
@@ -492,11 +493,6 @@ object VectorStore {
     gcGenerations(fs, dir, keep = None)
     rmTree(fs, s"$dir/_current")
     rmTree(fs, s"$dir/_current.tmp")
-    // stale stream checkpoints would make a restarted ingest/takedown
-    // stream silently skip its source offsets as already-processed —
-    // on a REBUILT store nothing has been processed
-    rmTree(fs, s"$dir/_stream_checkpoint")
-    rmTree(fs, s"$dir/_delete_stream_checkpoint")
     rmTree(fs, s"$dir/deletes")
     rmTree(fs, s"$dir/codes_compact")
     rmTree(fs, s"$dir/codes_old")
@@ -581,12 +577,8 @@ object VectorStore {
     * both stores share): the store's PERSISTED `_takedowns` registry
     * ([[Takedown.register]] — read automatically by every ingest verb,
     * surviving rebuilds and pointer flips), plus whatever `takedownIds`
-    * list the caller still passes. In [[appendStream]] the caller's
-    * list is resolved when the STREAM STARTS (file-based sources
-    * snapshot their listing into the plan), but the REGISTRY is re-read
-    * per micro-batch — a registration bites on the next micro-batch
-    * without a restart. A takedown that must bite immediately on
-    * already-stored rows is a [[delete]]. */
+    * list the caller still passes. A takedown that must bite
+    * immediately on already-stored rows is a [[delete]]. */
   private def guardTakedowns(fs: FileSystem, dir: String,
       emb: DataFrame, takedownIds: Option[DataFrame]): DataFrame =
     Takedown.guard(emb, "vec_id", takedownIds, fs, dir)
@@ -609,74 +601,6 @@ object VectorStore {
       .parquet(s"$root/batch=$id")
     requireMarker(fs, s"$root/batch=$id")
   }
-
-  /** Streaming ingest: every micro-batch of an embedding stream appends
-    * through [[append]] under `StreamBatchBase + id` — a
-    * crashed-and-replayed micro-batch whose directory committed skips,
-    * one that half-wrote is overwritten; either way no rows are lost or
-    * doubled (the foreachBatch sink discipline the streaming suite pins
-    * for parquet). The stream's checkpoint lives INSIDE the store by
-    * default (`dir/_stream_checkpoint`): idempotence depends on a
-    * restarted stream resuming the same micro-batch numbering, and a
-    * temp checkpoint would restart ids at 0 — making every already-
-    * committed id silently swallow the restarted stream's NEW data.
-    * Returns the started query; one active stream per store. */
-  /** The one foreachBatch sink both streaming verbs share: checkpoint
-    * inside the store (a temp checkpoint would restart micro-batch
-    * numbering at 0, and every already-committed id would silently
-    * swallow the restarted stream's new data), ids offset into the
-    * stream pool, delegate per micro-batch. */
-  private def streamSink(dir: String, stream: DataFrame,
-      checkpointName: String, batchBase: Long,
-      checkpointLocation: Option[String])(verb: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // below the base a stream id could collide with a batch-mode id and
-    // silently drop the micro-batch — the separation the base exists for
-    require(batchBase >= StreamBatchBase,
-      s"batchBase must be >= $StreamBatchBase: $batchBase")
-    stream.writeStream
-      .option("checkpointLocation",
-        checkpointLocation.getOrElse(s"$dir/$checkpointName"))
-      .foreachBatch { (df: DataFrame, id: Long) => verb(df, batchBase + id) }
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-  }
-
-  def appendStream(spark: SparkSession, dir: String,
-      embStream: DataFrame,
-      batchBase: Long = StreamBatchBase,
-      checkpointLocation: Option[String] = None,
-      takedownIds: Option[DataFrame] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    streamSink(dir, embStream, "_stream_checkpoint", batchBase,
-      checkpointLocation) { (df, id) =>
-      append(spark, dir, df, batchId = Some(id), takedownIds = takedownIds)
-    }
-
-  /** Streaming takedowns — [[delete]]'s foreachBatch twin, mirroring
-    * [[appendStream]]'s discipline: every micro-batch of a vec_id
-    * stream lands as one idempotent tombstone directory under
-    * `batchBase + microBatchId` in the deletes pool. Replay idempotence
-    * is the same commit-based check as batch-mode delete — and unlike
-    * [[DedupIndex]]'s coverage scalar, the ledger here carries the
-    * EXPLICIT id set of folded tombstones, so a micro-batch that
-    * crashed before any parquet landed simply replays (it was never
-    * committed, and a covering compact cannot mark it applied — no
-    * landing witness is needed). A stream running ACROSS a compact is
-    * safe in both swap modes: rename-mode teardown sweeps only the
-    * captured tombstone dirs, and pointer-mode migrates late arrivals
-    * into the new generation before GC — only retrain (which rebuilds
-    * the live set from the lake) still requires the stream stopped, the
-    * documented offline contract. The checkpoint lives inside the store
-    * (`_delete_stream_checkpoint`) for the usual id-numbering reason.
-    * Returns the started query; one active delete stream per store. */
-  def deleteStream(spark: SparkSession, dir: String, idStream: DataFrame,
-      batchBase: Long = StreamBatchBase,
-      checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    streamSink(dir, idStream, "_delete_stream_checkpoint", batchBase,
-      checkpointLocation) { (df, id) =>
-      delete(spark, dir, df, batchId = Some(id))
-    }
 
   /** Tombstone deletes — the third lifecycle verb (a dedup or takedown
     * pass removes vectors from retrieval without rewriting code files):
@@ -701,15 +625,15 @@ object VectorStore {
     * the two sweeps cannot cover, because no sweep can see a commit
     * that has not happened yet. The fence re-lands the ids into the
     * generation now serving and loops until the pointer is stable
-    * across a landing. Explicit ids (the [[deleteStream]] pool)
-    * re-land under the SAME id — idempotent against a migration that
-    * did copy them; default ids claim a FRESH id in the new root (the
-    * old claim belonged to the dead root's pool — reusing its number
+    * across a landing. Explicit ids re-land under the SAME id —
+    * idempotent against a migration that did copy them; default ids
+    * claim a FRESH id in the new root (the old claim belonged to the
+    * dead root's pool — reusing its number
     * could collide with an id independently claimed there since the
     * flip, and a duplicate mask is harmless where a collision would
-    * silently drop the takedown). With the fence, a delete — batch
-    * mode or a deleteStream micro-batch — can no longer be lost to a
-    * concurrent pointer compact, whatever the interleaving. */
+    * silently drop the takedown). With the fence, a delete — default
+    * or explicit id — can no longer be lost to a concurrent pointer
+    * compact, whatever the interleaving. */
   def delete(spark: SparkSession, dir: String, ids: DataFrame,
       batchId: Option[Long] = None): Unit = {
     require(batchId.forall(_ > 0L), "delete batch ids start at 1")
@@ -756,8 +680,8 @@ object VectorStore {
     * component, so a code batch committed by a concurrent appender
     * between the capture and the swap would be lost with or without the
     * ledger discipline — run it from the single maintenance process,
-    * like [[retrain]]. TOMBSTONES are deliberately safer (a
-    * [[deleteStream]] naturally runs 24/7 across nightly compacts): the
+    * like [[retrain]]. TOMBSTONES are deliberately safer (a takedown
+    * must not wait for the maintenance window): the
     * teardown sweeps only the CAPTURED tombstone dirs in rename mode
     * and migrates late arrivals into the new generation in pointer mode
     * — TWICE: once before the flip (so the new generation masks them
@@ -848,12 +772,11 @@ object VectorStore {
       rmTree(fs, s"$dir/codes_old")
       // sweep ONLY the captured tombstone dirs, never the whole root: a
       // tombstone that landed between the capture and this teardown (a
-      // 24/7 deleteStream's micro-batch) was NOT folded — its rows are
-      // still present in the compacted layout, so the surviving dir
-      // keeps masking them correctly and the NEXT compact applies it.
-      // An rmTree of the root would destroy it un-ledgered while the
-      // stream checkpoint already marked the micro-batch done — the
-      // takedown would be silently lost forever.
+      // concurrent delete) was NOT folded — its rows are still present
+      // in the compacted layout, so the surviving dir keeps masking
+      // them correctly and the NEXT compact applies it. An rmTree of
+      // the root would destroy it un-ledgered after its delete call
+      // already returned — the takedown would be silently lost forever.
       delIds.foreach(id => rmTree(fs, s"$delRoot/batch=$id"))
       rmTree(fs, s"$codesRoot.claims")
       rmTree(fs, s"$delRoot.claims")
@@ -887,7 +810,7 @@ object VectorStore {
       writeLedger(fs, nextCodes, codeIds - 0L)
       writeLedger(fs, nextDel, delIds - 0L)
       // tombstones that landed in the OLD generation between the capture
-      // and here (a 24/7 deleteStream's micro-batch) were not folded —
+      // and here (a concurrent delete) were not folded —
       // migrate them BEFORE the flip, so the instant the new generation
       // serves it already masks them: without this pass, a taken-down
       // vec_id would transiently resurface between the flip and a
@@ -899,8 +822,8 @@ object VectorStore {
       // second migration pass AFTER the flip, before the old generation
       // is GC'd: a tombstone that committed in the old root between the
       // pre-flip pass and the flip itself would otherwise be destroyed
-      // while the stream checkpoint says it was delivered. (A delete
-      // micro-batch in flight RIGHT NOW that commits after this sweep
+      // after its delete call already returned. (A delete in flight
+      // RIGHT NOW that commits after this sweep
       // is caught on ITS side — delete's generation fence re-resolves
       // the pointer after landing and re-lands into this generation.)
       migrateLateTombstones(fs, delRoot, nextDel, delIds)
@@ -917,7 +840,7 @@ object VectorStore {
 
   /** Copy every COMMITTED tombstone batch under `oldRoot` that is not in
     * `captured` (the compact's fold input set) into `newRoot` — the
-    * late arrivals of a delete stream running across a pointer-mode
+    * late arrivals of deletes running concurrently with a pointer-mode
     * compact. Copied dirs carry their `_SUCCESS`, so they mask
     * immediately in the new generation and the next compact folds them.
     * Idempotent: a batch already present under `newRoot` is skipped, so

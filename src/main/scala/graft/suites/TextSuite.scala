@@ -489,11 +489,11 @@ object TextSuite {
         dedupIndexDir = Some(di0), vectorStoreDir = Some(vd0),
         shardStore = Some(graft.ops.Takedown.ShardStore(sh0, "doc_id",
           "tok")))
-      require(audit.count() == 7L,
-        "takedown audit: expected 7 actions across the three stores " +
-          "(tombstone + pair-log purge + registration at the dedup " +
-          "index; tombstone + registration at the vector store; purge " +
-          "+ registration at the shard store)")
+      require(audit.count() == 6L,
+        "takedown audit: expected 6 actions across the three stores " +
+          "(tombstone + registration at the dedup index; tombstone + " +
+          "registration at the vector store; purge + registration at " +
+          "the shard store)")
       // masked serving, audited BEFORE the physical reclaim
       val dPre = auditSet(dedupServe(di0), "dedup-index serving")
       val vPre = auditSet(vecServe(vd0), "vector-store serving")

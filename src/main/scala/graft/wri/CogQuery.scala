@@ -387,7 +387,9 @@ object CogQuery {
     *     is the writer's own memory shape; the combine stage above is
     *     where the parallelism lives.
     *
-    * Returns one stat row: (out, width, height, tiles, n_valid, n_nan). */
+    * The output is written before the verb returns; the result is one
+    * driver-local stat row (out, width, height, tiles, n_valid, n_nan),
+    * so acting on it again never rewrites the file. */
   def mapAlgebra(spark: SparkSession,
       inputs: Seq[(String, String, Double)],
       outPath: String,
@@ -505,7 +507,8 @@ object CogQuery {
     * to ONE assembler task that mosaics the raster and writes the COG
     * (+ pyramid) — the same one-raster-in-memory unit as a [[Cog.run]]
     * encode task; the upstream per-tile stage is where the parallelism
-    * lives. Returns the one-row stat frame. */
+    * lives. Runs the writer job here, once, and returns its stat row as
+    * a driver-local frame. */
   private def assembleDerivedCog(spark: SparkSession,
       combined: org.apache.spark.rdd.RDD[(Int, Array[Float])],
       w: Int, h: Int, tw: Int, th: Int, outPath: String,
@@ -516,7 +519,7 @@ object CogQuery {
     import spark.implicits._
     val (ww, hh, ttw, tth) = (w, h, tw, th)
     val (oPath, oGeo, oOpts) = (outPath, geo, opts)
-    spark.createDataset(combined.repartition(1).mapPartitions { it =>
+    combined.repartition(1).mapPartitions { it =>
       val conf = confBc.value.value
       val px = new Array[Float](ww * hh)
       val across = (ww + ttw - 1) / ttw
@@ -544,7 +547,7 @@ object CogQuery {
         k += 1
       }
       Iterator.single(MapAlgebraStat(oPath, ww, hh, tiles, nValid, nNan))
-    }).toDF()
+    }.collect().toSeq.toDF()
   }
 
   /** How many DECODED source tiles one resample task keeps at once —
@@ -597,7 +600,9 @@ object CogQuery {
     *     each other;
     *  3. ONE writer task ([[assembleDerivedCog]]).
     *
-    * Returns one stat row: (out, width, height, tiles, n_valid, n_nan). */
+    * The output is written before the verb returns; the result is one
+    * driver-local stat row (out, width, height, tiles, n_valid, n_nan),
+    * so acting on it again never rewrites the file. */
   def resampleToGrid(spark: SparkSession,
       srcPath: String, refPath: String, outPath: String,
       opts: TiffWriter.CogOptions = TiffWriter.CogOptions(),

@@ -388,9 +388,9 @@ class AssemblySpec extends SparkSpec {
     assert(again == rows.map(_.toSeq).toSet)
   }
 
-  test("appendShardsStream lands every micro-batch exactly once and " +
-      "matches the batch-append twin; a committed replay no-ops") {
-    val out = java.nio.file.Files.createTempDirectory("shstream").toString
+  test("appendShardsExactlyOnce: a committed replay no-ops, " +
+      "half-overlap is refused") {
+    val out = java.nio.file.Files.createTempDirectory("shexactly").toString
     val a = tokDocs.filter(col("doc_id") % 3 === 0)
       .select(col("doc_id"), col("tok"))
     val b = tokDocs.filter(col("doc_id") % 3 === 1)
@@ -398,23 +398,14 @@ class AssemblySpec extends SparkSpec {
     val c = tokDocs.filter(col("doc_id") % 3 === 2)
       .select(col("doc_id"), col("tok"))
     Assembly.writeShards(a, "doc_id", "tok", 2000L, 42L, out)
-    val src = java.nio.file.Files.createTempDirectory("shsrc").toString
-    b.write.mode("append").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    def start() = Assembly.appendShardsStream(
-      spark.readStream.schema(schema).parquet(src), "doc_id", "tok", out)
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
-    // restart over NEW source files: checkpoint must resume, not replay
-    c.write.mode("append").parquet(src)
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    val streamed = Assembly.readManifest(spark, out).collect()
-    assert(streamed.map(_.getLong(1)).sum == tokDocs.count(),
-      "every doc must land exactly once across write + two stream runs")
-    // a committed batch re-delivered out-of-band no-ops (the stream's
-    // replay path), while a half-overlapping batch is refused
-    val before = streamed.map(_.toSeq).toSet
+    Assembly.appendShardsExactlyOnce(b, "doc_id", "tok", out)
+    Assembly.appendShardsExactlyOnce(c, "doc_id", "tok", out)
+    val landed = Assembly.readManifest(spark, out).collect()
+    assert(landed.map(_.getLong(1)).sum == tokDocs.count(),
+      "every doc must land exactly once across write + two appends")
+    // a committed batch re-delivered no-ops, while a half-overlapping
+    // batch is refused
+    val before = landed.map(_.toSeq).toSet
     Assembly.appendShardsExactlyOnce(b, "doc_id", "tok", out)
     assert(Assembly.readManifest(spark, out).collect().map(_.toSeq).toSet
       == before, "committed replay must be a no-op")

@@ -223,40 +223,11 @@ class DedupIndexSpec extends SparkSpec {
       docs.limit(1).select($"doc_id" + 777000L as "doc_id", $"text")) == 6L)
   }
 
-  test("streaming ingest equals its batch twin and logs replay-stable " +
-      "pairs per micro-batch") {
-    val d = tmp("didx_stream")
-    DedupIndex.write(spark, docs, d)
-    val src = tmp("didx_stream_src")
-    batch.write.mode("overwrite").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    val q = DedupIndex.ingestStream(spark, d,
-      spark.readStream.schema(schema).parquet(src))
-    try q.processAllAvailable() finally q.stop()
-    val logged = new java.io.File(s"$d/pairs").listFiles()
-      .map(_.getName).filter(_.startsWith("batch=")).toSeq
-    assert(logged.nonEmpty, "no pair log written")
-    val streamed = logged.map(b => pairSet(
-      spark.read.parquet(s"$d/pairs/$b"))).reduce(_ ++ _)
-    val twinDir = tmp("didx_twin")
-    DedupIndex.write(spark, docs, twinDir)
-    val twin = pairSet(DedupIndex.queryPairs(spark, twinDir, batch))
-    assert(streamed == twin, s"${streamed.size} vs ${twin.size} pairs")
-    // the streamed batch landed under the stream id pool and committed
-    assert(new java.io.File(
-      s"$d/postings/batch=${DedupIndex.StreamBatchBase}/_SUCCESS").exists())
-  }
-
   test("stream and batch id pools never collide: after a streaming " +
       "ingest, default ids still allocate from the batch pool") {
     val d = tmp("didx_pools")
     DedupIndex.write(spark, docs.filter($"doc_id" % 2 === 0), d)
-    val src = tmp("didx_pools_src")
-    batch.write.mode("overwrite").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    val q = DedupIndex.ingestStream(spark, d,
-      spark.readStream.schema(schema).parquet(src))
-    try q.processAllAvailable() finally q.stop()
+    DedupIndex.ingest(spark, d, batch, batchId = DedupIndex.StreamBatchBase)
     assert(new java.io.File(
       s"$d/postings/batch=${DedupIndex.StreamBatchBase}/_SUCCESS").exists())
     // the stream commit must NOT advance the batch pool: a default
@@ -272,12 +243,8 @@ class DedupIndexSpec extends SparkSpec {
       "ingests as already done (per-pool fold coverage)") {
     val d = tmp("didx_poolfold")
     DedupIndex.write(spark, docs.filter($"doc_id" % 3 === 0), d)
-    val src = tmp("didx_poolfold_src")
-    docs.filter($"doc_id" % 3 === 1).write.mode("overwrite").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    val q = DedupIndex.ingestStream(spark, d,
-      spark.readStream.schema(schema).parquet(src))
-    try q.processAllAvailable() finally q.stop()
+    DedupIndex.ingest(spark, d, docs.filter($"doc_id" % 3 === 1),
+      batchId = DedupIndex.StreamBatchBase)
     DedupIndex.compact(spark, d) // folds batch 0 + stream 1000000
     // a fresh batch-pool ingest (id 1: above the batch pool's coverage
     // of 0, numerically below the folded stream id) must still WRITE —
@@ -329,95 +296,12 @@ class DedupIndexSpec extends SparkSpec {
       "no-op compact advanced the fold marker")
   }
 
-  test("a committed micro-batch pair log survives a checkpoint replay " +
-      "unchanged, even after an interleaved batch-pool ingest") {
-    val d = tmp("didx_logstable")
-    DedupIndex.write(spark, docs, d)
-    val src = tmp("didx_logstable_src")
-    batch.write.mode("overwrite").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    def run() = {
-      val q = DedupIndex.ingestStream(spark, d,
-        spark.readStream.schema(schema).parquet(src))
-      try q.processAllAvailable() finally q.stop()
-    }
-    run()
-    val logPath = s"$d/pairs/batch=${DedupIndex.StreamBatchBase}"
-    val original = pairSet(spark.read.parquet(logPath))
-    // an interleaved nightly ingest lands near-dups of the stream batch
-    // under a batch-pool id — numerically below the stream id, so a
-    // RECOMPUTED replay score would wrongly include it
-    DedupIndex.ingest(spark, d,
-      batch.select($"doc_id" + 500000L as "doc_id", $"text"), batchId = 1L)
-    // force a replay of micro-batch 0: drop its commit record (the
-    // offsets survive), restart the stream over the same checkpoint
-    val commit = new java.io.File(s"$d/_stream_checkpoint/commits/0")
-    assert(commit.exists()); commit.delete()
-    // the local ChecksumFs keeps a .crc sidecar; a leftover one blocks
-    // the replayed commit's rename
-    new java.io.File(s"$d/_stream_checkpoint/commits/.0.crc").delete()
-    run()
-    val replayed = pairSet(spark.read.parquet(logPath))
-    assert(replayed == original,
-      s"replay rewrote a committed pair log: ${replayed.size} vs " +
-        s"${original.size} rows (consumers would see doubled pairs)")
-  }
-
   test("an empty index answers empty with the right schema") {
     val d = tmp("didx_empty")
     DedupIndex.write(spark, docs.limit(0), d)
     val out = DedupIndex.queryPairs(spark, d, batch)
     assert(out.columns.toSeq ==
       Seq("batch_doc", "index_doc", "est_jaccard") && out.isEmpty)
-  }
-
-  test("purgePairLogs: rows referencing taken-down ids leave the " +
-      "committed pair logs — only affected logs rewritten, untouched " +
-      "ones byte-identical, re-delivery no-ops") {
-    val d = tmp("didx_pairpurge")
-    DedupIndex.write(spark, docs, d)
-    // fabricate two committed ingest-stream pair logs: batch=5 holds
-    // pairs referencing the victim ids on BOTH sides, batch=6 is clean
-    Seq((50001L, 3L, 0.9), (50002L, 10L, 0.8), (3L, 50003L, 0.7),
-        (50004L, 17L, 0.6))
-      .toDF("batch_doc", "index_doc", "est_jaccard")
-      .coalesce(1).write.parquet(s"$d/pairs/batch=5")
-    Seq((60001L, 10L, 0.9), (60002L, 24L, 0.8))
-      .toDF("batch_doc", "index_doc", "est_jaccard")
-      .coalesce(1).write.parquet(s"$d/pairs/batch=6")
-    def files(b: Long): Map[String, Long] =
-      new java.io.File(s"$d/pairs/batch=$b").listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> f.lastModified()).toMap
-    val clean6 = files(6L)
-    val victims = Seq(3L).toDF("doc_id")
-    // the enforced ordering: purging ids that still hit a committed log
-    // WITHOUT a live tombstone refuses loudly (a crash mid-rewrite
-    // would let the replay recomputation resurrect them)
-    val e = intercept[IllegalArgumentException] {
-      DedupIndex.purgePairLogs(spark, d, victims)
-    }
-    assert(e.getMessage.contains("tombstone") &&
-      e.getMessage.contains("3"),
-      s"the refusal must name the uncovered ids and the fix: " +
-        s"${e.getMessage}")
-    assert(files(6L) == clean6 && files(5L).nonEmpty,
-      "a refused purge must leave every log untouched")
-    DedupIndex.delete(spark, d, victims)
-    val audit = DedupIndex.purgePairLogs(spark, d, victims)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(audit == Map(5L -> 2L),
-      s"expected exactly log 5 to drop its two victim rows: $audit")
-    val left5 = spark.read.parquet(s"$d/pairs/batch=5")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(left5 == Set((50002L, 10L), (50004L, 17L)),
-      s"wrong survivors in the rewritten log: $left5")
-    assert(files(6L) == clean6,
-      "an untouched pair log was rewritten")
-    // re-delivery: nothing left to drop, nothing rewritten
-    val now5 = files(5L)
-    assert(DedupIndex.purgePairLogs(spark, d, victims).isEmpty)
-    assert(files(5L) == now5, "re-delivered purge rewrote a clean log")
   }
 
   test("the index can forget its ENTIRE corpus: delete-all masks to " +
@@ -658,72 +542,6 @@ class DedupIndexSpec extends SparkSpec {
     assert(pairSet(DedupIndex.queryPairs(spark, d, batch)) ==
       pairSet(DedupIndex.queryPairs(spark, twinDir, batch)),
       "replayed takedown did not mask")
-  }
-
-  test("deleteStream equals its batch twin, replays as a no-op, and " +
-      "lands under the delete-stream pool") {
-    val d = tmp("didx_delstream")
-    DedupIndex.write(spark, docs, d)
-    val src = tmp("didx_delstream_src")
-    takedownIds.write.mode("overwrite").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    def run() = {
-      val q = DedupIndex.deleteStream(spark, d,
-        spark.readStream.schema(schema).parquet(src))
-      try q.processAllAvailable() finally q.stop()
-    }
-    run()
-    val streamDir =
-      s"$d/deletes/batch=${DedupIndex.StreamBatchBase}"
-    assert(new java.io.File(s"$streamDir/_SUCCESS").exists(),
-      "stream tombstone did not land in the delete-stream pool")
-    val masked = pairSet(DedupIndex.queryPairs(spark, d, batch))
-    val twinDir = tmp("didx_delstream_twin")
-    DedupIndex.write(spark, docs, twinDir)
-    DedupIndex.delete(spark, twinDir, takedownIds, batchId = 0L)
-    assert(masked == pairSet(DedupIndex.queryPairs(spark, twinDir, batch)),
-      "stream takedown drifted from its batch twin")
-    // checkpoint replay of the committed micro-batch is a no-op
-    val dataBefore = spark.read.parquet(streamDir).count()
-    val commit = new java.io.File(s"$d/_delete_stream_checkpoint/commits/0")
-    assert(commit.exists()); commit.delete()
-    new java.io.File(s"$d/_delete_stream_checkpoint/commits/.0.crc").delete()
-    run()
-    assert(spark.read.parquet(streamDir).count() == dataBefore &&
-      pairSet(DedupIndex.queryPairs(spark, d, batch)) == masked,
-      "replayed delete micro-batch was not a no-op")
-  }
-
-  test("fold coverage for tombstones is PER POOL: a folded stream " +
-      "takedown does not mark batch-pool tombstone ids as applied") {
-    val d = tmp("didx_delpools")
-    DedupIndex.write(spark, docs, d)
-    val src = tmp("didx_delpools_src")
-    docs.filter($"doc_id" % 11 === 5).select($"doc_id")
-      .write.mode("overwrite").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    val q = DedupIndex.deleteStream(spark, d,
-      spark.readStream.schema(schema).parquet(src))
-    try q.processAllAvailable() finally q.stop()
-    DedupIndex.compact(spark, d) // applies stream tombstone 1000000
-    assert(Option(new java.io.File(s"$d/deletes").listFiles())
-      .forall(_.forall(!_.getName.startsWith("batch="))),
-      "compact did not retire the stream tombstone")
-    // a batch-pool explicit delete (id 0, numerically under the folded
-    // stream id) must LAND — a single-scalar coverage would see
-    // 0 <= 1000000 with no surviving dir and silently no-op it
-    DedupIndex.delete(spark, d, takedownIds, batchId = 0L)
-    assert(new java.io.File(s"$d/deletes/batch=0/_SUCCESS").exists(),
-      "batch-pool takedown was swallowed by the folded stream coverage")
-    val twinDir = tmp("didx_delpools_twin")
-    DedupIndex.write(spark,
-      docs.filter($"doc_id" % 7 =!= 3 && $"doc_id" % 11 =!= 5), twinDir)
-    assert(pairSet(DedupIndex.queryPairs(spark, d, batch)) ==
-      pairSet(DedupIndex.queryPairs(spark, twinDir, batch)))
-    // and the batch-pool default allocator is untouched by stream ids:
-    // next default takedown continues at 1
-    assert(DedupIndex.delete(spark, d,
-      docs.limit(1).select($"doc_id")) == 1L)
   }
 
   test("the standing takedown guard blocks a doc_id re-delivered AFTER " +

@@ -30,20 +30,6 @@ class MultimodalSpec extends SparkSpec {
     assert(c1 == c2) // partitioning must not change per-row results
   }
 
-  test("frame sampling yields bounded evenly-spaced windows per video") {
-    val frames = Multimodal.sampleFrames(spark,
-      Multimodal.withBlob(docs.limit(30)), n = 4).collect()
-    assert(frames.nonEmpty)
-    val byDoc = frames.groupBy(_.doc_id)
-    byDoc.values.foreach { fs =>
-      assert(fs.length <= 4)
-      assert(fs.map(_.frame_idx).sorted.sameElements(fs.indices))
-      assert(fs.forall(f => f.frame.nonEmpty && f.frame.length <= 16))
-    }
-    // only video modality sampled (doc_id % 3 == 2)
-    assert(byDoc.keySet.forall(_ % 3 == 2))
-  }
-
   test("real PNG decode round-trips the synthetic fixture exactly") {
     val png = Multimodal.syntheticImageBytes(6L, 16, 16)
     // a real PNG container: magic bytes + decodable by javax.imageio
@@ -90,12 +76,6 @@ class MultimodalSpec extends SparkSpec {
         blobs.withColumn("modality", lit("audio")), dim = 4)
       .collect().head.feature
     assert(!feat.sameElements(stub))
-  }
-
-  test("resize stub produces fixed-width strided output") {
-    val in = Array.tabulate(16)(_.toFloat)
-    val out = Multimodal.resizeStub(in, 4)
-    assert(out.toSeq == Seq(0f, 4f, 8f, 12f))
   }
 
   test("feature vector has the requested fixed width") {

@@ -68,6 +68,14 @@ class SketchesSpec extends SparkSpec {
     assert(hs.getLong(2) >= 995L, "avalanche rounds keep collisions rare")
   }
 
+  test("scalar portable hash is the bit-exact twin of the Column version") {
+    val ks = Seq(0L, 1L, 42L, 999999L, 1000000007L, Long.MaxValue, -17L)
+    val viaCol = ks.toDF("k")
+      .select(Sketches.portableHash($"k").as("h"))
+      .collect().map(_.getLong(0)).toSeq
+    assert(viaCol == ks.map(Sketches.portableHashLong))
+  }
+
   // key stream with a known skewed frequency profile: key i appears i times
   private def cmsKeys = (1L to 50L).flatMap(i => Seq.fill(i.toInt)(i))
     .toDF("k")
@@ -97,6 +105,12 @@ class SketchesSpec extends SparkSpec {
     assert(merged == whole, "counter sums must merge exactly")
   }
 
+  /** Scalar replay of the CMS coordinate derivation: row j hashes the
+    * key (pre-reduced mod P) plus j times the row salt, mod width. */
+  private def cmsPosOf(key: Long, j: Int, width: Int): Int =
+    (Sketches.portableHashLong(java.lang.Math.floorMod(key, 1000000007L) +
+      j * 782000003L) % width).toInt
+
   test("cmsPosOf is the bit-exact scalar twin of the Column coordinates") {
     val keys = Seq(0L, 1L, 42L, 999999L, 1000000006L, 1000000007L,
       Long.MaxValue, -17L)
@@ -104,7 +118,7 @@ class SketchesSpec extends SparkSpec {
       .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     val expected = keys
       .flatMap(k => (0 until 4).map(j =>
-        (j, Sketches.cmsPosOf(k, j, 128).toLong)))
+        (j, cmsPosOf(k, j, 128).toLong)))
       .groupBy(identity).map { case (c, v) => c -> v.size.toLong }
     assert(table == expected)
   }

@@ -75,41 +75,6 @@ class VectorStoreSpec extends SparkSpec {
     }
   }
 
-  test("streaming ingest: micro-batches append with frozen codes and " +
-      "batch replay is a no-op") {
-    // store trained on even ids; the odd half arrives as a file stream
-    val d = java.nio.file.Files.createTempDirectory("vecstore_stream")
-      .toString
-    VectorStore.write(spark, emb.filter($"vec_id" % 2 === 0), d)
-    val streamSrc = java.nio.file.Files
-      .createTempDirectory("emb_stream").toString
-    emb.filter($"vec_id" % 2 === 1)
-      .write.mode("overwrite").parquet(streamSrc)
-    val schema = spark.read.parquet(streamSrc).schema
-    val stream = spark.readStream.schema(schema).parquet(streamSrc)
-    val q = VectorStore.appendStream(spark, d, stream)
-    try q.processAllAvailable() finally q.stop()
-    val codes = spark.read.parquet(s"$d/codes")
-    assert(codes.count() == emb.count(),
-      "streamed half did not fully land in the store")
-    // the streamed rows carry exactly the codes a batch append gives
-    val twin = java.nio.file.Files.createTempDirectory("vecstore_twin")
-      .toString
-    VectorStore.write(spark, emb.filter($"vec_id" % 2 === 0), twin)
-    VectorStore.append(spark, twin, emb.filter($"vec_id" % 2 === 1))
-    def codeMap(dir: String) = spark.read.parquet(s"$dir/codes")
-      .collect().map(r => r.getLong(r.fieldIndex("vec_id")) ->
-        (r.getSeq[Int](r.fieldIndex("codes")).toList,
-          r.getAs[Int]("cell"))).toMap
-    assert(codeMap(d) == codeMap(twin))
-    // replaying a committed batch id is a no-op, not a duplication
-    val n = codes.count()
-    VectorStore.append(spark, d, emb.filter($"vec_id" % 2 === 1),
-      batchId = Some(1000000L))
-    assert(spark.read.parquet(s"$d/codes").count() == n,
-      "batch replay duplicated rows")
-  }
-
   test("tombstones mask deleted ids from queries; delete replay is a " +
       "no-op; other rankings are untouched") {
     val d = java.nio.file.Files.createTempDirectory("vecstore_del").toString
@@ -195,7 +160,7 @@ class VectorStoreSpec extends SparkSpec {
     // partition inference types `batch` from the dir names (int here)
     assert(codes.select($"batch".cast("long")).distinct().collect()
       .map(_.getLong(0)).toSeq == Seq(0L))
-    // the deletes ROOT survives rename-mode compact (a late deleteStream
+    // the deletes ROOT survives rename-mode compact (a late concurrent
     // tombstone needs a stable root — the captured-only teardown), but
     // every captured tombstone dir is swept
     assert(Option(new java.io.File(s"$d/deletes").listFiles())
@@ -270,34 +235,6 @@ class VectorStoreSpec extends SparkSpec {
       .filter(_.startsWith("batch=")).toSeq
     assert(batches.sorted == Seq("batch=0", "batch=1", "batch=2"),
       s"unexpected batch layout: $batches")
-  }
-
-  test("appendStream restart resumes micro-batch numbering from its " +
-      "checkpoint — restarted streams' NEW data is never skipped") {
-    val d = java.nio.file.Files.createTempDirectory("vecstore_ckpt")
-      .toString
-    VectorStore.write(spark, emb.filter($"vec_id" % 4 === 0), d)
-    val src = java.nio.file.Files.createTempDirectory("emb_ckpt_src")
-      .toString
-    emb.filter($"vec_id" % 4 === 1).write.mode("append").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    def startStream() = VectorStore.appendStream(spark, d,
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1000").parquet(src))
-    val q1 = startStream()
-    try q1.processAllAvailable() finally q1.stop()
-    val n1 = spark.read.parquet(s"$d/codes").count()
-    assert(n1 == emb.filter($"vec_id" % 4 <= 1).count())
-    // a SECOND run of the stream over new source files: without a real
-    // checkpoint its micro-batches would renumber from 0 and collide
-    // with the committed StreamBatchBase+0, silently dropping the rows
-    emb.filter($"vec_id" % 4 === 2)
-      .write.mode("append").parquet(src)
-    val q2 = startStream()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(spark.read.parquet(s"$d/codes").count() ==
-      emb.filter($"vec_id" % 4 <= 2).count(),
-      "restarted stream's new micro-batch was swallowed by a stale id")
   }
 
   test("a 1-row batch query is bit-identical to the single-query path") {
@@ -922,41 +859,6 @@ class VectorStoreSpec extends SparkSpec {
         "have finished first")
   }
 
-  test("deleteStream equals its batch twin and a checkpoint replay of " +
-      "a committed micro-batch is a no-op") {
-    val d = java.nio.file.Files.createTempDirectory("vecstore_delstream")
-      .toString
-    VectorStore.write(spark, emb, d)
-    val src = java.nio.file.Files.createTempDirectory("vds_src").toString
-    emb.filter($"vec_id" % 10 === 3).select($"vec_id")
-      .write.mode("overwrite").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    def run() = {
-      val q = VectorStore.deleteStream(spark, d,
-        spark.readStream.schema(schema).parquet(src))
-      try q.processAllAvailable() finally q.stop()
-    }
-    run()
-    val streamDir = s"$d/deletes/batch=${VectorStore.StreamBatchBase}"
-    assert(new java.io.File(s"$streamDir/_SUCCESS").exists(),
-      "stream tombstone did not land in the stream pool")
-    val masked = topk(d)
-    val twin = java.nio.file.Files.createTempDirectory("vds_twin").toString
-    VectorStore.write(spark, emb, twin)
-    VectorStore.delete(spark, twin,
-      emb.filter($"vec_id" % 10 === 3).select($"vec_id"))
-    assert(masked == topk(twin),
-      "stream takedown drifted from its batch twin")
-    // checkpoint replay of the committed micro-batch no-ops
-    val commit = new java.io.File(s"$d/_delete_stream_checkpoint/commits/0")
-    assert(commit.exists()); commit.delete()
-    new java.io.File(s"$d/_delete_stream_checkpoint/commits/.0.crc").delete()
-    val dataBefore = spark.read.parquet(streamDir).count()
-    run()
-    assert(spark.read.parquet(streamDir).count() == dataBefore &&
-      topk(d) == masked, "replayed delete micro-batch was not a no-op")
-  }
-
   test("the standing takedown guard blocks a vec_id re-delivered AFTER " +
       "the reclaiming compact, on append AND on a full rebuild") {
     val takedown = emb.filter($"vec_id" % 10 === 3).select($"vec_id")
@@ -1198,7 +1100,7 @@ class VectorStoreSpec extends SparkSpec {
       "rename-mode teardown sweeps only captured dirs, and the pointer-" +
       "mode migration carries late arrivals into the new generation") {
     // rename mode: the deletes root survives compact, so a takedown
-    // landing right after (the 24/7 deleteStream shape) has a stable
+    // landing right after (a concurrent delete) has a stable
     // root and keeps masking until the next compact applies it
     val d = java.nio.file.Files.createTempDirectory("vecstore_latets")
       .toString

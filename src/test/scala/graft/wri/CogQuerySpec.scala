@@ -520,6 +520,54 @@ class CogQuerySpec extends SparkSpec {
       bytesOf(s"$root/http_rs_local.tif"))
   }
 
+  test("a derived COG is written once: mapAlgebra and resampleToGrid " +
+      "write their output before returning, and a second action on the " +
+      "result neither rewrites the file nor runs a Spark job") {
+    val sc = spark.sparkContext
+    /** Jobs started under a fresh job group while `body` runs. A fence
+      * job afterwards makes every earlier job start visible to the
+      * status tracker (the listener bus delivers events in order). */
+    def jobsDuring(group: String)(body: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group.fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (sc.statusTracker.getJobIdsForGroup(s"$group.fence").isEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    def writtenOnce(name: String)(
+        verb: String => org.apache.spark.sql.DataFrame): Unit = {
+      val out = s"$root/$name"
+      val path = java.nio.file.Paths.get(out)
+      val res = verb(out)
+      assert(java.nio.file.Files.exists(path),
+        s"$name: the verb returned before writing its output")
+      assert(res.count() == 1L)
+      // a sentinel mtime: any rewrite would stamp the current time
+      val stamp = java.nio.file.attribute.FileTime.fromMillis(86400000L)
+      java.nio.file.Files.setLastModifiedTime(path, stamp)
+      val bytes = java.nio.file.Files.readAllBytes(path).toSeq
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      val jobs = jobsDuring(s"derived-again-$name") { rows = res.collect() }
+      assert(rows.map(_.getAs[String]("out")).toSeq == Seq(out))
+      assert(jobs == 0, s"$name: the second action ran $jobs Spark jobs")
+      assert(java.nio.file.Files.getLastModifiedTime(path) == stamp &&
+        java.nio.file.Files.readAllBytes(path).toSeq == bytes,
+        s"$name: the second action rewrote the output")
+    }
+    val opts = TiffWriter.CogOptions(blockSize = 32)
+    writtenOnce("once_map_algebra.tif") { out =>
+      CogQuery.mapAlgebra(spark, inputs.zipWithIndex.map { case ((_, n), i) =>
+        (n, s"$cogDir/$n", (i + 1).toDouble) }, out, opts)
+    }
+    writtenOnce("once_resample.tif") { out =>
+      CogQuery.resampleToGrid(spark, s"$cogDir/${inputs(1)._2}",
+        s"$cogDir/${inputs.head._2}", out, opts)
+    }
+  }
+
   test("resampleToGrid: identity regrid round-trips pixels exactly, a " +
       "shifted/smaller source lands NN-exact with NaN past its edge, " +
       "resample-then-combine equals combining a pre-aligned twin, and " +
