@@ -38,8 +38,8 @@ object WriSuite {
     Q("wri_meta_compact", wriMetaCompact, Some(wriMetaCompactSql))
   )
 
-  /** §2.8's built mapping as an ORACLE row — the streaming catalog
-    * refresh's micro-batch body ([[Stac.refreshBatch]]) driven
+  /** §2.8's built mapping as an ORACLE row — the catalog refresh's
+    * per-upload-batch body ([[Stac.refreshBatch]]) driven
     * deterministically: batch 0 delivers two layers, batch 1 delivers
     * a NEW layer and RE-DELIVERS an existing one from a new path (its
     * domain classification moves water -> carbon), then batch 1
@@ -47,10 +47,10 @@ object WriSuite {
     * back through [[Stac.readItems]] must show exactly the latest
     * deliveries: an append-instead-of-overwrite landing, a wrong
     * latest-wins order, or a non-idempotent replay changes a row and
-    * breaks the hash. The stream-machinery legs (real readStream +
-    * checkpoint, batch-twin byte equality, mtime no-ops) live in
-    * StacRefreshSpec; the fixture resets every run, so replays of the
-    * QUERY are deterministic too. */
+    * breaks the hash. The legs a row hash cannot see (a file-arrival
+    * stream driving refreshBatch through foreachBatch, batch-twin byte
+    * equality, mtime no-ops) live in StacRefreshSpec; the fixture
+    * resets every run, so replays of the QUERY are deterministic too. */
   /** [[Stac.compactMetaStore]] as an ORACLE row: four micro-batches at
     * compactThreshold=2, so the store folds to a latest-wins generation
     * TWICE mid-stream (inside the batch-1 and batch-3 calls) — with a

@@ -167,10 +167,9 @@ object Inventory {
 
   /** The shared tail of [[run]]/[[runOverUrls]]: resume anti-join,
     * header extraction, validation, consistent/inconsistent split.
-    * Public so callers that already HOLD a listing — e.g. the streaming
-    * catalog refresh, whose micro-batch IS a (filepath, length) set from
-    * the file-arrival source — can run stage 00 over it without a
-    * directory re-scan; `listed0` needs (filepath, length, data_type)
+    * Public so callers that already HOLD a listing — e.g.
+    * [[Stac.refreshBatch]], whose upload batch IS a (filepath, length)
+    * set — can run stage 00 over it without a directory re-scan; `listed0` needs (filepath, length, data_type)
     * with excluded rows already filtered (the [[listAndClassify]]
     * shape). */
   def runListed(spark: SparkSession, listed0: DataFrame,

@@ -37,7 +37,7 @@ object Stac {
     knbProbe(filename, knbBaseUrl, WriFs.defaultConf)
 
   /** Auth-aware HEAD probe factory — the production `hostedProbe` to
-    * hand [[run]]/[[refreshCatalog]]/[[streamingCatalogRefresh]]. The
+    * hand [[run]]/[[refreshCatalog]]/[[refreshBatch]]. The
     * session's Hadoop conf (which carries the per-host
     * [[RangeReader.AuthHeaderPrefix]] credentials) is broadcast once,
     * so the returned closure presents the credential on WHICHEVER
@@ -193,7 +193,7 @@ object Stac {
     * collected as tiny scalars). The first-row extent (P9), the domain
     * summary and the blank-filtered dimension summary all come from ONE
     * aggregation job — they are three tiny scalars over the same table,
-    * and a refresh (hence every streaming micro-batch) pays this
+    * and every refresh (hence every upload batch) pays this
     * driver-side latency per call. */
   def collectionJson(consistent: DataFrame, itemIds: Seq[String]): String = {
     val mapper = new ObjectMapper()
@@ -779,8 +779,14 @@ object Stac {
     * a speculative duplicate write of the same bytes can never expose a
     * torn document to a concurrent catalog reader. A side-effecting
     * classify-and-write single pass would misreport a retried task's
-    * items as "unchanged" and tear under speculation. Only the audit
-    * (one row per item) and the orphan id listing are driver-sized.
+    * items as "unchanged" and tear under speculation. Phase 1's rows
+    * (one per item, with its document) are collected, so only catalog
+    * metadata is ever driver-sized.
+    *
+    * `consistent` is evaluated twice, once for the items and once for
+    * the collection summary, as in [[run]]; a caller whose table is
+    * costly to recompute hands in a local one (as [[refreshBatch]]
+    * does).
     *
     * Safety rail: an EMPTY `consistent` table refuses up front —
     * upstream outages read as zero rows, and a zero-row refresh with
@@ -795,30 +801,11 @@ object Stac {
     * and that regression must read differently in the audit than an
     * ordinary metadata rewrite. Pass the SAME hostedProbe on refresh
     * as at build time. */
-  def refreshCatalog(spark: SparkSession, consistentIn: DataFrame,
+  def refreshCatalog(spark: SparkSession, consistent: DataFrame,
       stacRoot: String, hostedProbe: String => Boolean = _ => false,
       pruneOrphans: Boolean = false): DataFrame = {
     import spark.implicits._
-    assertRequired(consistentIn)
-    // ONE materialization of the metadata table: this verb reads it
-    // three times (the emptiness gate, the item build, the collection
-    // summary), and the streaming caller hands in a
-    // window-over-the-accumulated-store plan that would otherwise
-    // recompute the store read + latest-wins shuffle per action
-    // (measured: 3 identical window jobs per micro-batch). Catalog
-    // metadata is bounded — O(layers) rows, the size class the audit
-    // collect below already assumes — so the checkpoint is small; its
-    // blocks are released before returning (bench/guardrail hygiene).
-    // ...unless the input is already a driver-materialized LocalRelation
-    // (hand-built metadata tables in fixtures/CI): re-evaluating one is
-    // free, and the checkpoint would only add a job.
-    val alreadyLocal = consistentIn.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-    val consistent =
-      if (alreadyLocal) consistentIn else consistentIn.localCheckpoint(true)
-    val checkpoints = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    if (!alreadyLocal) checkpoints += consistent
-    try {
+    assertRequired(consistent)
     val itemsDir = s"$stacRoot/collections/$collectionId/items"
     val conf = spark.sparkContext.hadoopConfiguration
     val confBc = WriFs.confBroadcast(spark)
@@ -837,33 +824,27 @@ object Stac {
         "rewritten(is_hosted)"
       else "rewritten"
     // phase 1: distributed read-only classification (retry-exact), each
-    // task byte-comparing against the live document
+    // task byte-comparing against the live document; its (item_id,
+    // action, json) rows are collected once — one row per item, the
+    // same size class as the listing below — and drive the emptiness
+    // gate, the delta writes, the foreign-delete repair and the audit
     val plan = buildItems(spark, consistent, hostedProbe)
-      .select(col("item_id"), col("json"))
+      .select(col("item_id"), col("json")).as[(String, String)]
       .mapPartitions { rows =>
         val c = confBc.value.value
         val mapper = new ObjectMapper()
-        rows.map { r =>
-          val (id, json) = (r.getString(0), r.getString(1))
+        rows.map { case (id, json) =>
           val p = s"$dir/$id.json"
           val action =
             if (!WriFs.exists(p, c)) "written"
             else classify(mapper, WriFs.readString(p, c), json)
           (id, action, json)
         }
-      }.toDF("item_id", "action", "json").localCheckpoint(true)
-    checkpoints += plan
-    // id→action, collected once (from the checkpoint the line above
-    // already materialized): drives the EMPTINESS GATE below, the orphan
-    // sweep, AND the returned audit (ids and one-word actions — bounded
-    // catalog metadata, the same size class as the listing below)
-    val actions = plan.select(col("item_id"), col("action"))
-      .as[(String, String)].collect()
-    // the gate rides the collect instead of its own isEmpty job: items
-    // are built 1:1 from metadata rows (buildItems is a mapPartitions),
-    // so zero planned items ⟺ an empty metadata table — and nothing has
-    // been written yet (phase 1 is read-only classification)
-    require(actions.nonEmpty,
+      }.collect()
+    // items are built 1:1 from metadata rows (buildItems is a
+    // mapPartitions), so zero planned items ⟺ an empty metadata table —
+    // and nothing has been written yet (phase 1 is read-only)
+    require(plan.nonEmpty,
       s"refreshCatalog at $stacRoot: the metadata table is EMPTY — an " +
         "upstream outage reads as zero layers, and refreshing a " +
         "published catalog to zero items (pruning everything) is never " +
@@ -871,19 +852,22 @@ object Stac {
     // created only past the gate: a refused refresh leaves no new path
     WriFs.mkdirs(itemsDir, conf)
     // phase 2: apply the delta, atomic replace per document (idempotent
-    // and torn-read-free under retries/speculation)
-    plan.filter(col("action") =!= "unchanged")
-      .foreachPartition {
-        (rows: Iterator[org.apache.spark.sql.Row]) =>
+    // and torn-read-free under retries/speculation); an all-unchanged
+    // refresh runs no write job
+    val changed = plan.collect {
+      case (id, action, json) if action != "unchanged" => (id, json)
+    }
+    if (changed.nonEmpty)
+      spark.sparkContext.parallelize(changed.toSeq,
+          math.min(changed.length, spark.sparkContext.defaultParallelism))
+        .foreachPartition { rows =>
           val c = confBc.value.value
-          rows.foreach { r =>
-            val p = new org.apache.hadoop.fs.Path(
-              s"$dir/${r.getString(0)}.json")
-            WriFs.atomicWriteString(WriFs.fs(p.toString, c), p,
-              r.getString(2))
+          rows.foreach { case (id, json) =>
+            val p = new org.apache.hadoop.fs.Path(s"$dir/$id.json")
+            WriFs.atomicWriteString(WriFs.fs(p.toString, c), p, json)
           }
-      }
-    val current = actions.map(_._1).toSet
+        }
+    val current = plan.map(_._1).toSet
     // ONE post-write listing serves the foreign-delete repair, the
     // orphan sweep, and the collection links — a second/third LIST of
     // a 10k-item directory is what an object store bills for
@@ -897,12 +881,9 @@ object Stac {
         s"current item document(s) vanished out-of-band during the " +
         s"refresh (${missing.toSeq.sorted.take(5).mkString(", ")}" +
         s"${if (missing.size > 5) ", ..." else ""}) — rewriting them")
-      plan.filter(col("item_id").isInCollection(missing.toSeq))
-        .select(col("item_id"), col("json"))
-        .as[(String, String)].collect().foreach { case (id, json) =>
-          val p = new org.apache.hadoop.fs.Path(s"$itemsDir/$id.json")
-          WriFs.atomicWriteString(WriFs.fs(p.toString, conf), p, json)
-        }
+      plan.filter(r => missing(r._1)).foreach { case (id, _, json) =>
+        atomicDoc(s"$itemsDir/$id.json", json, conf)
+      }
     }
     val orphanRows = listedIds.filterNot(current)
       .map { id =>
@@ -921,23 +902,8 @@ object Stac {
     atomicDoc(s"$stacRoot/collections/$collectionId/collection.json",
       collectionJson(consistent, ids), conf)
     atomicDoc(s"$stacRoot/catalog.json", catalogJson, conf)
-    // a local audit: it reads no checkpoint, so both can be released
-    (actions.toSeq ++ orphanRows).toDF("item_id", "action")
-    } finally checkpoints.foreach(releaseCheckpoint)
-  }
-
-  /** Unpersist the blocks `df`'s `localCheckpoint` holds, found by
-    * walking THIS DataFrame's own RDD lineage to its first persisted
-    * ancestor — a global persistent-RDD-set diff would also capture
-    * (and unpersist) anything another thread persisted concurrently. */
-  private def releaseCheckpoint(df: DataFrame): Unit = {
-    def persisted(r: org.apache.spark.rdd.RDD[_])
-        : Option[org.apache.spark.rdd.RDD[_]] =
-      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        Some(r)
-      else r.dependencies.iterator.map(d => persisted(d.rdd))
-        .collectFirst { case Some(x) => x }
-    persisted(df.rdd).foreach(_.unpersist(blocking = false))
+    (plan.toSeq.map(r => (r._1, r._2)) ++ orphanRows)
+      .toDF("item_id", "action")
   }
 
   /** Full stage 02: items + collection + catalog under stacRoot. */
@@ -967,85 +933,35 @@ object Stac {
     WriFs.atomicWriteString(WriFs.fs(path, conf),
       new org.apache.hadoop.fs.Path(path), content)
 
-  /** The reference's operational loop — "rerun 02b after uploads to
-    * refresh hosting status" (`scripts/02b_make_stac_all.R:28-31`) — as
-    * the FILE-ARRIVAL-TRIGGERED stream SURVEY §2.8 maps it onto:
-    * `readStream(binaryFile)` over the data directory, and each
-    * micro-batch of newly arrived rasters runs stage 00 over exactly
-    * those files, lands their metadata in an accumulating store, and
-    * replays [[refreshCatalog]] over the accumulated table. The
-    * operator stops rerunning 02b by hand; uploads become catalog
-    * updates.
+  /** One upload batch of the reference's operational loop — "rerun 02b
+    * after uploads to refresh hosting status"
+    * (`scripts/02b_make_stac_all.R:28-31`): stage 00 over exactly the
+    * newly arrived rasters, their metadata landed in an accumulating
+    * store, and [[refreshCatalog]] replayed over the accumulated table.
+    * `batch` carries (path, length) rows for the arrivals; any delivery
+    * loop (a `foreachBatch` over a file-arrival stream, a queue
+    * consumer, an upload webhook) calls this once per batch.
     *
     * Composition, not new machinery — each piece is the already-oracled
     * batch verb:
     *
-    *  - the micro-batch inventory is [[Inventory.runListed]] (the same
-    *    classify -> exclude -> header-read -> validate pipeline; only
-    *    CONSISTENT rows enter the metadata store);
-    *  - the metadata store is one parquet dir per micro-batch
-    *    (`metaDir/batch=<id>`, written with OVERWRITE — a replayed
-    *    micro-batch after a crash rewrites the same directory with the
-    *    same rows, the foreachBatch idempotent-sink discipline);
-    *  - a RE-DELIVERED layer (same `cog_filename` arriving again from a
-    *    new path — re-uploads land as new files) resolves LATEST-WINS:
-    *    the highest batch id's row feeds the refresh, so the catalog
-    *    tracks the newest delivery exactly like a hand rerun of 02b
-    *    over the post-upload tree;
-    *  - the catalog commit is [[refreshCatalog]] itself (delta
-    *    classification, atomic replaces, is_hosted-flip surfacing) with
-    *    `pruneOrphans = false` ALWAYS: a streaming metadata store only
-    *    ever accumulates — absence from one micro-batch is not deletion
-    *    evidence, so orphan pruning stays the batch verb's decision.
+    *  - the inventory is [[Inventory.runListed]]; only CONSISTENT rows
+    *    enter the metadata store;
+    *  - the store is one parquet dir per batch (`metaDir/batch=<id>`,
+    *    written with OVERWRITE — replaying a batch id rewrites the same
+    *    directory with the same rows, and the refresh then changes no
+    *    document: the replay spec and the wri_stream_refresh oracle both
+    *    pin it);
+    *  - a RE-DELIVERED layer (same `cog_filename` from a new path)
+    *    resolves LATEST-WINS: the highest batch id's row feeds the
+    *    refresh, as a hand rerun of 02b over the post-upload tree would;
+    *  - the catalog commit is [[refreshCatalog]] with
+    *    `pruneOrphans = false` ALWAYS: the store only accumulates, so
+    *    absence from one batch is not deletion evidence.
     *
-    * Returns the started query; the caller owns its lifecycle
-    * (`processAllAvailable`/`awaitTermination`/`stop`). At 100 TB the
-    * shape holds: each micro-batch costs O(new files) header reads
-    * fanned across executors, the store grows by metadata rows only,
-    * and the refresh rewrites only changed documents. The O(catalog)
-    * tail is the delta classification's one read per current document
-    * and the collection summary aggregate, measured in SCALE.md's slope
-    * table per 200-upload batch as the catalog grows to 1000 items. */
-  def streamingCatalogRefresh(spark: SparkSession, dataDir: String,
-      metaDir: String, stacRoot: String, checkpointDir: String,
-      hostedProbe: String => Boolean = _ => false,
-      compactThreshold: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // the binaryFile source's FIXED schema, stated explicitly — a
-    // streaming file source refuses to infer
-    val binarySchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("path",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("modificationTime",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("length",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("content",
-        org.apache.spark.sql.types.BinaryType)))
-    val stream = spark.readStream.format("binaryFile")
-      .schema(binarySchema)
-      .option("pathGlobFilter", "*.tif")
-      .option("recursiveFileLookup", "true")
-      .load(dataDir)
-      // path + length only: column pruning keeps `content` out of the
-      // plan — stage 00 is header-economy reads, never whole rasters
-      .select(col("path"), col("length"))
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        refreshBatch(batch, batchId, metaDir, stacRoot, hostedProbe,
-          compactThreshold)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[streamingCatalogRefresh]] — public because it
-    * IS the composable unit: a caller with its own stream (a queue
-    * consumer, an upload webhook) drives this body per delivery batch
-    * and gets the identical landing/latest-wins/refresh semantics;
-    * replaying a batch id is a byte no-op (the replay spec and the
-    * wri_stream_refresh oracle both pin it). `batch` carries (path,
-    * length) rows for the newly arrived rasters. */
+    * The batch's consistent rows and the latest-wins winners are each
+    * collected once (one row per layer), so no action recomputes
+    * them and no block is cached. */
   def refreshBatch(batch: DataFrame, batchId: Long,
       metaDir: String, stacRoot: String,
       hostedProbe: String => Boolean,
@@ -1057,40 +973,44 @@ object Stac {
       .select(col("filepath"), col("length"),
         Classify.dataType(col("filepath")).as("data_type"))
       .filter(col("data_type") =!= "exclude")
-    // cached across the emptiness probe and the landing write — the
-    // inventory stage reads every batch file's header, and recomputing
-    // it for the second action would pay that I/O twice per micro-batch
-    val consistent = Inventory.runListed(spark, listed, None).consistent
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // idempotent landing: the batch's rows live under their OWN dir,
-      // rewritten whole on replay — appends would double-count a
-      // replayed micro-batch. An all-inconsistent (or all-excluded)
-      // batch lands nothing: an empty parquet dir would poison the
-      // accumulated read (no footer to infer from), and absence is the
-      // honest record.
-      if (!consistent.isEmpty)
-        consistent.write.mode("overwrite")
-          .parquet(s"$metaDir/batch=$batchId")
-    } finally consistent.unpersist()
+    // the header scan runs once: its rows land from the driver
+    val (landed, consistent) = collected(
+      Inventory.runListed(spark, listed, None).consistent)
+    // idempotent landing: the batch's rows live under their OWN dir,
+    // rewritten whole on replay — appends would double-count a
+    // replayed batch. An all-inconsistent (or all-excluded) batch lands
+    // nothing: an empty parquet dir would poison the accumulated read
+    // (no footer to infer from), and absence is the honest record.
+    if (landed.nonEmpty)
+      consistent.coalesce(1).write.mode("overwrite")
+        .parquet(s"$metaDir/batch=$batchId")
     val conf = spark.sparkContext.hadoopConfiguration
-    // the store stays BOUNDED over the stream's life: once the number
-    // of per-batch partitions reaches the threshold, fold them (plus
-    // any previous fold) into one latest-wins generation — without
-    // this, micro-batch N reads N partitions and the refresh cost
-    // grows with the total uploads EVER, not the catalog
+    // the store stays BOUNDED over the loop's life: once the number of
+    // per-batch partitions reaches the threshold, fold them (plus any
+    // previous fold) into one latest-wins generation — without this,
+    // batch N reads N partitions and the refresh cost grows with the
+    // total uploads EVER, not the catalog
     if (compactThreshold > 0 &&
         WriFs.listNames(metaDir, conf)
           .count(_.startsWith("batch=")) >= compactThreshold)
       compactMetaStore(spark, metaDir)
     if (WriFs.listNames(metaDir, conf).exists(_.startsWith("batch=")) ||
         compactedGens(metaDir, conf).nonEmpty) {
-      val latest = latestWins(accumulatedMeta(spark, metaDir, conf))
-        .drop("batch")
+      val (_, latest) = collected(latestWins(accumulatedMeta(spark,
+        metaDir, conf)).drop("batch"))
       refreshCatalog(spark, latest, stacRoot, hostedProbe,
         pruneOrphans = false)
       ()
     }
+  }
+
+  /** `df` evaluated once: its rows, and a driver-local frame over
+    * them that any number of later actions read without a recompute. */
+  private def collected(df: DataFrame)
+      : (Array[org.apache.spark.sql.Row], DataFrame) = {
+    val rows = df.collect()
+    (rows, df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), df.schema))
   }
 
   /** The compacted generations under `metaDir/compacted`, as
@@ -1115,7 +1035,7 @@ object Stac {
     // The store's schema is CODE-DEFINED (the landing writes
     // [[Inventory.validated]]'s layerMetaSchema projection; compaction
     // appends the winning batch id) — state it explicitly so neither
-    // read pays a footer-inference job. Measured: the per-micro-batch
+    // read pays a footer-inference job. Measured: the per-batch
     // driver latency was dominated by small non-job work, and schema
     // inference was a recurring slice of it (one distributed
     // footer-read job per spark.read.parquet per refresh). All fields
@@ -1153,8 +1073,8 @@ object Stac {
   /** Latest-wins across the accumulated store: a re-delivered
     * cog_filename's newest batch (then lexically-last path, for two
     * deliveries inside ONE batch) is the row that feeds the refresh.
-    * The `batch` column is KEPT on the winners — compaction persists
-    * it so later batches (and replays of folded ones) still order
+    * The `batch` column is KEPT on the winners — compaction writes it
+    * so later batches (and replays of folded ones) still order
     * correctly against the folded winners. */
   private def latestWins(all: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -1178,9 +1098,9 @@ object Stac {
     * the window resolves it against the generation's winners exactly as
     * it would have against the original partitions.
     *
-    * At scale this is what keeps the streaming loop O(catalog): the
+    * At scale this is what keeps the refresh loop O(catalog): the
     * store holds |layers| + |batches since last fold| rows instead of
-    * every upload ever, and each micro-batch's accumulated read opens a
+    * every upload ever, and each batch's accumulated read opens a
     * handful of files. Returns a one-row audit:
     * (gen, folded_batches, folded_gens, layers). */
   def compactMetaStore(spark: SparkSession, metaDir: String): DataFrame = {
@@ -1192,11 +1112,11 @@ object Stac {
     require(batchDirs.nonEmpty || gens.nonEmpty,
       s"compactMetaStore at $metaDir: the store is empty — nothing to " +
         "compact (land at least one batch first)")
-    val winners = latestWins(accumulatedMeta(spark, metaDir, conf))
-      .coalesce(1) // one row per layer: catalog metadata, one file
-      .localCheckpoint(true) // materialize BEFORE any source is deleted
+    // collected BEFORE any source is deleted: one row per layer
+    val (rows, winners) = collected(latestWins(accumulatedMeta(spark,
+      metaDir, conf)))
     val gen = gens.map(_._2).maxOption.getOrElse(0L) + 1
-    winners.write.mode("overwrite")
+    winners.coalesce(1).write.mode("overwrite")
       .parquet(s"$metaDir/compacted/gen-$gen")
     val fs = WriFs.fs(metaDir, conf)
     (batchDirs.map(n => s"$metaDir/$n") ++
@@ -1204,7 +1124,8 @@ object Stac {
       .foreach { p =>
         scala.util.Try(fs.delete(new org.apache.hadoop.fs.Path(p), true))
       }
-    Seq((gen, batchDirs.size.toLong, gens.size.toLong, winners.count()))
+    Seq((gen, batchDirs.size.toLong, gens.size.toLong,
+        rows.length.toLong))
       .toDF("gen", "folded_batches", "folded_gens", "layers")
   }
 }

@@ -25,6 +25,50 @@ class StacRefreshSpec extends SparkSpec {
       col("cog_filename").as("filepath"),
       col("cog_filename").as("filename"))
 
+  /** A file-arrival stream of the `.tif` files under `dir`, as the
+    * (path, length) rows [[Stac.refreshBatch]] takes. Column pruning
+    * keeps the binaryFile source's `content` out of the plan. */
+  private def arrivals(dir: String): DataFrame = {
+    import org.apache.spark.sql.types._
+    spark.readStream.format("binaryFile")
+      .schema(StructType(Seq(
+        StructField("path", StringType),
+        StructField("modificationTime", TimestampType),
+        StructField("length", LongType),
+        StructField("content", BinaryType))))
+      .option("pathGlobFilter", "*.tif")
+      .option("recursiveFileLookup", "true")
+      .load(dir)
+      .select(col("path"), col("length"))
+  }
+
+  /** Spark jobs `body` submits. Job ids are sequential, so the gap
+    * between two marker jobs counts every job started in between. */
+  private def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    def marker(): Int = {
+      val f = sc.parallelize(Seq(1), 1).countAsync()
+      f.get()
+      f.jobIds.head
+    }
+    val a = marker(); body; marker() - a - 1
+  }
+
+  /** A header-only GeoTIFF fixture at `base`/`rel`; returns its path. */
+  private def putLayer(base: String, rel: String): String = {
+    import Model.Expected
+    val p = java.nio.file.Paths.get(base, rel)
+    java.nio.file.Files.createDirectories(p.getParent)
+    TiffWriter.writeHeaderFixture(p.toString, Fixtures.W, Fixtures.H,
+      TiffIO.GeoInfo(Expected.epsg, Expected.resX, Expected.resY, gx, gy))
+    p.toString
+  }
+
+  /** (path, length) rows for `paths`, the batch [[Stac.refreshBatch]]
+    * takes. */
+  private def batchOf(paths: Seq[String]): DataFrame =
+    paths.map(p => (p, new java.io.File(p).length)).toDF("path", "length")
+
   test("refreshCatalog commits only the delta: unchanged files keep " +
       "their mtime, changed documents rewrite, orphans report (and " +
       "only prune on request), and the collection tracks the result") {
@@ -94,25 +138,21 @@ class StacRefreshSpec extends SparkSpec {
       "— two micro-batches (new layer + re-delivered layer) end equal " +
       "to the batch twin over the final tree, and a replayed batch is " +
       "a no-op") {
-    import Model.Expected
     val root = java.nio.file.Files
       .createTempDirectory("stac_stream").toString
     val dataDir = s"$root/data"
-    val validGeo = TiffIO.GeoInfo(Expected.epsg, Expected.resX,
-      Expected.resY, gx, gy)
-    def putLayer(base: String, rel: String): Unit = {
-      val p = java.nio.file.Paths.get(base, rel)
-      java.nio.file.Files.createDirectories(p.getParent)
-      TiffWriter.writeHeaderFixture(p.toString,
-        Fixtures.W, Fixtures.H, validGeo)
-    }
     // batch 1: an aggregate + an indicator (its first delivery)
     putLayer(dataDir, "air_quality/air_quality_domain_score.tif")
     putLayer(dataDir, "water/indicators/flow_recovery_v1.tif")
     val stacRoot = s"$root/stac"
     val itemsDir = s"$stacRoot/collections/${Model.collectionId}/items"
-    val q = Stac.streamingCatalogRefresh(spark, dataDir,
-      s"$root/meta", stacRoot, s"$root/ckpt")
+    // each arrival batch runs refreshBatch — the per-upload-batch unit
+    val q = arrivals(dataDir).writeStream
+      .option("checkpointLocation", s"$root/ckpt")
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        Stac.refreshBatch(batch, id, s"$root/meta", stacRoot, _ => false)
+      }
+      .start()
     try {
       q.processAllAvailable()
       assert(Stac.listItemIds(itemsDir) ==
@@ -151,11 +191,8 @@ class StacRefreshSpec extends SparkSpec {
     // replay safety: the SAME micro-batch body run twice with one batch
     // id (the post-crash foreachBatch contract) leaves store and
     // catalog byte-identical — overwrite landing + delta refresh
-    import spark.implicits._
-    val replay = Seq(
-      s"$dataDir/livelihoods/indicators/jobs_resistance_v1.tif")
-      .map(p => (p, new java.io.File(p).length))
-      .toDF("path", "length")
+    val replay = batchOf(Seq(
+      s"$dataDir/livelihoods/indicators/jobs_resistance_v1.tif"))
     Stac.refreshBatch(replay, 99L, s"$root/meta", stacRoot,
       _ => false)
     val mtimes = Stac.listItemIds(itemsDir).map(id =>
@@ -348,40 +385,76 @@ class StacRefreshSpec extends SparkSpec {
           s"refreshCatalog left ${sc.getPersistentRDDs.size - before} " +
             "persisted RDD(s) behind")
       }
+    // refreshBatch, without and then with a compaction (threshold 2:
+    // the second batch's landing makes two batch partitions and folds)
+    val data = s"$root/data"
+    Seq(
+      "water/indicators/flow_recovery_v1.tif" -> "without",
+      "air_quality/air_quality_domain_score.tif" -> "with"
+    ).zipWithIndex.foreach { case ((rel, compaction), id) =>
+      val before = sc.getPersistentRDDs.size
+      Stac.refreshBatch(batchOf(Seq(putLayer(data, rel))), id.toLong,
+        s"$root/meta", root, _ => false, 2)
+      assert(sc.getPersistentRDDs.size == before,
+        s"refreshBatch $compaction a compaction left " +
+          s"${sc.getPersistentRDDs.size - before} persisted RDD(s) behind")
+    }
+    assert(new java.io.File(s"$root/meta/compacted").list().toSeq ==
+      Seq("gen-1"), "the second batch did not compact")
+  }
+
+  test("the refresh path's Spark jobs: an all-unchanged refreshCatalog " +
+      "over a local table runs no write job, and a non-compacting " +
+      "refreshBatch runs a pinned number of jobs") {
+    val root = java.nio.file.Files
+      .createTempDirectory("stac_refresh_jobs").toString
+    val meta = consistentOf(Seq("a.tif" -> 0.0, "b.tif" -> 0.0))
+    Stac.run(spark, meta, root)
+    // the classification collect, and the collection summary's two
+    // (its aggregate's shuffle stage, then the result)
+    var audit = Array.empty[(String, String)]
+    assert(jobsDuring {
+      audit = Stac.refreshCatalog(spark, meta, root)
+        .as[(String, String)].collect()
+    } == 3)
+    assert(audit.toMap == Map("a" -> "unchanged", "b" -> "unchanged"),
+      audit.toSeq)
+    // the header scan's two (an adaptive query stage, then the collect),
+    // the landing, latest-wins' two (the window's shuffle stage, then
+    // the collect), the classification, the one changed document's
+    // write and the collection summary's two
+    val data = s"$root/data"
+    val stacRoot = s"$root/stream"
+    Stac.refreshBatch(batchOf(Seq(putLayer(data,
+      "water/indicators/flow_recovery_v1.tif"))), 0L, s"$root/meta",
+      stacRoot, _ => false)
+    assert(jobsDuring {
+      Stac.refreshBatch(batchOf(Seq(putLayer(data,
+        "air_quality/air_quality_domain_score.tif"))), 1L, s"$root/meta",
+        stacRoot, _ => false)
+    } == 9)
+    assert(Stac.listItemIds(
+      s"$stacRoot/collections/${Model.collectionId}/items") ==
+      Seq("air_quality_domain_score", "flow_recovery_v1"))
   }
 
   test("streaming refresh over an AUTHENTICATED mirror: micro-batch " +
       "header scans and hosting probes present the per-host credential " +
       "from inside foreachBatch, and the streamed hosted catalog " +
       "equals the batch twin built over the same URLs") {
-    import Model.Expected
-    import org.apache.spark.sql.types._
     val root = java.nio.file.Files
       .createTempDirectory("stac_stream_auth").toString
     val dataDir = s"$root/data"
-    val validGeo = TiffIO.GeoInfo(Expected.epsg, Expected.resX,
-      Expected.resY, gx, gy)
-    def putLayer(rel: String): Unit = {
-      val p = java.nio.file.Paths.get(dataDir, rel)
-      java.nio.file.Files.createDirectories(p.getParent)
-      TiffWriter.writeHeaderFixture(p.toString,
-        Fixtures.W, Fixtures.H, validGeo)
-    }
     val rels = Seq(
       "air_quality/air_quality_domain_score.tif",
       "water/indicators/flow_recovery_v1.tif",
       "livelihoods/indicators/jobs_resistance_v1.tif")
-    putLayer(rels.head); putLayer(rels(1))
+    putLayer(dataDir, rels.head); putLayer(dataDir, rels(1))
     // the FLAT hosted mirror the probe HEADs (production probes
     // base + cog_filename, not the delivery tree's nested layout) —
     // token-protected like the delivery mirror
     val hostedDir = s"$root/hosted"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(hostedDir))
-    rels.foreach { rel =>
-      TiffWriter.writeHeaderFixture(
-        s"$hostedDir/${rel.split('/').last}", Fixtures.W, Fixtures.H,
-        validGeo)
-    }
+    rels.foreach(rel => putLayer(hostedDir, rel.split('/').last))
     val bearer = "Authorization" -> "Bearer stream-auth-9"
     graft.wri.TestHttp.withHttpServer(dataDir,
         requireAuth = Some(bearer)) { base =>
@@ -409,18 +482,9 @@ class StacRefreshSpec extends SparkSpec {
         // composable unit — runs the identical landing/refresh body.
         // Header scans AND the hosting probe then range-read/HEAD the
         // 401-protected server from inside foreachBatch.
-        val binarySchema = StructType(Seq(
-          StructField("path", StringType),
-          StructField("modificationTime", TimestampType),
-          StructField("length", LongType),
-          StructField("content", BinaryType)))
         val probe = Stac.knbProbe(spark, s"$hostedBase/")
         val stacRoot = s"$root/stac"
-        val q = spark.readStream.format("binaryFile")
-          .schema(binarySchema)
-          .option("pathGlobFilter", "*.tif")
-          .option("recursiveFileLookup", "true")
-          .load(dataDir)
+        val q = arrivals(dataDir)
           .select(
             regexp_replace(col("path"),
               "^file:" + java.util.regex.Pattern.quote(dataDir),
@@ -438,7 +502,7 @@ class StacRefreshSpec extends SparkSpec {
           q.processAllAvailable()
           assert(Stac.listItemIds(itemsDir) ==
             Seq("air_quality_domain_score", "flow_recovery_v1"))
-          putLayer(rels(2)) // micro-batch 2
+          putLayer(dataDir, rels(2)) // micro-batch 2
           q.processAllAvailable()
           assert(Stac.listItemIds(itemsDir).size == 3)
         } finally q.stop()
@@ -512,22 +576,10 @@ class StacRefreshSpec extends SparkSpec {
       "threshold, the catalog equals the never-compacted twin " +
       "byte-for-byte, and replaying an already-FOLDED batch id is " +
       "still a no-op") {
-    import Model.Expected
-    def putLayer(base: String, rel: String): String = {
-      val p = java.nio.file.Paths.get(base, rel)
-      java.nio.file.Files.createDirectories(p.getParent)
-      TiffWriter.writeHeaderFixture(p.toString, Fixtures.W, Fixtures.H,
-        TiffIO.GeoInfo(Expected.epsg, Expected.resX, Expected.resY,
-          gx, gy))
-      p.toString
-    }
     def drive(threshold: Int): (String, String) = {
       val root = java.nio.file.Files
         .createTempDirectory(s"meta_compact_$threshold").toString
       val data = s"$root/data"
-      def batchOf(paths: Seq[String]) =
-        paths.map(p => (p, new java.io.File(p).length))
-          .toDF("path", "length")
       val stacRoot = s"$root/stac"
       // four micro-batches, one per threshold boundary, including a
       // RE-DELIVERY whose domain changes across the fold boundary —
@@ -580,9 +632,8 @@ class StacRefreshSpec extends SparkSpec {
     // replaying a FOLDED batch id (0 was folded into the generation):
     // the landing recreates batch=0, latest-wins still answers from
     // the generation's newer winners, and no document moves
-    val replay = Seq(
-      s"$rootC/data/water/indicators/flow_recovery_v1.tif")
-      .map(p => (p, new java.io.File(p).length)).toDF("path", "length")
+    val replay = batchOf(Seq(
+      s"$rootC/data/water/indicators/flow_recovery_v1.tif"))
     val mtimes = Stac.listItemIds(itemsC).map(id =>
       id -> new java.io.File(s"$itemsC/$id.json").lastModified).toMap
     Thread.sleep(1100) // local-fs mtime granularity
